@@ -4,7 +4,7 @@ algebra.
 The gate queries pin exact results on fixed corpora; these tests pin
 the *laws* the operators claim on arbitrary small inputs:
 
-- collapse (T1/T3): all three impls equal a driver-side reference fold,
+- collapse (T1/T3): both impls equal a driver-side reference fold,
   and the result is invariant under input permutation (LWW-max is
   associative + commutative, the property the map-side partial
   aggregation depends on — collapse.py module docstring).
@@ -95,7 +95,7 @@ def _py_split_drops(rows):
     return sorted(live), sorted(barrier.items())
 
 
-@pytest.mark.parametrize("impl", ["narrow", "agg", "arrow"])
+@pytest.mark.parametrize("impl", ["narrow", "arrow"])
 @settings(max_examples=8, **SETTINGS)
 @given(rows=event_lists())
 def test_collapse_equals_reference_fold(spark, impl, rows):

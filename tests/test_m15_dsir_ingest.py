@@ -17,7 +17,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from yadex_spark.streaming.dsir_ingest import DsirIngest
+from yadex_spark.streaming.fold_ingest import DsirIngest
 
 N_DOCS = 240
 B = 64

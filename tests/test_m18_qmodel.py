@@ -42,10 +42,12 @@ def test_trunc_div_matches_duckdb_integer_division():
 
 
 def test_features_carry_bias_even_for_empty_doc(spark):
-    docs = spark.createDataFrame([(1, "a b a"), (2, "")], "doc_id long, text string")
+    docs = spark.createDataFrame([(1, "a b a"), (2, ""), (3, None)],
+                                 "doc_id long, text string")
     f = {r["doc_id"]: r["feats"] for r in hashed_features(docs, dim=8).collect()}
     assert any(x["idx"] == 8 and x["cnt"] == 1 for x in f[1])
     assert [(x["idx"], x["cnt"]) for x in f[2]] == [(8, 1)]  # bias only
+    assert [(x["idx"], x["cnt"]) for x in f[3]] == [(8, 1)]  # NULL text too
 
 
 def test_training_learns_separable_corpus(corpus):

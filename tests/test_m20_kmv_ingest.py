@@ -16,7 +16,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from yadex_spark.streaming.kmv_ingest import KmvIngest
+from yadex_spark.streaming.fold_ingest import KmvIngest
 
 N_DOCS = 240
 

@@ -18,7 +18,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from yadex_spark.streaming.cms_ingest import CmsIngest
+from yadex_spark.streaming.fold_ingest import CmsIngest
 
 N_DOCS = 240
 

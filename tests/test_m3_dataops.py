@@ -92,18 +92,23 @@ def test_simhash_shape(docs):
 
 def test_simhash_pairs_banding_is_exact(docs):
     """bands=4 / max_hamming=3: pigeonhole guarantees every pair within
-    hamming 3 shares a chunk, so the band join loses nothing."""
+    hamming 3 shares a chunk, so the band join loses nothing.  bands=1
+    is one full-width 64-bit chunk (sign bit included)."""
     from yadex_spark.operators.dedup import simhash, simhash_pairs
 
     sigs = {r["doc_id"]: r["simhash"] for r in simhash(docs, bits=64).collect()}
-    want = {
-        (a, b): sum(x != y for x, y in zip(sigs[a], sigs[b]))
-        for a, b in itertools.combinations(sorted(sigs), 2)
-        if sum(x != y for x, y in zip(sigs[a], sigs[b])) <= 3
-    }
-    got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in simhash_pairs(docs).collect()}
-    assert got == want
-    assert got[(0, 3)] == 0  # exact dup
+    for bands, max_h in ((4, 3), (1, 0)):
+        want = {
+            (a, b): sum(x != y for x, y in zip(sigs[a], sigs[b]))
+            for a, b in itertools.combinations(sorted(sigs), 2)
+            if sum(x != y for x, y in zip(sigs[a], sigs[b])) <= max_h
+        }
+        got = {(r["doc_a"], r["doc_b"]): r["hamming"]
+               for r in simhash_pairs(docs, bands=bands, max_hamming=max_h).collect()}
+        assert got == want, bands
+        assert got[(0, 3)] == 0  # exact dup
+    with pytest.raises(ValueError):
+        simhash_pairs(docs, bits=128, bands=1, max_hamming=0)
 
 
 def test_near_dup_pairs_bucketed_vs_exact(spark):
@@ -1121,6 +1126,7 @@ def test_lm_bigram_score_matches_python(spark):
         (2, "a dog sat on a log"),
         (3, "gibberish zz qq xx yy"),
         (4, "word"),                      # 0 bigrams
+        (5, None),                        # NULL text: 0 bigrams
     ]
     k = 4  # force a real top-k boundary (corpus has >4 distinct bigrams)
     docs = spark.createDataFrame(rows, "doc_id long, text string")
@@ -1133,7 +1139,7 @@ def test_lm_bigram_score_matches_python(spark):
     uni = collections.Counter()
     big = collections.Counter()
     for _, t in rows:
-        ws = t.split(" ")
+        ws = t.split(" ") if t is not None else []
         uni.update(h60(w) for w in ws)
         big.update((h60(f"{a} {b}"), h60(a)) for a, b in zip(ws, ws[1:]))
     top = sorted(big.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1]))[:k]
@@ -1142,7 +1148,7 @@ def test_lm_bigram_score_matches_python(spark):
         model[h2] = max(model.get(h2, 0), 10_000 * c2 // uni[h1])
 
     for did, t in rows:
-        ws = t.split(" ")
+        ws = t.split(" ") if t is not None else []
         grams = [h60(f"{a} {b}") for a, b in zip(ws, ws[1:])]
         n = len(grams)
         hits = [model[g] for g in grams if g in model]

@@ -15,7 +15,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from yadex_spark.streaming.stats_ingest import StatsIngest
+from yadex_spark.streaming.fold_ingest import StatsIngest
 
 N_DOCS = 300
 

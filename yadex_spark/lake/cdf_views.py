@@ -4,7 +4,7 @@ The consumer-side payoff of :meth:`LakeTable.table_changes`: a
 per-group aggregate (per-source composition, token totals, ...) stays
 current at O(changed keys) per epoch instead of an O(table) rescan.
 Upserts make this harder than the additive stream counters of
-``streaming/stats_ingest.py`` (insert-only partials): an update must
+``streaming/fold_ingest.py`` (insert-only partials): an update must
 RETRACT the pre-image's contribution and add the post-image's, and a
 delete only retracts — exactly the information the feed's pre_*/post_*
 columns carry.  ``new = old + Σ(post images) − Σ(pre images)`` is the

@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yadex_spark.operators.common import spread
+from yadex_spark.operators.common import persisted, spread
 from yadex_spark.operators.dedup import words_col
 
 #: token delimiter — non-ASCII so it cannot appear in (pinned-ASCII)
@@ -92,49 +92,47 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = 10,
     # "reused AND expensive to recompute" case; measured ~3x on the
     # whole training run at sf0.1).  Iteration i then applies its i
     # cumulative replaces over the cached vocab rows only.
-    base = wf.select(_initial_syms(F.col("word")).alias("syms"), "freq").persist()
-    words = base
-
     merges: list[tuple] = []
-    for it in range(n_merges):
-        toks = F.filter(F.split("syms", DELIM * 2), lambda x: x != "")
-        sz = F.size(toks)
-        pair_rows = (
-            words.where(sz >= 2)
-            .select(
-                "freq",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(toks) - 2),
-                        lambda i: F.struct(
-                            F.get(toks, i).alias("lhs"),
-                            F.get(toks, i + 1).alias("rhs"),
-                        ),
-                    )
-                ).alias("p"),
+    with persisted(wf.select(_initial_syms(F.col("word")).alias("syms"), "freq")) as base:
+        words = base
+        for it in range(n_merges):
+            toks = F.filter(F.split("syms", DELIM * 2), lambda x: x != "")
+            sz = F.size(toks)
+            pair_rows = (
+                words.where(sz >= 2)
+                .select(
+                    "freq",
+                    F.explode(
+                        F.transform(
+                            F.sequence(F.lit(0), F.size(toks) - 2),
+                            lambda i: F.struct(
+                                F.get(toks, i).alias("lhs"),
+                                F.get(toks, i + 1).alias("rhs"),
+                            ),
+                        )
+                    ).alias("p"),
+                )
             )
-        )
-        best = (
-            pair_rows.groupBy("p.lhs", "p.rhs")
-            .agg(F.sum("freq").alias("f"))
-            .orderBy(F.desc("f"), "lhs", "rhs")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        lhs, rhs, f = best[0]["lhs"], best[0]["rhs"], best[0]["f"]
-        merges.append((it, lhs, rhs, int(f)))
-        search = F.lit(f"{DELIM}{lhs}{DELIM}{DELIM}{rhs}{DELIM}")
-        repl = F.lit(f"{DELIM}{lhs}{rhs}{DELIM}")
-        words = words.select(
-            F.replace(F.col("syms"), search, repl).alias("syms"), "freq"
-        )
-        if (it + 1) % checkpoint_every == 0:
-            # truncate lineage; lazy — materializes on the next
-            # iteration's pair-count action
-            words = words.localCheckpoint(eager=False)
-    base.unpersist()
+            best = (
+                pair_rows.groupBy("p.lhs", "p.rhs")
+                .agg(F.sum("freq").alias("f"))
+                .orderBy(F.desc("f"), "lhs", "rhs")
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            lhs, rhs, f = best[0]["lhs"], best[0]["rhs"], best[0]["f"]
+            merges.append((it, lhs, rhs, int(f)))
+            search = F.lit(f"{DELIM}{lhs}{DELIM}{DELIM}{rhs}{DELIM}")
+            repl = F.lit(f"{DELIM}{lhs}{rhs}{DELIM}")
+            words = words.select(
+                F.replace(F.col("syms"), search, repl).alias("syms"), "freq"
+            )
+            if (it + 1) % checkpoint_every == 0:
+                # truncate lineage; lazy — materializes on the next
+                # iteration's pair-count action
+                words = words.localCheckpoint(eager=False)
     return merges
 
 

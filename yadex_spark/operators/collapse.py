@@ -8,24 +8,18 @@ final state is identical under last-writer-wins because update/replace
 carry the full post-image (ReplaceOne upsert,
 /root/reference/msync/oploggetters.go:99-104).
 
-All three implementations rank by ``op_seq`` ALONE (resume-token
-arrival order — the order the reference applies events in), so the
-winner is identical across impls and micro-batch boundaries.  A/B
-through the real streamed pipeline, 1M × ~1KB events, warm JVM:
-agg 15.3s, narrow 20.2s standalone, but narrow wins in-pipeline
-(codegen HashAggregate + broadcast join-back):
+Both implementations rank by ``op_seq`` ALONE (resume-token arrival
+order — the order the reference applies events in), so the winner is
+identical across impls and micro-batch boundaries.
 
-- ``impl="agg"``: single ``groupBy(table, doc_id).agg(max(
-  struct(op_seq, …)))``.  Map-side partial aggregation means a
-  hot doc_id (skew) is pre-collapsed to one row per input partition
-  *before* the shuffle — no window sort, no salting needed (LWW-max is
-  associative & commutative).  One pass, no join.
-
-- ``impl="narrow"`` (default): aggregate only the ordering key (8-byte agg
-  buffers instead of the whole post-image), then join the winners back
-  to fetch payloads; AQE broadcasts the winner set when small.  The
-  fallback if very wide payloads ever make the agg buffers the
-  bottleneck.
+- ``impl="narrow"`` (default, the pipeline's): aggregate only the
+  ordering key (8-byte agg buffers instead of the whole post-image — a
+  plain BIGINT max stays a codegen'd HashAggregate, where a struct-max
+  over the payload falls back to SortAggregate), then join the winners
+  back to fetch payloads; the join-back broadcasts when the winner set
+  is small.  Map-side partial aggregation pre-collapses a hot doc_id
+  (skew) to one row per input partition before the shuffle —
+  LWW-max is associative & commutative, so no salting is needed.
 
 - ``impl="arrow"``: salted two-phase grouped-map ``applyInPandas``
   (vectorized Arrow, no per-row Python).  First phase groups on
@@ -104,11 +98,6 @@ def collapse(events: DataFrame, impl: str = "narrow", n_salt: int = 16,
             winners = F.broadcast(winners)
         out = events.join(winners, ["table", "doc_id"]).where(F.col(ORDER_COL) == F.col("_w"))
         return out.select("table", "doc_id", *payload_cols)
-    if impl == "agg":
-        collapsed = events.groupBy("table", "doc_id").agg(
-            F.max(F.struct(ORDER_COL, *[c for c in payload_cols if c != ORDER_COL])).alias("m")
-        )
-        return collapsed.select("table", "doc_id", *[F.col(f"m.{c}") for c in payload_cols])
     if impl == "arrow":
         return _collapse_arrow(events, n_salt)
     raise ValueError(f"unknown impl {impl!r}")

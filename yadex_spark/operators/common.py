@@ -2,7 +2,22 @@
 
 from __future__ import annotations
 
+import contextlib
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame
+
+
+@contextlib.contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """``df.persist()`` for the duration of the ``with`` block, released
+    on every exit path — an exception mid-block must not leave the
+    frame pinned in the executors' storage for the session's life."""
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:

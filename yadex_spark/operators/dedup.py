@@ -226,10 +226,12 @@ def _simhash_chunks(docs: DataFrame, bits: int, bands: int) -> DataFrame:
     agg = _simhash_votes(docs, bits)
     cols, j = [], 0
     for i, w in enumerate(_chunk_widths(bits, bands)):
-        assert w <= 62, "chunk width must fit a signed long"
         c = F.lit(0).cast("long")
         for p in range(w):
-            c = c + F.when(F.col(f"v{j + p}") > 0, F.lit(1 << (w - 1 - p))).otherwise(0)
+            # bit 63 of a full-width 64-bit chunk is the long's sign bit
+            # (two's complement: equality and popcount stay exact)
+            weight = -(1 << 63) if w - 1 - p == 63 else 1 << (w - 1 - p)
+            c = c + F.when(F.col(f"v{j + p}") > 0, F.lit(weight)).otherwise(0)
         cols.append(c.cast("long").alias(f"k{i}"))
         j += w
     return agg.select("doc_id", *cols)
@@ -263,6 +265,11 @@ def simhash_pairs(docs: DataFrame, bits: int = 64, bands: int = 4,
     chunks collide for ~22% of ALL pairs — quadratic blowup (measured
     137 s at sf0.1 before widening).
 
+    Raises ``ValueError`` unless ``1 <= bands <= bits``, ``bits/bands
+    <= 64`` (each chunk is one signed long) and ``max_hamming <=
+    bands - 1``.  ``bits=64, bands=1, max_hamming=0`` pairs exactly the
+    docs with identical signatures.
+
     ``max_bucket`` drops band buckets with more members (the same
     quadratic-bucket guard as the jaccard df-cap; standard LSH
     practice).  It dents exactness only for pairs whose EVERY shared
@@ -274,7 +281,12 @@ def simhash_pairs(docs: DataFrame, bits: int = 64, bands: int = 4,
     done there by brute-force key iteration; the band join is the
     distributed replacement.
     """
-    assert max_hamming <= bands - 1, "banding only guarantees recall to bands-1"
+    if not 1 <= bands <= bits or bits // bands > 64:
+        raise ValueError(f"need 1 <= bands <= bits and bits/bands <= 64 "
+                         f"(one signed long per chunk): bits={bits}, bands={bands}")
+    if max_hamming > bands - 1:
+        raise ValueError(f"banding only guarantees recall to bands-1: "
+                         f"max_hamming={max_hamming}, bands={bands}")
     # integer-chunk signature: same bits, 8-byte band keys and a
     # bit_count(xor) hamming instead of 64-char strings + 64 substring
     # compares (values identical — see _simhash_chunks)

@@ -95,6 +95,8 @@ def hashed_features(docs: DataFrame, dim: int = 64, salt: str = "qf",
             .cast("long").alias("cnt"),
         ),
     )
+    # a NULL text has no words: still emit the bias-only vector
+    main = F.coalesce(main, F.array().cast("array<struct<idx:int,cnt:bigint>>"))
     bias = F.array(F.struct(F.lit(dim).alias("idx"), F.lit(1).cast("long").alias("cnt")))
     return d.select("doc_id", F.concat(main, bias).alias("feats"))
 

@@ -714,9 +714,12 @@ def lm_bigram_score(docs: DataFrame, k_bigrams: int = 50_000) -> DataFrame:
         .select(
             "doc_id",
             F.explode(
-                F.concat(
-                    uni_structs,
-                    F.when(F.size(g2) > 0, big_structs).otherwise(no_bigram_marker),
+                F.coalesce(  # a NULL text still scores as a 0-bigram doc
+                    F.concat(
+                        uni_structs,
+                        F.when(F.size(g2) > 0, big_structs).otherwise(no_bigram_marker),
+                    ),
+                    no_bigram_marker,
                 )
             ).alias("f"),
         )
@@ -868,7 +871,7 @@ def dsir_weights(corpus: DataFrame, target: DataFrame,
 
     ``raw_counts``: optional precomputed raw-corpus bucket model —
     (b, c_r) rows, as maintained incrementally by
-    ``streaming/dsir_ingest.py`` — used instead of a fresh corpus
+    ``streaming/fold_ingest.py`` — used instead of a fresh corpus
     model pass (2 corpus scans instead of 3).  Caller's contract:
     the counts cover exactly ``corpus``.
 

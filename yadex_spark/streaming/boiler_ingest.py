@@ -45,14 +45,14 @@ adversarial split where a line crosses the threshold mid-feed).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yadex_spark.lake.table import LakeTable
-from yadex_spark.streaming.dedup_ingest import INGEST_SCHEMA
+from yadex_spark.operators.common import persisted
+from yadex_spark.streaming.ingest_core import EpochIngest, insert_delta
 
 #: scrubbed-output schema (one row per arrival, keyed by ingest_seq)
 SCRUBBED_SCHEMA = (
@@ -70,31 +70,19 @@ def _lines(docs: DataFrame, sep: str) -> DataFrame:
 
 
 @dataclass
-class BoilerplateIngest:
-    spark: SparkSession
-    feed_dir: str
-    lake_dir: str
-    checkpoint_dir: str
+class BoilerplateIngest(EpochIngest):
     min_df: int = 2
     sep: str = "\n"
-    max_files_per_trigger: int = 4
-    #: probe budget, same rule as DedupIngest.MAX_PRUNE_PROBES: above
-    #: it the probe list blankets the key space anyway — fall back to
-    #: the unpruned lookup
-    MAX_PRUNE_PROBES = 100_000
 
-    @property
-    def line_df(self) -> LakeTable:
-        return LakeTable(self.spark, os.path.join(self.lake_dir, "_line_df"))
+    TAG, REGISTRY_DIR = "boiler", "_line_df"
 
-    @property
-    def accepted_table(self) -> LakeTable:
-        return LakeTable(self.spark, os.path.join(self.lake_dir, "accepted"))
+    #: (h, df) per line hash — this member's registry, committed LAST
+    line_df = EpochIngest.seen
 
-    def _scope(self) -> str:
-        from yadex_spark.streaming.pipeline import checkpoint_scope
-
-        return checkpoint_scope(self.checkpoint_dir)
+    def _maintained(self) -> dict[str, LakeTable]:
+        # line_df is the hot one: one delta per epoch, probed every
+        # epoch — the exact L0 shape minor compaction exists for
+        return {"line_df": self.line_df, "accepted": self.accepted_table}
 
     # ---------- epoch body ----------
 
@@ -140,76 +128,30 @@ class BoilerplateIngest:
             (F.col("n_lines") - F.coalesce("n_kept", F.lit(0))).alias("n_dropped"),
         )
 
-    def apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        scope = self._scope()
-        batch_id = f"{scope}/boiler-e{epoch_id}"
-        if batch_id in self.line_df.committed_batch_ids():
-            return  # crash-replayed epoch: already fully applied
-        docs = batch.persist()
-        try:
-            ln = _lines(docs, self.sep)
-            batch_df = (
-                ln.select("h", "doc_id").distinct()
-                .groupBy("h").agg(F.count(F.lit(1)).alias("bdf"))
-                .persist()
-            )
+    def _apply(self, batch: DataFrame, epoch_id: int, batch_id: str) -> None:
+        with (persisted(batch) as docs,
+              persisted(_lines(docs, self.sep).select("h", "doc_id").distinct()
+                        .groupBy("h").agg(F.count(F.lit(1)).alias("bdf"))) as batch_df):
             probes = [r["h"] for r in batch_df.select("h").collect()]
             if not probes:
-                batch_df.unpersist()
                 return
-            folded = (
-                batch_df.join(self._stored_df(probes), "h", "left")
-                .select(
-                    "h",
-                    (F.col("bdf") + F.coalesce("df", F.lit(0))).alias("df"),
-                )
-                .persist()
+            folded = batch_df.join(self._stored_df(probes), "h", "left").select(
+                "h", (F.col("bdf") + F.coalesce("df", F.lit(0))).alias("df"),
             )
-            boiler = folded.where(F.col("df") >= self.min_df).select("h")
-            # 1) scrubbed docs FIRST (replay recomputes identically
-            #    against the unchanged line_df, then no-ops by batch id)
-            scrubbed = self._scrub(docs, boiler)
-            acc_delta = scrubbed.select(
-                F.col("ingest_seq").cast("string").alias("doc_id"),
-                F.lit("insert").alias("op"),
-                F.col("ingest_seq").alias("op_seq"),
-                F.struct(
+            with persisted(folded):
+                boiler = folded.where(F.col("df") >= self.min_df).select("h")
+                # 1) scrubbed docs FIRST (replay recomputes identically
+                #    against the unchanged line_df, then no-ops by batch id)
+                acc_delta = insert_delta(
+                    self._scrub(docs, boiler), "ingest_seq", "ingest_seq",
                     F.col("doc_id").alias("orig_doc_id"),
-                    "clean_text", "n_lines", "n_dropped",
-                    F.col("ingest_seq").alias("ingest_seq"),
-                ).alias("after"),
-            )
-            self.accepted_table.commit_delta(acc_delta, batch_id=batch_id)
-            # 2) updated df rows LAST — the fully-applied marker.
-            #    op_seq = epoch: LWW picks the newest fold per hash.
-            df_delta = folded.select(
-                F.col("h").alias("doc_id"),
-                F.lit("insert").alias("op"),
-                F.lit(epoch_id).cast("long").alias("op_seq"),
-                F.struct(F.col("df")).alias("after"),
-            )
-            self.line_df.commit_delta(df_delta, batch_id=batch_id)
-            folded.unpersist()
-            batch_df.unpersist()
-        finally:
-            docs.unpersist()
-
-    def run_available_now(self, timeout_s: int = 600) -> None:
-        q = (
-            self.spark.readStream.schema(INGEST_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.feed_dir)
-            .writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("boilerplate ingest did not drain in time")
-        if q.exception() is not None:
-            raise q.exception()
+                    "clean_text", "n_lines", "n_dropped", "ingest_seq",
+                )
+                self.accepted_table.commit_delta(acc_delta, batch_id=batch_id)
+                # 2) updated df rows LAST — the fully-applied marker.
+                #    op_seq = epoch: LWW picks the newest fold per hash.
+                df_delta = insert_delta(folded, "h", F.lit(epoch_id), "df")
+                self.line_df.commit_delta(df_delta, batch_id=batch_id)
 
     # ---------- reads ----------
 
@@ -255,53 +197,33 @@ class BoilerplateIngest:
                 F.col("clean_text").alias("text"),
                 "n_lines",
             )
-            rescrub = self._scrub(cur, self.boiler_set().persist())
-            # a repaired doc keeps its ORIGINAL n_lines / cumulative
-            # n_dropped (drop counts compose: earlier scrub + this one)
-            repaired = (
-                rescrub.where(F.col("n_dropped") > 0)
-                .join(
-                    cur.select("ingest_seq", F.col("n_lines").alias("orig_n_lines")),
-                    "ingest_seq",
-                )
-            )
             max_seq = tbl.read().agg(F.max("ingest_seq")).first()[0] or 0
-            delta = repaired.select(
-                F.col("ingest_seq").cast("string").alias("doc_id"),
-                F.lit("insert").alias("op"),
-                (F.lit(max_seq) + F.lit(1) + F.col("ingest_seq")).alias("op_seq"),
-                F.struct(
+            with persisted(self.boiler_set()) as boiler:
+                rescrub = self._scrub(cur, boiler)
+                # a repaired doc keeps its ORIGINAL n_lines / cumulative
+                # n_dropped (drop counts compose: earlier scrub + this one)
+                repaired = (
+                    rescrub.where(F.col("n_dropped") > 0)
+                    .join(
+                        cur.select("ingest_seq", F.col("n_lines").alias("orig_n_lines")),
+                        "ingest_seq",
+                    )
+                )
+                delta = insert_delta(
+                    repaired, "ingest_seq",
+                    F.lit(max_seq) + F.lit(1) + F.col("ingest_seq"),
                     F.col("doc_id").alias("orig_doc_id"),
                     "clean_text",
                     F.col("orig_n_lines").alias("n_lines"),
                     # cumulative: lines dropped online + dropped now
                     (F.col("orig_n_lines") - F.col("n_lines")
                      + F.col("n_dropped")).alias("n_dropped"),
-                    F.col("ingest_seq").alias("ingest_seq"),
-                ).alias("after"),
-            ).persist()
-            n = delta.count()
-            if n:
-                self.accepted_table.commit_delta(
-                    delta, batch_id=f"reconcile-{self.line_df.latest_version()}"
+                    "ingest_seq",
                 )
-            delta.unpersist()
+                with persisted(delta):
+                    n = delta.count()
+                    if n:
+                        self.accepted_table.commit_delta(
+                            delta, batch_id=f"reconcile-{self.line_df.latest_version()}"
+                        )
             return int(n)
-
-    def maintain(self, minor: bool = False) -> dict:
-        """Compact + vacuum both tables under the shared lease (the
-        line_df table is the hot one: one delta per epoch, probed every
-        epoch — the exact L0 shape minor compaction exists for)."""
-        from yadex_spark.lake.lease import maintenance_lease
-
-        with maintenance_lease(self.lake_dir):
-            report = {}
-            for name, tbl in (("line_df", self.line_df),
-                              ("accepted", self.accepted_table)):
-                v = tbl.compact_minor() if minor else tbl.compact()
-                removed = tbl.vacuum() if (not minor or v is not None) else []
-                report[name] = {
-                    ("minicompacted_version" if minor else "compacted_version"): v,
-                    "data_dirs_removed": len(removed),
-                }
-        return report

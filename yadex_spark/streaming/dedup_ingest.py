@@ -1,8 +1,8 @@
 """Streaming dedup-on-ingest: exact dedup of documents AS THEY ARRIVE.
 
-The composition a training-data lake actually runs: the CDC micro-batch
-machinery (checkpointed feed, exactly-once commits, crash replay) around
-the dedup suite's content hashing.  Each epoch:
+The composition a training-data lake actually runs: the epoch-commit
+core (``ingest_core.EpochIngest`` — checkpointed feed, exactly-once
+commits, crash replay) around the dedup suite's content hashing.  Each epoch:
 
 1. hash the batch's documents (md5 of text — the exact-dedup key),
 2. collapse the batch to its FIRST arrival per hash (min ingest_seq —
@@ -58,65 +58,21 @@ epoch):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yadex_spark.lake.table import LakeTable
+from yadex_spark.operators.common import persisted
+from yadex_spark.streaming.ingest_core import EpochIngest, insert_delta
 
-#: feed schema: arrival order + document.  ingest_seq is the feed's
-#: UNIQUE arrival offset (the op_seq analogue of the CDC feed): the
-#: first-arrival collapse keys on it, so two arrivals never share one.
-INGEST_SCHEMA = "ingest_seq long, doc_id string, text string"
 #: accepted() output schema
 ACCEPTED_SCHEMA = "doc_id string, text string, ingest_seq long"
 
 
 @dataclass
-class DedupIngest:
-    spark: SparkSession
-    feed_dir: str        # parquet dir of INGEST_SCHEMA chunks
-    lake_dir: str        # root: seen-hash registry + accepted output
-    checkpoint_dir: str
-    max_files_per_trigger: int = 4
-
-    #: registry subdir — the near-dup subclass swaps in its band registry
-    REGISTRY_DIR = "_seen_hashes"
-    #: feed read schema — subclasses with extra feed columns override
-    FEED_SCHEMA = INGEST_SCHEMA
-    #: driver-side probe budget for zone-map pruning: a batch with more
-    #: distinct keys than this (possible for the span/band variants,
-    #: whose key count is chunks/bands per doc, not docs) skips the
-    #: driver collect and falls back to the executor-side broadcast
-    #: semi-join over the unpruned narrow scan — the pre-pruning shape,
-    #: still O(batch) shuffle.  At that batch size the probes blanket
-    #: the key space anyway, so range pruning could not skip files.
-    MAX_PRUNE_PROBES = 100_000
-
-    @property
-    def seen(self) -> LakeTable:
-        return LakeTable(self.spark, os.path.join(self.lake_dir, self.REGISTRY_DIR))
-
-    @property
-    def accepted_table(self) -> LakeTable:
-        return LakeTable(self.spark, os.path.join(self.lake_dir, "accepted"))
-
-    def _scope(self) -> str:
-        from yadex_spark.streaming.pipeline import checkpoint_scope
-
-        return checkpoint_scope(self.checkpoint_dir)
-
-    def _preprocess(self, batch: DataFrame) -> DataFrame:
-        """Per-batch stateless pre-pass hook, applied before the
-        first-arrival collapse.  The base class is the identity; the
-        clean-ingest subclass scrubs/filters/decontaminates here.  Must
-        return the INGEST_SCHEMA columns and must be deterministic and
-        per-row (no cross-epoch state) so crash replay recomputes the
-        identical batch."""
-        return batch
-
+class DedupIngest(EpochIngest):
     def _first_arrivals(self, batch: DataFrame) -> DataFrame:
         """Batch-local first arrival per content hash: min ingest_seq —
         a narrow BIGINT agg + join-back, the CDC collapse shape.  The
@@ -183,18 +139,13 @@ class DedupIngest:
         matched = self._registry_matched(first.select(F.col("h")), "h", registry)
         return first.join(F.broadcast(matched), "h", "left_anti")
 
-    def apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        scope = self._scope()
-        batch_id = f"{scope}/dedup-e{epoch_id}"
-        if batch_id in self.seen.committed_batch_ids():
-            return  # crash-replayed epoch: already fully applied
+    def _apply(self, batch: DataFrame, epoch_id: int, batch_id: str) -> None:
         # persist the batch-local winners: the subtree feeds three plan
         # branches (batch-keys broadcast under each registry-file semi
         # join + the anti-join probe side) — cached, the feed files are
         # hashed and collapsed exactly once per epoch
-        first = self._first_arrivals(self._preprocess(batch)).persist()
-        accepted = self._not_seen(first, self.seen).persist()
-        try:
+        with (persisted(self._first_arrivals(batch)) as first,
+              persisted(self._not_seen(first, self.seen)) as accepted):
             # 1) accepted docs — LakeTable delta keyed by the CONTENT
             #    HASH (unique per accepted row; the original doc_id may
             #    legitimately repeat across arrivals with edited text).
@@ -204,81 +155,20 @@ class DedupIngest:
             #    commits, replay recomputes the identical accepted set
             #    (the registry still lacks these hashes), no-ops here by
             #    batch id, then commits the registry delta.
-            acc_delta = accepted.select(
-                F.col("h").alias("doc_id"),
-                F.lit("insert").alias("op"),
-                F.col("ingest_seq").alias("op_seq"),
-                F.struct(
-                    F.col("first_doc_id").alias("accepted_doc_id"),
-                    F.col("text").alias("text"),
-                    F.col("ingest_seq").alias("ingest_seq"),
-                ).alias("after"),
+            acc_delta = insert_delta(
+                accepted, "h", "ingest_seq",
+                F.col("first_doc_id").alias("accepted_doc_id"), "text", "ingest_seq",
             )
             self.accepted_table.commit_delta(acc_delta, batch_id=batch_id)
             # 2) newly-seen hashes (hash is the registry key; canonical
             #    doc and arrival seq are the payload).  Committed LAST:
-            #    its batch id doubles as the epoch's fully-applied
-            #    marker (checked on entry).
-            seen_delta = accepted.select(
-                F.col("h").alias("doc_id"),
-                F.lit("insert").alias("op"),
-                F.col("ingest_seq").alias("op_seq"),
-                F.struct(
-                    F.col("first_doc_id").alias("canonical_doc_id"),
-                    F.col("ingest_seq").alias("first_seen_seq"),
-                ).alias("after"),
+            #    the epoch's fully-applied marker.
+            seen_delta = insert_delta(
+                accepted, "h", "ingest_seq",
+                F.col("first_doc_id").alias("canonical_doc_id"),
+                F.col("ingest_seq").alias("first_seen_seq"),
             )
             self.seen.commit_delta(seen_delta, batch_id=batch_id)
-        finally:
-            accepted.unpersist()
-            first.unpersist()
-
-    def run_available_now(self, timeout_s: int = 600) -> None:
-        q = (
-            self.spark.readStream.schema(self.FEED_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.feed_dir)
-            .writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("dedup ingest did not drain in time")
-        if q.exception() is not None:
-            raise q.exception()
-
-    def maintain(self, minor: bool = False) -> dict:
-        """Compact + vacuum the seen-hash registry AND the accepted
-        output — the same out-of-band maintenance discipline as the CDC
-        lake (run with the stream stopped; at scale, Iceberg
-        rewrite_data_files + expire_snapshots).  Compaction range-
-        clusters each table on its key (the content hash), giving every
-        file a tight hash min/max footer.  Guarded by the shared
-        nonce-confirmed maintenance lease: a cron'd run racing a manual
-        one must not interleave compact and vacuum.
-
-        ``minor=True`` runs the cheap tier instead
-        (:meth:`LakeTable.compact_minor`): the registries grow one
-        small delta per epoch — exactly the L0 shape — and their keys
-        are unique across epochs (content hashes / band keys inserted
-        once; ``e<epoch>|``-prefixed partial keys), so the trailing-run
-        merge is a plain union that keeps the per-epoch footer-probe
-        count flat at O(trailing deltas) cost between full compacts."""
-        from yadex_spark.lake.lease import maintenance_lease
-
-        with maintenance_lease(self.lake_dir):
-            report = {}
-            for name, tbl in (("seen", self.seen), ("accepted", self.accepted_table)):
-                v = tbl.compact_minor() if minor else tbl.compact()
-                removed = tbl.vacuum() if (not minor or v is not None) else []
-                report[name] = {
-                    ("minicompacted_version" if minor else "compacted_version"): v,
-                    "data_dirs_removed": len(removed),
-                }
-        return report
 
     def accepted(self) -> DataFrame:
         """All accepted (first-arrival) documents so far.  Insert-only

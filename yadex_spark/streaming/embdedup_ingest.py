@@ -41,6 +41,7 @@ class EmbedDedupIngest(NearDupIngest):
     dim: int = 64
 
     REGISTRY_DIR = "_seen_embed_bands"
+    FEED_SCHEMA = EMBED_INGEST_SCHEMA
 
     #: cached hyperplane literals (computed once per instance)
     _planes: list = field(default=None, repr=False)
@@ -70,33 +71,15 @@ class EmbedDedupIngest(NearDupIngest):
             ).alias("band"),
         )
 
-    def apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
+    def _preprocess(self, batch: DataFrame) -> DataFrame:
         # the embedding feed has no text column; the parent's accepted
         # delta stores (accepted_doc_id, text, ingest_seq) — reuse it by
         # carrying the embedding as its canonical string form (exact:
         # quantized integers), so accepted() stays schema-stable across
         # the family.  A production sink would keep the vector column;
         # this keeps the shared LakeTable payload path single-schema.
-        with_text = batch.select(
+        return batch.select(
             "ingest_seq", "doc_id",
             F.to_json(quantized(F.col("embedding"))).alias("text"),
             "embedding",
         )
-        super().apply_batch(with_text, epoch_id)
-
-    def run_available_now(self, timeout_s: int = 600) -> None:
-        q = (
-            self.spark.readStream.schema(EMBED_INGEST_SCHEMA)
-            .option("maxFilesPerTrigger", self.max_files_per_trigger)
-            .parquet(self.feed_dir)
-            .writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("embed dedup ingest did not drain in time")
-        if q.exception() is not None:
-            raise q.exception()

@@ -40,8 +40,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yadex_spark.operators.common import persisted
 from yadex_spark.operators.dedup import dedup_clusters, doc_shingles
 from yadex_spark.streaming.dedup_ingest import DedupIngest
+from yadex_spark.streaming.ingest_core import insert_delta
 
 
 @dataclass
@@ -52,6 +54,7 @@ class NearDupIngest(DedupIngest):
     k: int = 8
     n: int = 3
 
+    TAG = "neardup"
     REGISTRY_DIR = "_seen_bands"
 
     def _bands(self, batch: DataFrame) -> DataFrame:
@@ -83,15 +86,10 @@ class NearDupIngest(DedupIngest):
             ).alias("band"),
         )
 
-    def apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        scope = self._scope()
-        batch_id = f"{scope}/neardup-e{epoch_id}"
-        if batch_id in self.seen.committed_batch_ids():
-            return  # crash-replayed epoch: already fully applied
+    def _apply(self, batch: DataFrame, epoch_id: int, batch_id: str) -> None:
         # bands feed four plan branches (registry probe, within-batch
         # min, rejection join, registration) — computed once
-        bands = self._bands(batch).persist()
-        try:
+        with persisted(self._bands(batch)) as bands:
             # --- cross-epoch: bands the registry has already recorded.
             # Zone-map-pruned, broadcast-semi probe, same shape as the
             # exact path: registry rows are probed map-side over only
@@ -113,44 +111,27 @@ class NearDupIngest(DedupIngest):
                 )
                 .distinct()
             )
-            accepted = batch.join(rejected, "ingest_seq", "left_anti").persist()
-            try:
+            with persisted(batch.join(rejected, "ingest_seq", "left_anti")) as accepted:
                 # 1) accepted docs, keyed by content hash (unique among
                 #    accepted rows: identical texts share every band, so
                 #    a later twin is always rejected).  Committed FIRST —
                 #    crash between commits replays to an identical
                 #    recompute (registry still lacks this batch's bands),
                 #    no-ops here by batch id, then registers the bands.
-                acc_delta = accepted.select(
-                    F.md5("text").alias("doc_id"),
-                    F.lit("insert").alias("op"),
-                    F.col("ingest_seq").alias("op_seq"),
-                    F.struct(
-                        F.col("doc_id").alias("accepted_doc_id"),
-                        F.col("text").alias("text"),
-                        F.col("ingest_seq").alias("ingest_seq"),
-                    ).alias("after"),
+                acc_delta = insert_delta(
+                    accepted, F.md5("text"), "ingest_seq",
+                    F.col("doc_id").alias("accepted_doc_id"), "text", "ingest_seq",
                 )
                 self.accepted_table.commit_delta(acc_delta, batch_id=batch_id)
                 # 2) register EVERY new band value of this batch
                 #    (accepted and rejected arrivals alike — rejected
                 #    docs' bands must keep rejecting their later
                 #    neighbors).  Committed LAST: fully-applied marker.
-                new_bands = band_min.join(
-                    F.broadcast(matched), "band", "left_anti"
-                ).select(
-                    F.col("band").alias("doc_id"),
-                    F.lit("insert").alias("op"),
-                    F.col("first_seq").alias("op_seq"),
-                    F.struct(
-                        F.col("first_seq").alias("first_seen_seq")
-                    ).alias("after"),
+                new_bands = insert_delta(
+                    band_min.join(F.broadcast(matched), "band", "left_anti"),
+                    "band", "first_seq", F.col("first_seq").alias("first_seen_seq"),
                 )
                 self.seen.commit_delta(new_bands, batch_id=batch_id)
-            finally:
-                accepted.unpersist()
-        finally:
-            bands.unpersist()
 
     def reconcile(self, arrivals: DataFrame | None = None,
                   repair: bool = True) -> dict:
@@ -223,46 +204,33 @@ class NearDupIngest(DedupIngest):
                 F.col("doc_id") == F.col("cluster_id")
             ).select(F.col("doc_id").alias("canon_seq"))
 
-            acc = self.accepted().persist()
-            try:
-                n_acc = acc.count()
-                divergent = acc.join(
-                    canonical, acc["ingest_seq"] == canonical["canon_seq"],
-                    "left_anti",
-                ).persist()
-                try:
-                    n_div = divergent.count()
-                    repaired = 0
-                    if repair and n_div:
-                        max_seq = arrivals.agg(
-                            F.max("ingest_seq")
-                        ).collect()[0][0]
-                        tbl = self.accepted_table
-                        dele = divergent.select(
-                            F.md5("text").alias("doc_id"),
-                            F.lit("delete").alias("op"),
-                            F.lit(max_seq + 1).cast("long").alias("op_seq"),
-                            F.struct(
-                                F.lit(None).cast("string")
-                                .alias("accepted_doc_id"),
-                                F.lit(None).cast("string").alias("text"),
-                                F.lit(None).cast("long").alias("ingest_seq"),
-                            ).alias("after"),
-                        )
-                        tbl.commit_delta(
-                            dele,
-                            batch_id=f"{self._scope()}/reconcile-v"
-                                     f"{tbl.latest_version()}",
-                        )
-                        # restore the insert-only invariant read_keys
-                        # relies on: fold the tombstones away now
-                        tbl.compact(keep_tombstones=False)
-                        tbl.vacuum()
-                        repaired = n_div
-                finally:
-                    divergent.unpersist()
-            finally:
-                acc.unpersist()
+            with (persisted(self.accepted()) as acc,
+                  persisted(acc.join(canonical, acc["ingest_seq"] == canonical["canon_seq"],
+                                     "left_anti")) as divergent):
+                n_acc, n_div = acc.count(), divergent.count()
+                repaired = 0
+                if repair and n_div:
+                    max_seq = arrivals.agg(F.max("ingest_seq")).collect()[0][0]
+                    tbl = self.accepted_table
+                    dele = divergent.select(
+                        F.md5("text").alias("doc_id"),
+                        F.lit("delete").alias("op"),
+                        F.lit(max_seq + 1).cast("long").alias("op_seq"),
+                        F.struct(
+                            F.lit(None).cast("string").alias("accepted_doc_id"),
+                            F.lit(None).cast("string").alias("text"),
+                            F.lit(None).cast("long").alias("ingest_seq"),
+                        ).alias("after"),
+                    )
+                    tbl.commit_delta(
+                        dele,
+                        batch_id=f"{self._scope()}/reconcile-v{tbl.latest_version()}",
+                    )
+                    # restore the insert-only invariant read_keys
+                    # relies on: fold the tombstones away now
+                    tbl.compact(keep_tombstones=False)
+                    tbl.vacuum()
+                    repaired = n_div
             return {
                 "accepted": n_acc,
                 "canonical_accepted": n_acc - n_div,

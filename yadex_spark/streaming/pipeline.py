@@ -67,6 +67,7 @@ from yadex_spark.operators.collapse import ORDER_COL, collapse
 from yadex_spark.operators.route import RT, Router, namespace_filter, route_filter
 from yadex_spark.schema import (ALL_OPS, OP_INSERT, OP_REPLACE, OP_UPDATE,
                                 LINEAGE_SCHEMA, oplog_read_schema, oplog_schema)
+from yadex_spark.streaming.ingest_core import checkpoint_scope, drain_available_now
 
 
 def quarantine_reason():
@@ -151,25 +152,6 @@ def rolling_events_per_sec(
     if row is None or not row[1]:
         return None
     return float(row[0]) / (float(row[1]) / 1000.0)
-
-
-def checkpoint_scope(checkpoint_dir: str) -> str:
-    """Read-or-create the checkpoint's stable scope id (O_EXCL: one
-    winner under concurrent creation).  Shared by every checkpointed
-    pipeline that namespaces batch ids (CdcPipeline, DedupIngest)."""
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    path = os.path.join(checkpoint_dir, "_yadex_scope.json")
-    if not os.path.exists(path):
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"scope": uuid.uuid4().hex[:12]}, f)
-        try:
-            os.link(tmp, path)  # O_EXCL: one winner under races
-        except FileExistsError:
-            pass
-        os.unlink(tmp)
-    with open(path) as f:
-        return json.load(f)["scope"]
 
 
 @dataclass
@@ -1075,19 +1057,5 @@ class CdcPipeline:
         )
 
     def run_available_now(self, timeout_s: int = 600) -> None:
-        """Drain everything currently in the feed, then stop — the
-        analogue of the reference's WaitJobDone quiescence barrier
-        (/root/reference/msync/debug.go:37-63)."""
-        q = (
-            self.stream()
-            .writeStream.foreachBatch(self.apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
-        if q.isActive:
-            q.stop()
-            raise TimeoutError("stream did not drain in time")
-        if q.exception() is not None:
-            raise q.exception()
+        """Drain everything currently in the feed, then stop."""
+        drain_available_now(self.stream(), self.apply_batch, self.checkpoint_dir, timeout_s)

@@ -50,9 +50,10 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yadex_spark.operators.common import spread as _spread
+from yadex_spark.operators.common import persisted, spread as _spread
 from yadex_spark.operators.dedup import chunk_structs
 from yadex_spark.streaming.dedup_ingest import DedupIngest
+from yadex_spark.streaming.ingest_core import insert_delta
 
 #: cleaned() output schema
 CLEANED_SCHEMA = (
@@ -66,6 +67,7 @@ class SpanDedupIngest(DedupIngest):
     p: int = 6
     min_words: int = 4
 
+    TAG = "span"
     REGISTRY_DIR = "_seen_chunks"
 
     def _chunks(self, batch: DataFrame) -> DataFrame:
@@ -82,15 +84,10 @@ class SpanDedupIngest(DedupIngest):
             )
         )
 
-    def apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        scope = self._scope()
-        batch_id = f"{scope}/span-e{epoch_id}"
-        if batch_id in self.seen.committed_batch_ids():
-            return  # crash-replayed epoch: already fully applied
+    def _apply(self, batch: DataFrame, epoch_id: int, batch_id: str) -> None:
         # the chunk subtree feeds the registry probe, the winner agg,
         # the keep join and the rebuild — computed once per epoch
-        chunks = self._chunks(batch).persist()
-        try:
+        with persisted(self._chunks(batch)) as chunks:
             eligible = chunks.where(F.col("nw") >= self.min_words)
             # --- cross-epoch: chunk hashes the registry already holds.
             # Zone-map-pruned, broadcast-semi probe: registry rows are
@@ -135,35 +132,23 @@ class SpanDedupIngest(DedupIngest):
             #    an identical recompute (the registry still lacks this
             #    epoch's chunk hashes), no-ops here by batch id, then
             #    registers the chunks.
-            out_delta = cleaned.select(
-                F.col("ingest_seq").cast("string").alias("doc_id"),
-                F.lit("insert").alias("op"),
-                F.col("ingest_seq").alias("op_seq"),
-                F.struct(
-                    F.col("doc_id").alias("orig_doc_id"),
-                    F.col("ingest_seq").alias("ingest_seq"),
-                    F.col("n_chunks").alias("n_chunks"),
-                    F.col("n_dropped").alias("n_dropped"),
-                    F.col("clean_text").alias("clean_text"),
-                ).alias("after"),
+            out_delta = insert_delta(
+                cleaned, "ingest_seq", "ingest_seq",
+                F.col("doc_id").alias("orig_doc_id"),
+                "ingest_seq", "n_chunks", "n_dropped", "clean_text",
             )
             self.accepted_table.commit_delta(out_delta, batch_id=batch_id)
             # 2) register this epoch's NEW chunk hashes (the winners not
             #    already matched — every other occurrence was stripped
             #    in favor of its winner).  Committed LAST: fully-applied
             #    marker.
-            new_chunks = winners.join(F.broadcast(matched), "ph", "left_anti").select(
-                F.col("ph").alias("doc_id"),
-                F.lit("insert").alias("op"),
-                F.col("w.ingest_seq").alias("op_seq"),
-                F.struct(
-                    F.col("w.ingest_seq").alias("first_seen_seq"),
-                    F.col("w.p0").alias("first_seen_pos"),
-                ).alias("after"),
+            new_chunks = insert_delta(
+                winners.join(F.broadcast(matched), "ph", "left_anti"),
+                "ph", "w.ingest_seq",
+                F.col("w.ingest_seq").alias("first_seen_seq"),
+                F.col("w.p0").alias("first_seen_pos"),
             )
             self.seen.commit_delta(new_chunks, batch_id=batch_id)
-        finally:
-            chunks.unpersist()
 
     def accepted(self) -> DataFrame:
         """Span dedup accepts every arrival (transformed, not dropped):
