@@ -350,6 +350,10 @@ def test_empty_delta_commits_nothing(spark, tmp_path):
     v = tbl.latest_version()
     assert tbl.commit_delta(batch.where("op_seq < 0"), batch_id="b1") is None
     assert tbl.latest_version() == v
+    # a staged epoch whose table got no rows has no files dir at all
+    missing = str(tmp_path / "staging" / "table=t")
+    assert tbl.commit_delta_dir(missing, "b2", n_rows=0, schema_ddl="doc_id string") is None
+    assert tbl.latest_version() == v
     assert tbl.read().count() == 1  # chain still readable
 
 

@@ -293,10 +293,12 @@ CENTS3 = {0: [1000, 0, 0], 1: [-1000, 0, 0]}
 @given(rows=vecs, thr=st.sampled_from([0.3, 0.7, 0.95]))
 def test_semdedup_equals_rule_oracle(spark, rows, thr):
     """semdedup (fixed centroids) == the drop-iff-smaller-id-same-
-    cluster-near-dup rule for ANY vector set and threshold."""
+    cluster-near-dup rule for ANY vector set and threshold — with
+    PAIR_BLOCK=2, so every cluster of 3+ members spans several blocks."""
     import math
+    from unittest import mock
 
-    from yadex_spark.operators.similarity import semdedup
+    from yadex_spark.operators import similarity
 
     emb = spark.createDataFrame(
         [(i, list(v)) for i, v in rows], "vec_id long, embedding array<float>"
@@ -323,10 +325,11 @@ def test_semdedup_equals_rule_oracle(spark, rows, thr):
         )
         for i in q
     }
-    got = {
-        r["vec_id"]: (r["cluster"], r["keep"])
-        for r in semdedup(emb, threshold=thr, cents=CENTS3).collect()
-    }
+    with mock.patch.object(similarity, "PAIR_BLOCK", 2):
+        got = {
+            r["vec_id"]: (r["cluster"], r["keep"])
+            for r in similarity.semdedup(emb, threshold=thr, cents=CENTS3).collect()
+        }
     assert got == want
 
 

@@ -11,6 +11,7 @@ downstream jobs tail the lake the way the pipeline tails the oplog.
 from __future__ import annotations
 
 import datetime
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,9 +43,11 @@ def _changes(tbl, v_from, v_to=None):
     }
 
 
-@pytest.fixture()
-def two_batch_table(spark, tmp_path):
-    tbl = LakeTable(spark, str(tmp_path / "lake"))
+@pytest.fixture(scope="module")
+def _two_batch_lake(spark, tmp_path_factory):
+    """Built once per module; :func:`two_batch_table` hands each test
+    its own copy (the lake stores table-relative paths only)."""
+    tbl = LakeTable(spark, str(tmp_path_factory.mktemp("two_batch") / "lake"))
     v_a = _commit(spark, tbl, [
         (1, TS, "insert", "t", "a", ([1, 2], 2, "s1")),
         (2, TS, "insert", "t", "b", ([3], 1, "s1")),
@@ -57,7 +60,15 @@ def two_batch_table(spark, tmp_path):
         (7, TS, "insert", "t", "c", ([8], 1, "s2")),      # insert
         (8, TS, "delete", "t", "z", None),                # delete of absent key
     ], "B")
-    return tbl, v_a, v_b
+    return tbl.path, v_a, v_b
+
+
+@pytest.fixture()
+def two_batch_table(spark, tmp_path, _two_batch_lake):
+    template, v_a, v_b = _two_batch_lake
+    path = str(tmp_path / "lake")
+    shutil.copytree(template, path)
+    return LakeTable(spark, path), v_a, v_b
 
 
 def test_change_feed_classification(two_batch_table):

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import shutil
 
 import pytest
 
@@ -53,11 +54,13 @@ def _state(tbl, version=None):
     }
 
 
-@pytest.fixture()
-def chained(spark, tmp_path):
+@pytest.fixture(scope="module")
+def _chained_lake(spark, tmp_path_factory):
     """append (clone) + three deltas with updates, deletes, and a key
-    whose terminal op differs per delta — the steady-state chain."""
-    tbl = LakeTable(spark, str(tmp_path / "lake"))
+    whose terminal op differs per delta — the steady-state chain.  Built
+    once per module; :func:`chained` hands each test its own copy (the
+    lake stores table-relative paths only)."""
+    tbl = LakeTable(spark, str(tmp_path_factory.mktemp("chained") / "lake"))
     clone = spark.createDataFrame(
         [("a", [1], 1, "s0"), ("b", [2], 1, "s0"), ("c", [3], 1, "s0")],
         "doc_id string, tokens array<int>, n_tok int, source string",
@@ -75,7 +78,14 @@ def chained(spark, tmp_path):
         (14, TS, "insert", "t", "e", ([5], 1, "s3")),
         (15, TS, "update", "t", "a", ([9], 1, "s3")),
     ], "E3")
-    return tbl
+    return tbl.path
+
+
+@pytest.fixture()
+def chained(spark, tmp_path, _chained_lake):
+    path = str(tmp_path / "lake")
+    shutil.copytree(_chained_lake, path)
+    return LakeTable(spark, path)
 
 
 def test_minicompact_state_equality_and_chain_shrink(chained):

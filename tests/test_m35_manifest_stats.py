@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -26,16 +27,25 @@ from yadex_spark.operators.collapse import collapse
 from yadex_spark.sources.genlog import gen_oplog
 
 
-@pytest.fixture()
-def lake(spark, tmp_path):
-    tbl = LakeTable(spark, str(tmp_path / "lake"))
+@pytest.fixture(scope="module")
+def _two_delta_lake(spark, tmp_path_factory):
+    """Built once per module; :func:`lake` hands each test its own copy
+    (the lake stores table-relative paths only)."""
+    tbl = LakeTable(spark, str(tmp_path_factory.mktemp("two_delta") / "lake"))
     ev = gen_oplog(spark, n_events=5000, n_docs=1000, seed=3)
     half = 2500
     from pyspark.sql import functions as F
 
     tbl.commit_delta(collapse(ev.where(F.col("op_seq") < half)), batch_id="e0")
     tbl.commit_delta(collapse(ev.where(F.col("op_seq") >= half)), batch_id="e1")
-    return tbl
+    return tbl.path
+
+
+@pytest.fixture()
+def lake(spark, tmp_path, _two_delta_lake):
+    path = str(tmp_path / "lake")
+    shutil.copytree(_two_delta_lake, path)
+    return LakeTable(spark, path)
 
 
 def _no_footer(monkeypatch):

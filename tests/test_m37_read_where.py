@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -33,14 +34,23 @@ def _state(df):
     return sorted(map(tuple, df.select("doc_id", "n_tok", "source").collect()))
 
 
-@pytest.fixture()
-def lake(spark, tmp_path):
-    tbl = LakeTable(spark, str(tmp_path / "lake"))
+@pytest.fixture(scope="module")
+def _two_delta_lake(spark, tmp_path_factory):
+    """Built once per module; :func:`lake` hands each test its own copy
+    (the lake stores table-relative paths only)."""
+    tbl = LakeTable(spark, str(tmp_path_factory.mktemp("two_delta") / "lake"))
     ev = gen_oplog(spark, n_events=5000, n_docs=1000, seed=13)
     half = 2500
     tbl.commit_delta(collapse(ev.where(F.col("op_seq") < half)), batch_id="e0")
     tbl.commit_delta(collapse(ev.where(F.col("op_seq") >= half)), batch_id="e1")
-    return tbl
+    return tbl.path
+
+
+@pytest.fixture()
+def lake(spark, tmp_path, _two_delta_lake):
+    path = str(tmp_path / "lake")
+    shutil.copytree(_two_delta_lake, path)
+    return LakeTable(spark, path)
 
 
 def _boom_planning(monkeypatch):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import itertools
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -111,40 +112,53 @@ def test_simhash_pairs_banding_is_exact(docs):
         simhash_pairs(docs, bits=128, bands=1, max_hamming=0)
 
 
-def test_near_dup_pairs_bucketed_vs_exact(spark):
+def test_near_dup_pairs_bucketed_vs_exact(spark, monkeypatch):
     """Grid-bucketed near-dup returns exactly the exact-variant pairs
     within the 3x3 probed neighborhood (the documented candidate-set
-    restriction), a strict superset of the single-cell candidates."""
+    restriction), a strict superset of the single-cell candidates, with
+    every cos bit-equal to the JVM expression path — at the default
+    block size and with PAIR_BLOCK=2 (every cell splits into many block
+    pairs), and on a fixture where every vector lies in ONE grid cell
+    (the hot cell that must not need a fallback)."""
     import numpy as np
 
+    from yadex_spark.operators import similarity
     from yadex_spark.operators.similarity import (
         near_dup_pairs,
         near_dup_pairs_exact,
     )
 
     rng = np.random.RandomState(3)
-    vecs = rng.randn(40, 6).astype("float32") * 0.3
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(40)],
-        "vec_id long, embedding array<float>",
-    )
+    spread_vecs = rng.randn(40, 6).astype("float32") * 0.3
+    one_cell = spread_vecs.copy()
+    one_cell[:, :2] = np.abs(one_cell[:, :2]) % 0.24  # q in [0, 240]: cell (0, 0)
     cell = 250
-    exact = {(r["vec_a"], r["vec_b"]) for r in near_dup_pairs_exact(emb, 0.2).collect()}
-    got = {(r["vec_a"], r["vec_b"]) for r in near_dup_pairs(emb, 0.2, cell=cell).collect()}
-    single = {
-        (r["vec_a"], r["vec_b"])
-        for r in near_dup_pairs(emb, 0.2, cell=cell, probe=False).collect()
-    }
-    q = np.round(vecs.astype("float64") * 1000)
-    adjacent = {
-        (a, b)
-        for a, b in itertools.combinations(range(40), 2)
-        if abs(np.floor(q[a][0] / cell) - np.floor(q[b][0] / cell)) <= 1
-        and abs(np.floor(q[a][1] / cell) - np.floor(q[b][1] / cell)) <= 1
-    }
-    assert got == (exact & adjacent)
-    assert single <= got  # probing never loses pairs
-    assert got  # the fixture actually produces near-dups
+    for vecs, blocks in ((spread_vecs, (similarity.PAIR_BLOCK, 2)), (one_cell, (2,))):
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in vecs[i]]) for i in range(40)],
+            "vec_id long, embedding array<float>",
+        )
+        exact = {(r["vec_a"], r["vec_b"]): r["cos"]
+                 for r in near_dup_pairs_exact(emb, 0.2).collect()}
+        q = np.round(vecs.astype("float64") * 1000)
+        adjacent = {
+            (a, b)
+            for a, b in itertools.combinations(range(40), 2)
+            if abs(np.floor(q[a][0] / cell) - np.floor(q[b][0] / cell)) <= 1
+            and abs(np.floor(q[a][1] / cell) - np.floor(q[b][1] / cell)) <= 1
+        }
+        for block in blocks:
+            monkeypatch.setattr(similarity, "PAIR_BLOCK", block)
+            got = {(r["vec_a"], r["vec_b"]): r["cos"]
+                   for r in near_dup_pairs(emb, 0.2, cell=cell).collect()}
+            single = {
+                (r["vec_a"], r["vec_b"])
+                for r in near_dup_pairs(emb, 0.2, cell=cell, probe=False).collect()
+            }
+            assert got == {k: v for k, v in exact.items() if k in adjacent}
+            assert single <= set(got)  # probing never loses pairs
+            assert got  # the fixture actually produces near-dups
+    assert set(got) == set(exact)  # one cell: every exact pair is a candidate
 
 
 def test_adjacent_cell_probing_finds_boundary_pairs(spark):
@@ -414,39 +428,34 @@ def test_simhash_chunks_match_bitstring(spark):
             off += w
 
 
-def test_pair_arrow_paths_equal_sql(spark):
-    """The size-gated Arrow bucket verifiers (near_dup_pairs cell
-    groups, semdedup cluster groups) must emit BIT-identical rows to
-    the streaming SQL joins they gate over — including the float cos
-    values (exact int64 dot + correctly-rounded IEEE double ops on
-    both sides)."""
-    import hashlib
-
+def test_pair_operators_build_runs_no_spark_job(spark):
+    """Building near_dup_pairs and semdedup (given centroids) runs no
+    Spark job: the blocked verifier's per-key counts are an in-plan
+    aggregate, not a driver-side occupancy probe."""
     from yadex_spark.operators.similarity import near_dup_pairs, semdedup
 
-    vecs = []
-    for i in range(40):
-        h = hashlib.md5(f"v{i}".encode()).digest()
-        base = [((h[j % 16] * (j + 1)) % 1999 - 999) / 1000.0 for j in range(8)]
-        vecs.append((i, base))
-        # a close near-dup for every 4th vector
-        if i % 4 == 0:
-            vecs.append((100 + i, [x + 0.001 for x in base]))
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-
-    fast = {(r.vec_a, r.vec_b): r.cos
-            for r in near_dup_pairs(emb, threshold=0.3, cell=250).collect()}
-    slow = {(r.vec_a, r.vec_b): r.cos
-            for r in near_dup_pairs(emb, threshold=0.3, cell=250,
-                                    arrow_cell_max=0).collect()}
-    assert fast == slow and fast  # non-empty, bit-equal cos included
-
-    fast_s = {r.vec_id: (r.cluster, r.keep)
-              for r in semdedup(emb, k=4, threshold=0.3).collect()}
-    slow_s = {r.vec_id: (r.cluster, r.keep)
-              for r in semdedup(emb, k=4, threshold=0.3,
-                                arrow_cluster_max=0).collect()}
-    assert fast_s == slow_s and 0 in {v[1] for v in fast_s.values()}
+    emb = spark.createDataFrame(
+        [(i, [((i * 7 + j * 3) % 11 - 5) / 10.0 for j in range(4)]) for i in range(20)],
+        "vec_id long, embedding array<float>",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("pair-build", "build the pair operators")
+        near_dup_pairs(emb, threshold=0.3, cell=250)
+        semdedup(emb, threshold=0.3, cents={0: [500, 0, 0, 0], 1: [-500, 0, 0, 0]})
+        # the listener bus is FIFO: once a later job is visible, any job
+        # the build started is visible too
+        sc.setJobGroup("pair-sentinel", "sentinel")
+        spark.range(1).count()
+        deadline = time.time() + 60
+        while not tracker.getJobIdsForGroup("pair-sentinel") and time.time() < deadline:
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("pair-sentinel")
+        assert tracker.getJobIdsForGroup("pair-build") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_pack_sequences_shard_count_scales(spark):

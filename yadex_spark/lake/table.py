@@ -322,7 +322,14 @@ class LakeTable:
         into <lake>/_staging) commits each table's subdir this way, so T
         tables cost ONE Spark job, not T.  ``files_dir`` may be absolute;
         reads ``os.path.join`` it against the table root, which returns
-        absolute paths unchanged.  Idempotent by batch_id."""
+        absolute paths unchanged.  Idempotent by batch_id.
+
+        An empty delta (``n_rows == 0``) commits nothing and returns None
+        without burning a version: its files dir may not even exist
+        (a partitioned write emits no subdir for an empty partition),
+        and a manifest over it would chain an unreadable snapshot."""
+        if n_rows == 0:
+            return None
         if batch_id in self.committed_batch_ids():
             return None
         return self._commit_manifest("delta", batch_id, schema_ddl, n_rows, files_dir)

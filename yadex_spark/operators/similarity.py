@@ -104,78 +104,92 @@ def _probe_cells(df: DataFrame) -> DataFrame:
     )
 
 
-def _cell_pairs_arrow(probes: DataFrame, trues: DataFrame,
-                      threshold: float, out_schema: str,
-                      block: int = 8192) -> DataFrame:
-    """Bucket-grouped pair verify in ONE vectorized Arrow stage
-    (guide §4.2: let Spark do distribution, hand whole batches to
-    numpy): per (cx, cy) group, the probe-side and true-side member
-    vectors cross the JVM→Python boundary ONCE (9+1 rows per vector —
-    NOT once per candidate pair), and the |A|x|B| integer dot-product
-    matrix runs as block-chunked ``np.matmul`` over int64 (exact, no
-    float intermediate; blocks bound task memory).
+#: vectors per side in one verify group: a hot cell or cluster splits
+#: into ceil(n / PAIR_BLOCK) hash blocks per side, so one task holds
+#: ~PAIR_BLOCK x PAIR_BLOCK dot products whatever the skew
+PAIR_BLOCK = 2048
 
-    Bit-identical to the SQL verify: dot is exact int64; cos =
-    double(dot) / sqrt(double(na2) * double(nb2)) uses the same
-    correctly-rounded IEEE-754 double multiply/divide/sqrt the JVM
-    executes, so the emitted cos values hash equal.  zip_with's
-    unequal-length semantics (null product → null cos → dropped) are
-    replicated by pairing only equal-dimension vectors."""
+
+def _blocked_pairs(a: DataFrame, b: DataFrame, key: list[str],
+                   threshold: float) -> DataFrame:
+    """(vec_a, vec_b, cos) for every vec_a of ``a`` and vec_b of ``b``
+    that share ``key``, with vec_a < vec_b and cos >= threshold.  Both
+    sides carry (vec_id, q, n2, *key); rows with a null key never pair.
+
+    Hot-key splitting: per-key side counts come from a narrow in-plan
+    aggregate (one row per key, broadcast); each side's rows hash into
+    ceil(n_side / PAIR_BLOCK) blocks and are copied to every block of
+    the other side, so each candidate pair meets in exactly one
+    (key, block_a, block_b) group.  A group's vectors cross the
+    JVM→Python boundary once and its dot matrix is one exact int64
+    ``np.matmul`` — memory is bounded by the block, not the key.
+
+    Bit-identical to the SQL expression form
+    (:func:`near_dup_pairs_exact`): cos = double(dot) /
+    sqrt(double(na2) * double(nb2)) uses the same correctly-rounded
+    IEEE-754 ops the JVM executes, and zip_with's unequal-length
+    semantics (null product → null cos → dropped) are replicated by
+    pairing only equal-dimension vectors."""
     import numpy as np
     import pandas as pd
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_a, out_b, out_c = [], [], []
-        a = pdf[pdf["side"] == 0]
-        b = pdf[pdf["side"] == 1]
-        if len(a) and len(b):
-            adim = a["q"].map(len)
-            bdim = b["q"].map(len)
-            for dim in np.intersect1d(adim.unique(), bdim.unique()):
-                asub = a[adim == dim]
-                bsub = b[bdim == dim]
-                qa = np.stack(asub["q"].to_numpy()).astype(np.int64)
-                qb = np.stack(bsub["q"].to_numpy()).astype(np.int64)
-                ia = asub["vec_id"].to_numpy()
-                ib = bsub["vec_id"].to_numpy()
-                na = asub["n2"].to_numpy().astype(np.float64)
-                nb = bsub["n2"].to_numpy().astype(np.float64)
-                for lo in range(0, len(qb), block):
-                    hi = min(lo + block, len(qb))
-                    dots = qa @ qb[lo:hi].T  # exact int64
-                    cos = dots.astype(np.float64) / np.sqrt(
-                        na[:, None] * nb[None, lo:hi]
-                    )
-                    ai, bi = np.nonzero(
-                        (ia[:, None] < ib[None, lo:hi]) & (cos >= threshold)
-                    )
-                    out_a.append(ia[ai])
-                    out_b.append(ib[lo:hi][bi])
-                    out_c.append(cos[ai, bi])
-        if not out_a:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []}).astype(
-                {"vec_a": "int64", "vec_b": "int64", "cos": "float64"}
-            )
-        return pd.DataFrame({
-            "vec_a": np.concatenate(out_a),
-            "vec_b": np.concatenate(out_b),
-            "cos": np.concatenate(out_c),
-        })
+        out = [pd.DataFrame({"vec_a": np.zeros(0, np.int64),
+                             "vec_b": np.zeros(0, np.int64), "cos": np.zeros(0)})]
+        sa = pdf[pdf["side"] == 0]
+        sb = pdf[pdf["side"] == 1]
+        adim = sa["q"].map(len)
+        bdim = sb["q"].map(len)
+        for dim in np.intersect1d(adim.unique(), bdim.unique()):
+            xa = sa[adim == dim]
+            xb = sb[bdim == dim]
+            ia = xa["vec_id"].to_numpy()
+            ib = xb["vec_id"].to_numpy()
+            dots = (np.stack(xa["q"].to_numpy()).astype(np.int64)
+                    @ np.stack(xb["q"].to_numpy()).astype(np.int64).T)
+            na = xa["n2"].to_numpy().astype(np.float64)
+            nb = xb["n2"].to_numpy().astype(np.float64)
+            cos = dots.astype(np.float64) / np.sqrt(na[:, None] * nb[None, :])
+            ai, bi = np.nonzero((ia[:, None] < ib[None, :]) & (cos >= threshold))
+            out.append(pd.DataFrame({"vec_a": ia[ai], "vec_b": ib[bi], "cos": cos[ai, bi]}))
+        return pd.concat(out, ignore_index=True)
 
-    both = probes.withColumn("side", F.lit(0)).unionByName(
-        trues.withColumn("side", F.lit(1))
-    ).where(F.col("cx").isNotNull() & F.col("cy").isNotNull())
-    return both.groupBy("cx", "cy").applyInPandas(verify, out_schema)
+    cols = ["vec_id", "q", "n2", *key]
+    both = a.select(*cols, F.lit(0).alias("side")).unionByName(
+        b.select(*cols, F.lit(1).alias("side"))
+    )
+    counts = both.groupBy(*key).agg(
+        F.ceil(F.sum(1 - F.col("side")) / PAIR_BLOCK).alias("_nba"),
+        F.ceil(F.sum("side") / PAIR_BLOCK).alias("_nbb"),
+    ).where((F.col("_nba") > 0) & (F.col("_nbb") > 0))
+    is_a = F.col("side") == 0
+    # own block by hash; the other side's block id ranges over all its blocks
+    own = F.pmod(F.xxhash64("vec_id"), F.when(is_a, F.col("_nba")).otherwise(F.col("_nbb")))
+    other = F.explode(F.sequence(
+        F.lit(0).cast("long"), F.when(is_a, F.col("_nbb")).otherwise(F.col("_nba")) - 1
+    ))
+    both = both.join(F.broadcast(counts), key).select(
+        *cols, "side", own.alias("_own"), other.alias("_other")
+    ).select(
+        *cols, "side",
+        F.when(is_a, F.col("_own")).otherwise(F.col("_other")).alias("_ba"),
+        F.when(is_a, F.col("_other")).otherwise(F.col("_own")).alias("_bb"),
+    )
+    id_t = dict(a.dtypes)["vec_id"]
+    return both.groupBy(*key, "_ba", "_bb").applyInPandas(
+        verify, f"vec_a {id_t}, vec_b {id_t}, cos double"
+    )
 
 
 def near_dup_pairs(emb: DataFrame, threshold: float = 0.45, cell: int = 250,
-                   probe: bool = True,
-                   arrow_cell_max: int | None = None) -> DataFrame:
+                   probe: bool = True) -> DataFrame:
     """Embedding-cosine near-dup pairs, grid-bucketed candidates.
 
-    Candidates are vectors sharing a grid cell (equi-join Catalyst can
-    shuffle/broadcast; AQE splits hot cells), exact-verified by cosine.
-    Round 1 shipped an all-pairs range join here — O(n²) pair space,
+    Candidates are vectors sharing a grid cell over the first two
+    quantized dims, exact-verified by cosine in the blocked Arrow
+    verifier (:func:`_blocked_pairs`): a hot cell splits into
+    PAIR_BLOCK-sized blocks instead of one unbounded group.  Round 1
+    shipped an all-pairs range join here — O(n²) pair space,
     impossible at 10^9 vectors; this is the LSH-bucket shape the
     flagship dedup paths already use.
 
@@ -185,52 +199,11 @@ def near_dup_pairs(emb: DataFrame, threshold: float = 0.45, cell: int = 250,
     true cell, and B's cell occurs once in A's distinct probe set.  For
     small-N exactness checks use :func:`near_dup_pairs_exact`.
 
-    ``arrow_cell_max`` (size gate, default 200k via env
-    YADEX_PAIR_ARROW_CELL_MAX, 0 disables): when a narrow runtime
-    occupancy probe shows every cell group (9 probe replicas + 1 true
-    row per vector) fits the cap, the pair verify runs as the
-    bucket-grouped Arrow/numpy stage (:func:`_cell_pairs_arrow`) —
-    vectors cross the Python boundary once per cell instead of
-    materializing one JVM row PER CANDIDATE PAIR (measured 1.84M
-    candidate rows for 2 000 vectors at sf0.1: the per-pair expression
-    stream was the whole cost).  Oversized cells fall back to the
-    streaming SQL join below, which never materializes a group — the
-    same runtime-size-gated pattern as AQE's broadcast decision and
-    dedup_clusters' driver union-find.  Both paths emit bit-identical
-    (vec_a, vec_b, cos) rows."""
-    p = _with_cell(_prepared(emb), cell)
-    if arrow_cell_max is None:
-        import os as _os
-
-        arrow_cell_max = int(
-            _os.environ.get("YADEX_PAIR_ARROW_CELL_MAX", str(200_000))
-        )
-    if probe and arrow_cell_max > 0:
-        occ = (
-            p.groupBy("cx", "cy").count().agg(F.max("count")).first()[0]
-        )
-        if occ is not None and occ * 10 <= arrow_cell_max:
-            base = p.select("vec_id", "q", "n2", "cx", "cy")
-            id_t = dict(p.dtypes)["vec_id"]
-            return _cell_pairs_arrow(
-                _probe_cells(base), base, threshold,
-                f"vec_a {id_t}, vec_b {id_t}, cos double",
-            )
-    a = p.select(
-        F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"),
-        F.col("n2").alias("na2"), "cx", "cy",
-    )
-    if probe:
-        a = _probe_cells(a)
-    a = _spread(a, "cx", "cy")
-    b = p.select(
-        F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"),
-        F.col("n2").alias("nb2"), "cx", "cy",
-    )
-    pairs = a.join(b, ["cx", "cy"]).where(F.col("vec_a") < F.col("vec_b")).withColumn(
-        "cos", _cosine(_dot(F.col("qa"), F.col("qb")), F.col("na2"), F.col("nb2"))
-    )
-    return pairs.where(F.col("cos") >= threshold).select("vec_a", "vec_b", "cos")
+    Output: (vec_a, vec_b, cos) with vec_a < vec_b and cos >= threshold;
+    cos is bit-identical to the SQL expression path."""
+    # one quantize pass: the block counts and both sides read this frame
+    p = _with_cell(_prepared(emb), cell).localCheckpoint(eager=False)
+    return _blocked_pairs(_probe_cells(p) if probe else p, p, ["cx", "cy"], threshold)
 
 
 def lsh_planes(n_planes: int, dim: int) -> list[list[int]]:
@@ -247,6 +220,16 @@ def lsh_planes(n_planes: int, dim: int) -> list[list[int]]:
         ]
         for i in range(n_planes)
     ]
+
+
+def lsh_signature(q: Column, planes: list[list[int]]) -> Column:
+    """Random-hyperplane signature of a quantized vector: one '1'/'0'
+    character per plane, sign(q · w_i) in exact integer math (a zero
+    dot counts as '1')."""
+    return F.concat(*[
+        F.when(_dot(q, F.array(*[F.lit(w) for w in plane])) >= 0, "1").otherwise("0")
+        for plane in planes
+    ])
 
 
 def cosine_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
@@ -288,14 +271,9 @@ def cosine_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
     cos ≈ 0.9, so the scale config is a NEAR-DUPLICATE detector (its
     dedup use), not a moderate-similarity retriever; use
     :func:`ivf_topk` for that."""
-    planes = lsh_planes(n_planes, dim)
-    p = _prepared(emb)
-    bits = [
-        F.when(_dot(F.col("q"), F.array(*[F.lit(w) for w in plane])) >= 0, "1")
-        .otherwise("0")
-        for plane in planes
-    ]
-    sig = p.withColumn("s", F.concat(*bits))
+    sig = _prepared(emb).withColumn(
+        "s", lsh_signature(F.col("q"), lsh_planes(n_planes, dim))
+    )
     r = n_planes // bands
     banded = sig.select(
         "vec_id", "q", "n2",
@@ -349,11 +327,13 @@ def cosine_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
 
 
 def near_dup_pairs_exact(emb: DataFrame, threshold: float = 0.45) -> DataFrame:
-    """All-pairs variant — O(n²), for small-N recall verification only."""
+    """All-pairs variant — O(n²), for small-N recall verification only.
+    One side is broadcast: a CartesianProduct would re-read both inputs
+    once per partition PAIR (n_part² tasks)."""
     p = _prepared(emb)
     a = p.select(F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("n2").alias("na2"))
     b = p.select(F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("n2").alias("nb2"))
-    pairs = a.join(b, F.col("vec_a") < F.col("vec_b")).withColumn(
+    pairs = a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b")).withColumn(
         "cos", _cosine(_dot(F.col("qa"), F.col("qb")), F.col("na2"), F.col("nb2"))
     )
     return pairs.where(F.col("cos") >= threshold).select("vec_a", "vec_b", "cos")
@@ -616,57 +596,10 @@ def ivf_topk(emb: DataFrame, k: int = 8, iters: int = 2, n_queries: int = 8,
     )
 
 
-def _cluster_dropped_arrow(pairable: DataFrame, threshold: float,
-                           id_type: str, block: int = 1024) -> DataFrame:
-    """Per-cluster SemDeDup drop decision as ONE vectorized Arrow
-    stage: each cluster's member vectors cross the Python boundary
-    once, and "has a smaller-id neighbor with cos >= threshold" runs
-    as block-chunked exact int64 ``np.matmul`` + IEEE-double cosine —
-    the same bit-identical arithmetic argument as
-    :func:`_cell_pairs_arrow`, upper-triangular over the id order.
-    Cross-dimension pairs contribute nothing (SQL: null cos), so each
-    equal-dimension subset is verified independently.  Output: the
-    distinct dropped vec_ids."""
-    import numpy as np
-    import pandas as pd
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        dims = pdf["q"].map(len)
-        for dim in dims.unique():
-            sub = pdf[dims == dim].sort_values("vec_id", kind="stable")
-            n = len(sub)
-            if n < 2:
-                continue
-            q = np.stack(sub["q"].to_numpy()).astype(np.int64)
-            ids = sub["vec_id"].to_numpy()
-            norms = sub["n2"].to_numpy().astype(np.float64)
-            dropped = np.zeros(n, dtype=bool)
-            for lo in range(0, n, block):
-                hi = min(lo + block, n)
-                cos = (q @ q[lo:hi].T).astype(np.float64) / np.sqrt(
-                    norms[:, None] * norms[None, lo:hi]
-                )
-                # i strictly before j in id order (ids are unique)
-                mask = np.arange(n)[:, None] < np.arange(lo, hi)[None, :]
-                dropped[lo:hi] |= ((cos >= threshold) & mask).any(axis=0)
-            out.append(ids[dropped])
-        if not out:
-            return pd.DataFrame({"vec_id": []}).astype({"vec_id": "int64"})
-        return pd.DataFrame({"vec_id": np.concatenate(out)})
-
-    return (
-        pairable.select("cluster", "vec_id", "q", "n2")
-        .groupBy("cluster")
-        .applyInPandas(verify, f"vec_id {id_type}")
-    )
-
-
 def semdedup(emb: DataFrame, k: int = 8, iters: int = 2,
              threshold: float = 0.45,
              cents: dict[int, list[int]] | None = None,
-             max_cluster: int | None = None,
-             arrow_cluster_max: int | None = None) -> DataFrame:
+             max_cluster: int | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup
     via embedding clusters — every vector labeled keep/drop.
 
@@ -690,28 +623,28 @@ def semdedup(emb: DataFrame, k: int = 8, iters: int = 2,
     later one — exactly the band-registry semantics of the streaming
     near-dup member, `streaming/neardup_ingest.py`).
 
-    ``max_cluster``: optional hot-cluster guard — clusters with more
-    members than this generate no pairs (their members all keep), the
-    standard LSH hot-bucket trade; None (gate/default) disables so a
-    SQL oracle can mirror the query without the cap.
-
-    ``arrow_cluster_max`` (default 32k via YADEX_PAIR_ARROW_CLUSTER_MAX,
-    0 disables): when a narrow occupancy probe shows every cluster fits
-    the cap, the drop decision runs as the bucket-grouped Arrow/numpy
-    stage (:func:`_cluster_dropped_arrow`) — bit-identical, vectors
-    cross the Python boundary once per cluster instead of one JVM row
-    per candidate pair; oversized clusters fall back to the streaming
-    SQL join (the near_dup_pairs size-gate pattern).
+    Pairs are verified by the blocked Arrow verifier
+    (:func:`_blocked_pairs`) keyed on the cluster id: a hot cluster
+    splits into PAIR_BLOCK-sized blocks, so task memory stays bounded
+    at any cluster size.  ``max_cluster``: optional hot-cluster guard
+    on pair WORK — clusters with more members than this generate no
+    pairs (their members all keep), the standard LSH hot-bucket trade;
+    None (gate/default) disables so a SQL oracle can mirror the query
+    without the cap.
 
     Output: (vec_id, cluster, keep) for EVERY input vector — drops are
     attributable, all-integer so the oracle matches exactly.
     """
-    # spread before the per-row k x dim argmin: CPU-heavy tiny-by-bytes
-    # rows, same guard as training/ivf_topk; checkpointed and shared
-    # with training (one corpus quantize pass)
-    p = _spread(_prepared(emb), "vec_id").localCheckpoint(eager=False)
     if cents is None:
+        # spread before training's per-row k x dim argmin passes (CPU-
+        # heavy tiny-by-bytes rows, same guard as ivf_topk), checkpointed
+        # and shared with the assignment below: one corpus quantize pass
+        p = _spread(_prepared(emb), "vec_id").localCheckpoint(eager=False)
         cents = train_kmeans(emb, k, iters, prepared=p)
+    else:
+        # no exchange under the checkpoint: with given centroids,
+        # building the query runs no Spark job
+        p = _prepared(emb)
     # the assignment itself also fans out (hot-cluster guard, both
     # pair-join sides, and the final keep/drop join-back) — barrier it
     # so the k x dim argmin runs once per vector, not once per consumer
@@ -731,42 +664,8 @@ def semdedup(emb: DataFrame, k: int = 8, iters: int = 2,
         pairable = assigned.join(small, "cluster", "left_semi")
     else:
         pairable = assigned
-    if arrow_cluster_max is None:
-        import os as _os
-
-        arrow_cluster_max = int(
-            _os.environ.get("YADEX_PAIR_ARROW_CLUSTER_MAX", str(32_768))
-        )
-    if arrow_cluster_max > 0:
-        occ = (
-            pairable.groupBy("cluster").count().agg(F.max("count")).first()
-        )[0]
-        if occ is not None and occ <= arrow_cluster_max:
-            dropped = _cluster_dropped_arrow(
-                pairable, threshold, dict(pairable.dtypes)["vec_id"]
-            ).withColumn("_drop", F.lit(1))
-            return (
-                assigned.join(dropped, "vec_id", "left")
-                .select(
-                    "vec_id", "cluster",
-                    F.when(F.col("_drop").isNull(), F.lit(1))
-                    .otherwise(F.lit(0)).alias("keep"),
-                )
-            )
-    a = pairable.select(
-        F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"),
-        F.col("n2").alias("na2"), "cluster",
-    )
-    b = pairable.select(
-        F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"),
-        F.col("n2").alias("nb2"), "cluster",
-    )
     dropped = (
-        a.join(b, "cluster")
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos", _cosine(_dot(F.col("qa"), F.col("qb")),
-                                   F.col("na2"), F.col("nb2")))
-        .where(F.col("cos") >= threshold)
+        _blocked_pairs(pairable, pairable, ["cluster"], threshold)
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("_drop", F.lit(1))

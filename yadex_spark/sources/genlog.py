@@ -28,6 +28,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from yadex_spark.operators.common import persisted
 from yadex_spark.schema import MAX_TOKENS, VOCAB_SIZE
 
 BASE_TS = "2026-01-01 00:00:00"
@@ -222,45 +223,48 @@ def write_oplog_bytes(
     estimate gets right).  ``maxFilesPerTrigger=1`` then gives triggers
     that never exceed the budget by more than one file's rounding —
     Spark's own documented sizing rule for file-source byte budgets.
-    Returns the number of files written."""
+    Returns the number of files written.  ``df`` is cached for the
+    call: each drop is one filtered pass over it, and a generator
+    frame would otherwise be regenerated once per drop."""
     import shutil
 
-    if bounds is None:
-        r = df.agg(F.min("op_seq"), F.max("op_seq")).first()
-        bounds = (r[0], r[1])
-    mn, mx = bounds
-    if mn is None or mx is None:
-        return 0  # empty feed: nothing to drop
+    with persisted(df):
+        if bounds is None:
+            r = df.agg(F.min("op_seq"), F.max("op_seq")).first()
+            bounds = (r[0], r[1])
+        mn, mx = bounds
+        if mn is None or mx is None:
+            return 0  # empty feed: nothing to drop
 
-    def write_span(lo: int, hi: int, dest: str, first: bool) -> None:
-        # repartition(1): one file per drop WITHOUT collapsing the
-        # generating stage's parallelism (coalesce(1) would)
-        df.where((F.col("op_seq") >= lo) & (F.col("op_seq") < hi)).repartition(
-            1
-        ).write.mode("overwrite" if first else "append").parquet(dest)
+        def write_span(lo: int, hi: int, dest: str, first: bool) -> None:
+            # repartition(1): one file per drop WITHOUT collapsing the
+            # generating stage's parallelism (coalesce(1) would)
+            df.where((F.col("op_seq") >= lo) & (F.col("op_seq") < hi)).repartition(
+                1
+            ).write.mode("overwrite" if first else "append").parquet(dest)
 
-    # pilots go to a throwaway dir: they only measure bytes/row, so the
-    # REAL feed's every file (including the first) respects the budget.
-    # TWO passes: per-row on-disk cost is strongly size-dependent (a
-    # 200-row file amortizes encoding/dictionary/footer overhead far
-    # worse than a 4096-row one — measured ~1.8x), so the second pilot
-    # re-measures AT the estimated chunk size and converges on it.
-    pilot_dir = f"{path}.pilot-{os.getpid()}"
-    rows = min(pilot_rows, mx + 1 - mn)
-    try:
-        for _ in range(2):
-            write_span(mn, mn + rows, pilot_dir, first=True)
-            bytes_per_row = max(1.0, _dir_parquet_bytes(pilot_dir) / rows)
-            rows = max(1, min(int(chunk_bytes / bytes_per_row), mx + 1 - mn))
-    finally:
-        # the pilot dir is pure measurement scratch — never leave it
-        # behind for a feed reader to mistake for a drop
-        shutil.rmtree(pilot_dir, ignore_errors=True)
-    rows_per_chunk = rows
-    cur = mn
-    n_files = 0
-    while cur <= mx:
-        write_span(cur, cur + rows_per_chunk, path, first=(n_files == 0))
-        cur += rows_per_chunk
-        n_files += 1
-    return n_files
+        # pilots go to a throwaway dir: they only measure bytes/row, so the
+        # REAL feed's every file (including the first) respects the budget.
+        # TWO passes: per-row on-disk cost is strongly size-dependent (a
+        # 200-row file amortizes encoding/dictionary/footer overhead far
+        # worse than a 4096-row one — measured ~1.8x), so the second pilot
+        # re-measures AT the estimated chunk size and converges on it.
+        pilot_dir = f"{path}.pilot-{os.getpid()}"
+        rows = min(pilot_rows, mx + 1 - mn)
+        try:
+            for _ in range(2):
+                write_span(mn, mn + rows, pilot_dir, first=True)
+                bytes_per_row = max(1.0, _dir_parquet_bytes(pilot_dir) / rows)
+                rows = max(1, min(int(chunk_bytes / bytes_per_row), mx + 1 - mn))
+        finally:
+            # the pilot dir is pure measurement scratch — never leave it
+            # behind for a feed reader to mistake for a drop
+            shutil.rmtree(pilot_dir, ignore_errors=True)
+        rows_per_chunk = rows
+        cur = mn
+        n_files = 0
+        while cur <= mx:
+            write_span(cur, cur + rows_per_chunk, path, first=(n_files == 0))
+            cur += rows_per_chunk
+            n_files += 1
+        return n_files

@@ -27,7 +27,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yadex_spark.operators.similarity import _dot, lsh_planes, quantized
+from yadex_spark.operators.similarity import lsh_planes, lsh_signature, quantized
 from yadex_spark.streaming.neardup_ingest import NearDupIngest
 
 #: feed schema for the embedding variant
@@ -53,13 +53,10 @@ class EmbedDedupIngest(NearDupIngest):
         cosine_lsh_pairs signature, keyed by arrival offset)."""
         if self._planes is None:
             self._planes = lsh_planes(self.n_planes, self.dim)
-        q = quantized(F.col("embedding"))
-        bits = [
-            F.when(_dot(q, F.array(*[F.lit(w) for w in plane])) >= 0, "1")
-            .otherwise("0")
-            for plane in self._planes
-        ]
-        sig = batch.select("ingest_seq", F.concat(*bits).alias("s"))
+        sig = batch.select(
+            "ingest_seq",
+            lsh_signature(quantized(F.col("embedding")), self._planes).alias("s"),
+        )
         r = self.n_planes // self.bands
         return sig.select(
             "ingest_seq",

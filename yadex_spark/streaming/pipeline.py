@@ -391,14 +391,12 @@ class CdcPipeline:
                 tbl.commit_truncate(
                     batch_id=f"{scope}/e{epoch_id}-trunc", trunc_seq=barriers[t]
                 )
-            n = st[f"n_{i}"]
-            if n:
-                tbl.commit_delta_dir(
-                    os.path.join(staging, f"table={t}"),
-                    batch_id=f"{scope}/e{epoch_id}",
-                    n_rows=int(n),
-                    schema_ddl=ddl,
-                )
+            tbl.commit_delta_dir(
+                os.path.join(staging, f"table={t}"),
+                batch_id=f"{scope}/e{epoch_id}",
+                n_rows=int(st[f"n_{i}"] or 0),
+                schema_ddl=ddl,
+            )
             lineage_rows.append(
                 dict(
                     batch_id=epoch_id,
