@@ -297,6 +297,26 @@ def test_concurrent_writers_cannot_claim_one_version(spark, tmp_path):
     ids = [s.batch_id for s in tbl.snapshots() if s.batch_id]
     assert len(ids) == len(set(ids)) == 33
 
+    # every writer replays ONE epoch: the claim decides "already
+    # committed" from the same log parse that yields its version, so a
+    # writer that loses the O_EXCL race cannot retry the batch id into
+    # a second version
+    def replay(w, bid):
+        start.wait()
+        w.commit_delta_dir(rel, bid, 1, "doc_id string")
+
+    for r in range(5):
+        threads = [
+            threading.Thread(target=replay, args=(w, f"same-epoch-{r}"))
+            for w in writers
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        ids = [s.batch_id for s in tbl.snapshots()]
+        assert ids.count(f"same-epoch-{r}") == 1
+
 
 def test_lineage_stats(oplog):
     stats = batch_stats(oplog.where("op != 'drop'"))

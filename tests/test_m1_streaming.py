@@ -356,6 +356,16 @@ def test_byte_bounded_feed_drops(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == n
     assert back.select("op_seq").distinct().count() == n  # no dup/loss
+    # the file source reads a feed in mtime order: drops must be
+    # op_seq-disjoint and ascending in that order
+    import pyarrow.parquet as pq
+
+    by_mtime = sorted(files, key=lambda f: os.path.getmtime(os.path.join(path, f)))
+    spans = []
+    for f in by_mtime:
+        seqs = pq.read_table(os.path.join(path, f), columns=["op_seq"])["op_seq"].to_pylist()
+        spans.append((min(seqs), max(seqs)))
+    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
 
 
 def test_rolling_events_per_sec(spark, tmp_path):

@@ -180,6 +180,9 @@ def test_logical_across_compaction_falls_back_correctly(spark, tmp_path):
 
 def test_fresh_physical_replica_of_vacuumed_source(spark, tmp_path):
     src = _build_source(spark, tmp_path / "src")
+    # a lagging replica, bookmarked at v1: v2's files vanish below
+    lag = LakeReplicator(src, LakeTable(spark, str(tmp_path / "lag")), mode="physical")
+    assert lag.sync(v_to=1) == 1
     src.compact(min_live_seq=99)
     _commit(spark, src, [
         (9, TS, "insert", "t", "k", ([3], 1, "s1")),
@@ -189,6 +192,8 @@ def test_fresh_physical_replica_of_vacuumed_source(spark, tmp_path):
     rep = LakeReplicator(src, dst, mode="physical")
     assert rep.sync() > 0
     assert _state(dst) == _state(src)
+    assert lag.sync() == 2  # the compact and C; never the vacuumed v2
+    assert _state(lag.target) == _state(src)
 
 
 def test_second_hop_cascade(spark, tmp_path):

@@ -26,6 +26,7 @@ from __future__ import annotations
 import datetime
 import os
 import shutil
+import time
 
 import pytest
 
@@ -601,3 +602,33 @@ def test_meta_checkpoint_with_replication_and_minicompact(spark, chained, tmp_pa
     assert rep.sync() > 0
     assert _state(target) == _state(chained)
     assert rep.sync() == 0
+
+
+def test_ordering_capacity_checked_before_any_job(spark, chained, monkeypatch):
+    """Every LWW read packs ``_seq << ORD_VERSION_BITS | rank`` through
+    one shared scan, whose capacity check runs before any file is read:
+    with the rank field shrunk to 1 bit, the clone + 3 deltas chain
+    overflows it in read(), lookup(), compact_minor() and
+    table_changes(0), and none of them starts a Spark job."""
+    monkeypatch.setattr(LakeTable, "ORD_VERSION_BITS", 1)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("ord-cap", "ordering capacity check")
+        for call in (chained.read, lambda: chained.lookup(["a"]),
+                     chained.compact_minor, lambda: chained.table_changes(0)):
+            with pytest.raises(RuntimeError, match="tiebreak capacity"):
+                call()
+        # the listener bus is FIFO: once a later job is visible, any job
+        # the calls started is visible too
+        sc.setJobGroup("ord-cap-sentinel", "sentinel")
+        spark.range(1).count()
+        deadline = time.time() + 60
+        while not tracker.getJobIdsForGroup("ord-cap-sentinel") and time.time() < deadline:
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("ord-cap-sentinel")
+        assert tracker.getJobIdsForGroup("ord-cap") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [s.action for s in chained.snapshots()] == ["append", "delta", "delta", "delta"]

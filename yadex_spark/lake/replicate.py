@@ -38,7 +38,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from .table import LakeTable, Snapshot
+from .table import LakeTable, Snapshot, live_snapshots
 
 
 class LakeReplicator:
@@ -89,29 +89,14 @@ class LakeReplicator:
 
     def _sync_physical(self, v_from: int, v_to: int) -> int:
         snaps = [s for s in self.source.snapshots() if s.version <= v_to]
-        # a source minor compaction (lake/table.py compact_minor) may
-        # have replaced — and vacuum may have deleted — the delta files
-        # of the versions it subsumes: never replay a subsumed delta,
-        # its collapsed rows travel inside the minicompact instead
-        dead: set[int] = set()
-        for s in snaps:
-            if s.action == "minicompact" and s.subsumes:
-                dead.update(s.subsumes)
-        if v_from == 0:
-            # fresh target: start at the source's active-chain boundary —
-            # snapshots behind the last full truncate / compact may be
-            # vacuumed (files gone) and are unreachable anyway.  The
-            # boundary snapshot itself (a compact) is the new base.
-            start = 0
-            for i, s in enumerate(snaps):
-                if s.action == "truncate" and s.trunc_seq is None:
-                    start = i + 1
-                elif s.action == "compact":
-                    start = i
-            todo = [s for s in snaps[start:] if s.version not in dead]
-        else:
-            todo = [s for s in snaps
-                    if s.version > v_from and s.version not in dead]
+        # replay the source's live chain past the bookmark: snapshots
+        # behind the last full truncate / compact may be vacuumed (files
+        # gone) and are dead anyway — that boundary snapshot resets the
+        # target's chain too.  A source minor compaction (compact_minor)
+        # may have replaced — and vacuum deleted — the delta files of
+        # the versions it subsumes: never replay a subsumed delta, its
+        # collapsed rows travel inside the minicompact instead
+        todo = [s for s in live_snapshots(snaps) if s.version > v_from]
         n = 0
         for s in todo:
             n += self._apply_snapshot(s, v_from)
@@ -143,26 +128,25 @@ class LakeReplicator:
         if bid in self.target.committed_batch_ids():
             return 0
         if s.files_dir is None:  # truncate (full wipe or seq barrier)
-            self.target._commit_manifest(
+            claimed = self.target._commit_manifest(
                 s.action, bid, s.schema_ddl, 0, None, trunc_seq=s.trunc_seq
             )
-            return 1
-        if (s.action == "minicompact" and s.subsumes
+        elif (s.action == "minicompact" and s.subsumes
                 and all(v <= v_from for v in s.subsumes)):
-            self.target._commit_manifest(
+            claimed = self.target._commit_manifest(
                 "minicompact", bid, s.schema_ddl, 0, None
             )
-            return 1
-        df = self.source.spark.read.parquet(
-            os.path.join(self.source.path, s.files_dir)
-        )
-        rel, n = self.target._write_data(
-            df, self.target.latest_version() + 1, n_rows=s.n_rows
-        )
-        self.target._commit_manifest(
-            s.action, bid, s.schema_ddl, n, rel, trunc_seq=s.trunc_seq
-        )
-        return 1
+        else:
+            df = self.source.spark.read.parquet(
+                os.path.join(self.source.path, s.files_dir)
+            )
+            rel, n = self.target._write_data(
+                df, self.target.latest_version() + 1, n_rows=s.n_rows
+            )
+            claimed = self.target._commit_manifest(
+                s.action, bid, s.schema_ddl, n, rel, trunc_seq=s.trunc_seq
+            )
+        return int(claimed is not None)  # None: a racing sync took the batch id
 
     def _sync_logical(self, v_from: int, v_to: int) -> int:
         """One collapsed delta from the change feed.  ``op_seq`` is the
@@ -213,14 +197,7 @@ class LakeReplicator:
         """True iff reading the source AT ``v_from`` would touch a data
         dir that no longer exists (vacuum reclaimed history the change
         feed's rewrite fallback needs).  Driver-side stat only."""
-        if v_from == 0:
-            return False  # v_from=0 reads nothing
-        snaps, _ = self.source._active_chain(v_from)
-        return any(
-            s.files_dir is not None
-            and not os.path.isdir(os.path.join(self.source.path, s.files_dir))
-            for s in snaps
-        )
+        return bool(self.source._vacuumed(self.source._active_chain(v_from)[0]))
 
     # ---------- verification hook ----------
 

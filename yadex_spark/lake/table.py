@@ -48,6 +48,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import threading
 import time
 from dataclasses import dataclass
@@ -210,8 +211,12 @@ class LakeTable:
                          schema_ddl: str, n_rows: int, files_dir: str | None,
                          trunc_seq: int | None = None,
                          subsumes: list | None = None,
-                         stats_cols: list | None = None) -> int:
-        """Atomically claim the next version (O_EXCL + rename)."""
+                         stats_cols: list | None = None) -> int | None:
+        """Atomically claim the next version (O_EXCL + rename), or return
+        None when ``batch_id`` is already committed.  Both answers come
+        from ONE :meth:`snapshots` parse per attempt, so a writer that
+        loses the O_EXCL race re-checks the batch id before it retries:
+        two writers replaying one epoch commit it exactly once."""
         meta_dir = os.path.join(self.path, META)
         # per-file doc_id bounds captured ONCE here, while the freshly
         # written footers are local and hot — every later probe read
@@ -229,7 +234,10 @@ class LakeTable:
                     and (st := _collect_file_stats(full, key=c)) is not None
                 } or None
         while True:
-            version = self.latest_version() + 1
+            snaps = self.snapshots()
+            if batch_id is not None and any(x.batch_id == batch_id for x in snaps):
+                return None
+            version = (snaps[-1].version if snaps else 0) + 1
             manifest = dict(
                 version=version, action=action, batch_id=batch_id,
                 schema_ddl=schema_ddl, n_rows=n_rows, files_dir=files_dir,
@@ -291,7 +299,10 @@ class LakeTable:
             DELETED_COL, F.lit(False)
         )
         rel, n = self._write_data(stored, self.latest_version() + 1)
-        return self._commit_manifest("append", batch_id, _ddl(df), n, rel)
+        v = self._commit_manifest("append", batch_id, _ddl(df), n, rel)
+        if v is None:  # a racing writer committed this batch id first
+            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+        return v
 
     def commit_delta(self, collapsed: DataFrame, batch_id: str, n_rows: int | None = None) -> int | None:
         """Apply one collapsed micro-batch (the MERGE INTO equivalent).
@@ -304,16 +315,14 @@ class LakeTable:
             return None
         stored = prepare_delta(collapsed)
         rel, n = self._write_data(stored, self.latest_version() + 1, n_rows)
-        if n == 0:
-            # an empty delta is a no-op: committing it would chain an
-            # empty parquet snapshot (no readable schema) and burn a
-            # version; replaying the epoch later is naturally idempotent
-            import shutil
-
-            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
-            return None
+        # an empty delta is a no-op: committing it would chain an empty
+        # parquet snapshot (no readable schema) and burn a version;
+        # replaying the epoch later is naturally idempotent
         ddl = _ddl(stored.drop(SEQ_COL, DELETED_COL))
-        return self._commit_manifest("delta", batch_id, ddl, n, rel)
+        v = self._commit_manifest("delta", batch_id, ddl, n, rel) if n else None
+        if v is None:  # empty, or a racing writer committed this batch id
+            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+        return v
 
     def commit_delta_dir(self, files_dir: str, batch_id: str,
                          n_rows: int, schema_ddl: str) -> int | None:
@@ -327,10 +336,11 @@ class LakeTable:
         An empty delta (``n_rows == 0``) commits nothing and returns None
         without burning a version: its files dir may not even exist
         (a partitioned write emits no subdir for an empty partition),
-        and a manifest over it would chain an unreadable snapshot."""
+        and a manifest over it would chain an unreadable snapshot.  The
+        files stay when the batch id is already committed: they belong
+        to the caller's staging layout, whose maintenance collects them
+        (``CdcPipeline.vacuum_staging``)."""
         if n_rows == 0:
-            return None
-        if batch_id in self.committed_batch_ids():
             return None
         return self._commit_manifest("delta", batch_id, schema_ddl, n_rows, files_dir)
 
@@ -340,8 +350,6 @@ class LakeTable:
         _seq < trunc_seq in ANY snapshot (order-free — correct even when
         the feed delivers files out of order across epochs).  Without:
         version-scoped full wipe (kills snapshots committed before it)."""
-        if batch_id is not None and batch_id in self.committed_batch_ids():
-            return None
         return self._commit_manifest("truncate", batch_id, "", 0, None, trunc_seq=trunc_seq)
 
     #: target output file size for compaction (Iceberg's
@@ -375,6 +383,30 @@ class LakeTable:
         target = target_file_bytes or self.TARGET_FILE_BYTES
         by_bytes = (self._chain_bytes(snaps) + target - 1) // target
         return max(floor_buckets, by_bytes, 1)
+
+    def _cluster(self, df: DataFrame, n_buckets: int,
+                 cluster_by: list[str] | None = None,
+                 zorder_bits: int = 4) -> DataFrame:
+        """The one layout of every rewrite (compact, compact_minor,
+        purge_keys, restore): ``n_buckets`` range-clustered files sorted
+        on doc_id, or, with ``cluster_by``, z-ordered on those columns
+        (see :meth:`compact`)."""
+        if not cluster_by:
+            return df.repartitionByRange(n_buckets, "doc_id").sortWithinPartitions("doc_id")
+        from yadex_spark.lake.zorder import zorder_expr
+
+        # stage barrier: column_cuts runs one driver-side job per cluster
+        # column (approxQuantile / capped distinct) and the write is a
+        # third consumer — without it each re-runs the full LWW
+        # materialize of the chain
+        df = df.localCheckpoint(eager=False)
+        z = zorder_expr(df, list(cluster_by), bits=zorder_bits)
+        return (
+            df.withColumn("_zorder", z)
+            .repartitionByRange(n_buckets, "_zorder")
+            .sortWithinPartitions("_zorder", "doc_id")
+            .drop("_zorder")
+        )
 
     def compact(self, keep_tombstones: bool = True,
                 min_live_seq: int | None = None,
@@ -425,23 +457,7 @@ class LakeTable:
                 int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                 snaps, target_file_bytes,
             )
-        if cluster_by:
-            from yadex_spark.lake.zorder import zorder_expr
-
-            # stage barrier: column_cuts runs one driver-side job per
-            # cluster column (approxQuantile / capped distinct) and the
-            # write is a third consumer — without it each re-runs the
-            # full LWW materialize of the chain (guide §2.4)
-            cur = cur.localCheckpoint(eager=False)
-            z = zorder_expr(cur, list(cluster_by), bits=zorder_bits)
-            cur = (
-                cur.withColumn("_zorder", z)
-                .repartitionByRange(n_buckets, "_zorder")
-                .sortWithinPartitions("_zorder", "doc_id")
-                .drop("_zorder")
-            )
-        else:
-            cur = cur.repartitionByRange(n_buckets, "doc_id").sortWithinPartitions("doc_id")
+        cur = self._cluster(cur, n_buckets, cluster_by, zorder_bits)
         rel, n = self._write_data(cur, self.latest_version() + 1)
         ddl = _ddl(cur.drop(SEQ_COL, DELETED_COL))
         return self._commit_manifest(
@@ -503,11 +519,6 @@ class LakeTable:
         run.reverse()
         if len(run) < min_deltas:
             return None
-        if len(run) >= (1 << self.ORD_VERSION_BITS):
-            raise RuntimeError(
-                f"merge run of {len(run)} snapshots exceeds the ordering "
-                f"tiebreak capacity (2^{self.ORD_VERSION_BITS})"
-            )
         n_files_in = 0
         for s in run:
             files = _parquet_files(os.path.join(self.path, s.files_dir))
@@ -518,31 +529,13 @@ class LakeTable:
             # byte floor: a big merge must not produce over-target files
             # just because its INPUT file count was small
             n_buckets = self._sized_buckets(fanin, run, None)
-        all_rows = self._union_ranked(run, rank_offset=0)
-        winners = all_rows.groupBy("doc_id").agg(F.max("_ord").alias("_ord"))
-        merged = all_rows.join(winners, ["doc_id", "_ord"]).drop("_ord", VERSION_COL)
-        data_cols = [c for c in merged.columns
-                     if c not in (SEQ_COL, DELETED_COL, "doc_id")]
-        merged = merged.select("doc_id", *data_cols, SEQ_COL, DELETED_COL)
-        if cluster_by:
-            # z-ordered L1 (Delta auto-compaction under OPTIMIZE ZORDER):
-            # a scan-optimized table's trailing deltas fold into a merge
-            # that KEEPS the layout and commits col_stats, so read_where
-            # file-skips stay tight between full compactions instead of
-            # degrading one doc_id-clustered merge at a time
-            from yadex_spark.lake.zorder import zorder_expr
-
-            # stage barrier for the cuts jobs + write (see compact)
-            merged = merged.localCheckpoint(eager=False)
-            z = zorder_expr(merged, list(cluster_by), bits=zorder_bits)
-            merged = (
-                merged.withColumn("_zorder", z)
-                .repartitionByRange(n_buckets, "_zorder")
-                .sortWithinPartitions("_zorder", "doc_id")
-                .drop("_zorder")
-            )
-        else:
-            merged = merged.repartitionByRange(n_buckets, "doc_id").sortWithinPartitions("doc_id")
+        # z-ordered L1 (Delta auto-compaction under OPTIMIZE ZORDER): a
+        # scan-optimized table's trailing deltas fold into a merge that
+        # KEEPS the layout and commits col_stats, so read_where file-skips
+        # stay tight between full compactions instead of degrading one
+        # doc_id-clustered merge at a time
+        merged = self._cluster(self._materialize(run, keep_deleted=True),
+                               n_buckets, cluster_by, zorder_bits)
         rel, n = self._write_data(merged, self.latest_version() + 1)
         ddl = _ddl(merged.drop(SEQ_COL, DELETED_COL))
         return self._commit_manifest(
@@ -581,13 +574,11 @@ class LakeTable:
         # rewrite anyway, so batching does not change the asymptotics)
         cur = cur.where(~F.col("doc_id").isin(list(keys)))
         n_buckets = n_buckets or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        cur = cur.repartitionByRange(n_buckets, "doc_id").sortWithinPartitions("doc_id")
+        cur = self._cluster(cur, n_buckets)
         rel, n = self._write_data(cur, self.latest_version() + 1)
         if n == 0:
             # purge emptied the table: an empty parquet dir has no
             # readable schema, so commit a full wipe instead
-            import shutil
-
             shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
             v = self._commit_manifest("truncate", None, _ddl(cur.drop(SEQ_COL, DELETED_COL)), 0, None)
         else:
@@ -618,8 +609,6 @@ class LakeTable:
         ``commit_delta_dir`` points at its own ``table=<t>`` subdir, so
         vacuuming one table never touches a sibling table's staging
         data."""
-        import shutil
-
         latest = self.latest_version()
         keep = set()
         keep_versions = set(range(max(1, latest - retain_last), latest + 1))
@@ -693,19 +682,19 @@ class LakeTable:
         snaps, kill_seq = self._active_chain(version)
         if not snaps:
             raise ValueError(f"version {version} has no restorable state")
-        for s in snaps:
-            if not os.path.isdir(os.path.join(self.path, s.files_dir)):
-                raise ValueError(
-                    f"version {version} is not restorable: v{s.version} "
-                    "files were vacuumed (tag versions you may roll back to)"
-                )
+        gone = self._vacuumed(snaps)
+        if gone:
+            raise ValueError(
+                f"version {version} is not restorable: v{gone[0].version} "
+                "files were vacuumed (tag versions you may roll back to)"
+            )
         cur = self._materialize(snaps, keep_deleted=True, kill_seq=kill_seq)
         if n_buckets is None:
             n_buckets = self._sized_buckets(
                 int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                 snaps, None,
             )
-        cur = cur.repartitionByRange(n_buckets, "doc_id").sortWithinPartitions("doc_id")
+        cur = self._cluster(cur, n_buckets)
         rel, n = self._write_data(cur, self.latest_version() + 1)
         ddl = _ddl(cur.drop(SEQ_COL, DELETED_COL))
         return self._commit_manifest("compact", None, ddl, n, rel, trunc_seq=kill_seq)
@@ -739,13 +728,12 @@ class LakeTable:
             version = snaps[-1].version
         if version not in {s.version for s in snaps}:
             raise ValueError(f"unknown version {version}")
-        chain, _ = self._active_chain(version)
-        for s in chain:
-            if not os.path.isdir(os.path.join(self.path, s.files_dir)):
-                raise ValueError(
-                    f"version {version} is not taggable: its files "
-                    f"(v{s.version}) were already vacuumed"
-                )
+        gone = self._vacuumed(self._active_chain(version)[0])
+        if gone:
+            raise ValueError(
+                f"version {version} is not taggable: its files "
+                f"(v{gone[0].version}) were already vacuumed"
+            )
         refs = os.path.join(self.path, self._REFS)
         os.makedirs(refs, exist_ok=True)
         tmp = os.path.join(
@@ -812,8 +800,6 @@ class LakeTable:
         :meth:`vacuum`'s decision; fsck touches only what no version
         owns).  Returns ``{"errors", "orphans", "tmp_manifests",
         "repaired"}`` — all empty = healthy."""
-        import shutil
-
         import pyarrow.parquet as pq
 
         meta_dir = os.path.join(self.path, META)
@@ -869,12 +855,10 @@ class LakeTable:
             if tv not in vset:
                 report["errors"].append(f"tag {tname}: unknown version {tv}")
                 continue
-            chain, _ = self._active_chain(tv)
-            for s in chain:
-                if not os.path.isdir(os.path.join(self.path, s.files_dir)):
-                    report["errors"].append(
-                        f"tag {tname}: v{s.version} files missing ({s.files_dir})"
-                    )
+            for s in self._vacuumed(self._active_chain(tv)[0]):
+                report["errors"].append(
+                    f"tag {tname}: v{s.version} files missing ({s.files_dir})"
+                )
         referenced = {
             os.path.normpath(os.path.join(self.path, m["files_dir"]))
             for m in manifests
@@ -961,37 +945,26 @@ class LakeTable:
     # ---------- read paths ----------
 
     def _active_chain(self, version: int | None = None) -> tuple[list[Snapshot], int | None]:
-        """(data snapshots to union, seq-scoped kill barrier).
+        """(data snapshots to union, seq-scoped kill barrier) of the
+        :func:`live_snapshots` at ``version`` (default: latest).
 
-        - version-scoped truncates (legacy wipe) and compacts prune the
-          file list: snapshots before them are dead / subsumed
-        - a minor compaction (action='minicompact') replaces exactly the
-          delta versions listed in its ``subsumes`` — those drop out of
-          the chain (time travel BELOW the minicompact still sees them:
-          the version filter runs first, so a too-new minicompact never
-          hides them)
-        - seq-scoped truncates (drop barriers) return the max barrier;
-          the read applies it as a ``_seq >= barrier`` predicate so it
-          is correct under out-of-order epoch arrival."""
-        snaps = [s for s in self.snapshots() if version is None or s.version <= version]
-        start = 0
-        for i, s in enumerate(snaps):
-            if s.action == "truncate" and s.trunc_seq is None:
-                start = i + 1
-            elif s.action == "compact":
-                start = i
-        active = snaps[start:]
-        dead: set[int] = set()
-        for s in active:
-            if s.subsumes:
-                dead.update(s.subsumes)
-        if dead:
-            active = [s for s in active if s.version not in dead]
+        Seq-scoped truncates (drop barriers) return the max barrier; the
+        read applies it as a ``_seq >= barrier`` predicate so it is
+        correct under out-of-order epoch arrival."""
+        active = live_snapshots(
+            [s for s in self.snapshots() if version is None or s.version <= version]
+        )
         # compacts inherit the barrier (see compact()) so a late pre-barrier
         # epoch arriving after a compaction still cannot resurrect dead rows
         kill_seqs = [s.trunc_seq for s in active if s.trunc_seq is not None]
         files = [s for s in active if s.files_dir is not None]
         return files, (max(kill_seqs) if kill_seqs else None)
+
+    def _vacuumed(self, chain: list[Snapshot]) -> list[Snapshot]:
+        """The snapshots of ``chain`` whose data dir is gone (vacuum
+        reclaimed it) — driver-side stat only."""
+        return [s for s in chain if s.files_dir is not None
+                and not os.path.isdir(os.path.join(self.path, s.files_dir))]
 
     #: bits reserved for the snapshot tiebreak inside the single BIGINT
     #: read-side ordering key: _ord = _seq << 20 | rank-in-active-chain.
@@ -1000,9 +973,66 @@ class LakeTable:
     #: design point (compaction bounds the chain; op_seq is dense).
     ORD_VERSION_BITS = 20
 
-    def _materialize(self, snaps: list[Snapshot], keep_deleted: bool,
-                     kill_seq: int | None = None) -> DataFrame:
-        """Union all active files, LWW per key on (_seq, _v).
+    def _scan(self, snaps: list[Snapshot], kill_seq: int | None = None,
+              rank_offset: int = 0, prune=None,
+              prune_stats: dict | None = None) -> DataFrame | None:
+        """The one merge-on-read scan every read is built on: the union
+        of ``snaps``' files (``allowMissingColumns`` = schema evolution),
+        each tagged with ``VERSION_COL`` = its chain rank + ``rank_offset``
+        (rank in version order == commit order; a skipped snapshot keeps
+        its rank, so ranks stay comparable across scans of one chain),
+        rows below the drop barrier ``kill_seq`` removed, plus the packed
+        ordering key ``_ord = _seq << ORD_VERSION_BITS | rank``.
+
+        ``prune(s, full)`` returns (kept files, or None when the layout
+        cannot be listed flat; files total): a snapshot with no kept file
+        is skipped, and ``prune_stats`` (out-param) receives
+        {files_total, files_read, pruned} over the listed snapshots.
+        Returns None when no snapshot is left.  The ordering-capacity
+        check runs before any file is touched."""
+        n_chain = rank_offset + len(snaps)
+        if n_chain >= (1 << self.ORD_VERSION_BITS):
+            raise RuntimeError(
+                f"chain of {n_chain} snapshots exceeds the read-ordering "
+                f"tiebreak capacity (2^{self.ORD_VERSION_BITS}) — run compact()"
+            )
+        n_total = n_read = 0
+        out = None
+        for i, s in enumerate(snaps):
+            full = os.path.join(self.path, s.files_dir)
+            kept, n_files = prune(s, full) if prune is not None else (None, 0)
+            if kept is None:
+                df = self.spark.read.parquet(full)
+            else:
+                n_total += n_files
+                n_read += len(kept)
+                if not kept:
+                    continue  # proven to hold no wanted row
+                df = self.spark.read.parquet(*kept)
+            df = df.withColumn(VERSION_COL, F.lit(rank_offset + i))
+            out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+        if prune_stats is not None:
+            prune_stats.update(
+                files_total=n_total, files_read=n_read, pruned=n_total - n_read
+            )
+        if out is None:
+            return None
+        if kill_seq is not None:
+            # drop barrier: pre-barrier rows are dead in any snapshot
+            out = out.where(F.col(SEQ_COL) >= kill_seq)
+        return out.withColumn(
+            "_ord",
+            F.col(SEQ_COL) * F.lit(1 << self.ORD_VERSION_BITS) + F.col(VERSION_COL),
+        )
+
+    @staticmethod
+    def _lww(rows: DataFrame, ranked: DataFrame | None = None) -> DataFrame:
+        """Per-key last-writer-wins over :meth:`_scan` output: the rows
+        of ``rows`` holding their key's max ``_ord`` in ``ranked``
+        (default ``rows``).  :meth:`read_where` ranks over the full chain
+        read narrow and joins back a file-pruned ``rows``.  Keeps ``_ord``
+        and ``VERSION_COL`` (the change feed compares ordinals and maps
+        ranks to versions).
 
         The winner is picked the narrow way: (_seq, _v) packs into ONE
         BIGINT ``_ord`` (strictly unique per (doc_id, row): _seq is
@@ -1012,34 +1042,20 @@ class LakeTable:
         exactly one row.  A max(struct(...)) over the full row — round
         1's shape — falls back to a non-codegen SortAggregate carrying
         every payload byte through the sort."""
-        if len(snaps) >= (1 << self.ORD_VERSION_BITS):
-            raise RuntimeError(
-                f"active chain of {len(snaps)} snapshots exceeds the "
-                f"read-ordering tiebreak capacity (2^{self.ORD_VERSION_BITS}) "
-                "— run compact()"
-            )
-        dfs = []
-        for i, s in enumerate(snaps):  # rank in version order == commit order
-            df = self.spark.read.parquet(os.path.join(self.path, s.files_dir))
-            dfs.append(df.withColumn(VERSION_COL, F.lit(i)))
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)  # schema evolution
-        if kill_seq is not None:
-            # drop barrier: pre-barrier rows are dead in any snapshot
-            out = out.where(F.col(SEQ_COL) >= kill_seq)
-        ord_col = (
-            F.col(SEQ_COL) * F.lit(1 << self.ORD_VERSION_BITS) + F.col(VERSION_COL)
-        ).alias("_ord")
-        out = out.withColumn("_ord", ord_col)
-        winners = out.groupBy("doc_id").agg(F.max("_ord").alias("_ord"))
-        lww = out.join(winners, ["doc_id", "_ord"]).drop("_ord", VERSION_COL)
+        winners = (rows if ranked is None else ranked).groupBy("doc_id").agg(
+            F.max("_ord").alias("_ord")
+        )
+        return rows.join(winners, ["doc_id", "_ord"])
+
+    def _materialize(self, snaps: list[Snapshot], keep_deleted: bool,
+                     kill_seq: int | None = None) -> DataFrame:
+        """Union all active files, LWW per key (:meth:`_lww`), in the
+        canonical column order (doc_id, payload..., hidden) regardless
+        of which snapshot contributed which column."""
+        lww = self._lww(self._scan(snaps, kill_seq))
         if not keep_deleted:
             lww = lww.where(~F.col(DELETED_COL))
-        # canonical column order (payload..., hidden) regardless of which
-        # snapshot contributed which column
-        data_cols = [c for c in lww.columns if c not in (SEQ_COL, DELETED_COL, "doc_id")]
-        return lww.select("doc_id", *data_cols, SEQ_COL, DELETED_COL)
+        return lww.select("doc_id", *_payload_cols(lww), SEQ_COL, DELETED_COL)
 
     def _empty(self, version: int | None = None) -> DataFrame:
         """Typed empty frame: the LATEST manifest's recorded schema (a
@@ -1136,87 +1152,51 @@ class LakeTable:
         snaps, kill_seq = self._active_chain(version)
         if not snaps:
             return cond(self._empty(version))
-        n_total = n_read = 0
-        narrow_dfs, payload_dfs = [], []
-        for i, s in enumerate(snaps):  # rank in FULL chain on both sides
-            full = os.path.join(self.path, s.files_dir)
-            whole = self.spark.read.parquet(full)
-            narrow_dfs.append(
-                whole.select("doc_id", SEQ_COL).withColumn(VERSION_COL, F.lit(i))
-            )
-            kept, n_files = self._prune_files_where(s, full, norm)
-            if kept is None:  # unprunable layout
-                payload_dfs.append(whole.withColumn(VERSION_COL, F.lit(i)))
-                continue
-            n_total += n_files
-            n_read += len(kept)
-            if kept:
-                payload_dfs.append(
-                    self.spark.read.parquet(*kept).withColumn(VERSION_COL, F.lit(i))
-                )
-        if prune_stats is not None:
-            prune_stats.update(
-                files_total=n_total, files_read=n_read, pruned=n_total - n_read
-            )
-        narrow = narrow_dfs[0]
-        for d in narrow_dfs[1:]:
-            narrow = narrow.unionByName(d)
-        if kill_seq is not None:
-            narrow = narrow.where(F.col(SEQ_COL) >= kill_seq)
-        ord_of = (
-            F.col(SEQ_COL) * F.lit(1 << self.ORD_VERSION_BITS) + F.col(VERSION_COL)
-        )
-        winners = (
-            narrow.withColumn("_ord", ord_of)
-            .groupBy("doc_id").agg(F.max("_ord").alias("_ord"))
-        )
-        if not payload_dfs:
+        rows = self._scan(snaps, kill_seq, prune=self._range_prune(norm),
+                          prune_stats=prune_stats)
+        if rows is None:
             return cond(self._empty(version))
-        payload = payload_dfs[0]
-        for d in payload_dfs[1:]:
-            payload = payload.unionByName(d, allowMissingColumns=True)
-        if kill_seq is not None:
-            payload = payload.where(F.col(SEQ_COL) >= kill_seq)
-        payload = payload.withColumn("_ord", ord_of)
-        lww = payload.join(winners, ["doc_id", "_ord"]).drop("_ord", VERSION_COL)
-        lww = lww.where(~F.col(DELETED_COL)).drop(SEQ_COL, DELETED_COL)
-        data_cols = [c for c in lww.columns if c != "doc_id"]
-        return cond(lww.select("doc_id", *data_cols))
+        # winners over the FULL chain (Catalyst prunes that scan to
+        # doc_id + _seq); only the payload join-back side is file-pruned
+        lww = self._lww(rows, ranked=self._scan(snaps, kill_seq))
+        lww = lww.where(~F.col(DELETED_COL))
+        return cond(lww.select("doc_id", *_payload_cols(lww)))
 
-    def _prune_files_where(self, s: Snapshot, full: str,
-                           norm: dict) -> tuple[list[str] | None, int]:
-        """(range-pruned payload files, files_total) for one snapshot —
-        (None, 0) for an unprunable partition-style layout.  A file is
-        skipped only when some predicate column's committed bounds
-        PROVE no row matches; unknown columns/files/bounds are read."""
-        cs = s.col_stats or {}
-        if s.file_stats is not None:
-            rels = sorted(s.file_stats)
-        else:
-            files = _parquet_files(full)
-            if files is None:
-                return None, 0
-            rels = sorted(os.path.relpath(f, full) for f in files)
+    @staticmethod
+    def _range_prune(norm: dict):
+        """:meth:`_scan` ``prune`` for :meth:`read_where`: a file is
+        skipped only when some predicate column's committed bounds PROVE
+        no row matches; unknown columns/files/bounds are read."""
+        def prune(s: Snapshot, full: str) -> tuple[list[str] | None, int]:
+            cs = s.col_stats or {}
+            if s.file_stats is not None:
+                rels = sorted(s.file_stats)
+            else:
+                files = _parquet_files(full)
+                if files is None:
+                    return None, 0
+                rels = sorted(os.path.relpath(f, full) for f in files)
 
-        def keep(rel: str) -> bool:
-            for c, (lo, hi) in norm.items():
-                if c == "doc_id" and s.file_stats is not None:
-                    b = s.file_stats.get(rel)
-                elif c in cs and cs[c] is not None:
-                    b = cs[c].get(rel)
-                else:
-                    continue
-                if not _range_may_overlap(b, lo, hi):
-                    return False
-            return True
+            def keep(rel: str) -> bool:
+                for c, (lo, hi) in norm.items():
+                    if c == "doc_id" and s.file_stats is not None:
+                        b = s.file_stats.get(rel)
+                    elif c in cs and cs[c] is not None:
+                        b = cs[c].get(rel)
+                    else:
+                        continue
+                    if not _range_may_overlap(b, lo, hi):
+                        return False
+                return True
 
-        return [os.path.join(full, r) for r in rels if keep(r)], len(rels)
+            return [os.path.join(full, r) for r in rels if keep(r)], len(rels)
 
-    def _prune_files(self, s: Snapshot, full: str, key: str,
-                     sorted_probes: list) -> tuple[list[str] | None, int]:
-        """(probe-pruned data files, files_total) for one snapshot —
-        or (None, 0) for an unprunable partition-style layout (caller
-        reads the directory).
+        return prune
+
+    @staticmethod
+    def _probe_prune(key: str, probes: list):
+        """:meth:`_scan` ``prune`` for probe reads: the files whose
+        ``key`` bounds may contain a probe.
 
         Prefers the manifest's committed :attr:`Snapshot.file_stats`:
         the dict is a complete file inventory with bounds, so planning
@@ -1226,17 +1206,22 @@ class LakeTable:
         listing + per-file footer probe; a null-bounds inventory entry
         (unprovable footer at commit time) is always kept.  All paths
         share the conservative keep-on-doubt rule."""
-        stats = s.file_stats if key == "doc_id" else None
-        if stats:
-            kept = [os.path.join(full, rel)
-                    for rel, b in sorted(stats.items())
-                    if b is None or _bounds_may_contain(b, sorted_probes)]
-            return kept, len(stats)
-        files = _parquet_files(full)
-        if files is None:
-            return None, 0
-        kept = [f for f in files if _file_may_contain(f, key, sorted_probes)]
-        return kept, len(files)
+        sorted_probes = sorted(probes)
+
+        def prune(s: Snapshot, full: str) -> tuple[list[str] | None, int]:
+            stats = s.file_stats if key == "doc_id" else None
+            if stats:
+                kept = [os.path.join(full, rel)
+                        for rel, b in sorted(stats.items())
+                        if b is None or _bounds_may_contain(b, sorted_probes)]
+                return kept, len(stats)
+            files = _parquet_files(full)
+            if files is None:
+                return None, 0
+            kept = [f for f in files if _file_may_contain(f, key, sorted_probes)]
+            return kept, len(files)
+
+        return prune
 
     def read_keys(self, *cols: str, probes: list | None = None,
                   key: str = "doc_id",
@@ -1268,40 +1253,10 @@ class LakeTable:
         snaps, kill_seq = self._active_chain()
         if not snaps:
             return self._empty().select(*cols)
-        sorted_probes = sorted(probes) if probes is not None else None
-        n_total = n_read = 0
-        dfs = []
-        for s in snaps:
-            full = os.path.join(self.path, s.files_dir)
-            kept = None
-            if sorted_probes is not None:
-                kept, n_files = self._prune_files(s, full, key, sorted_probes)
-                if kept is not None:
-                    n_total += n_files
-                    n_read += len(kept)
-                    if not kept:
-                        continue  # proven probe-free: skip the snapshot
-            if kept is not None:
-                dfs.append(self.spark.read.parquet(*kept))
-            else:
-                # full scan of this snapshot (no probes, or unprunable
-                # layout — count its files as read for the stats)
-                if sorted_probes is not None:
-                    n = len(_parquet_files(full) or [])
-                    n_total += n
-                    n_read += n
-                dfs.append(self.spark.read.parquet(full))
-        if prune_stats is not None:
-            prune_stats.update(
-                files_total=n_total, files_read=n_read, pruned=n_total - n_read
-            )
-        if not dfs:
+        prune = self._probe_prune(key, probes) if probes is not None else None
+        out = self._scan(snaps, kill_seq, prune=prune, prune_stats=prune_stats)
+        if out is None:
             return self._empty().select(*cols)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        if kill_seq is not None:
-            out = out.where(F.col(SEQ_COL) >= kill_seq)
         return out.where(~F.col(DELETED_COL)).select(*cols)
 
     def lookup(self, probes: list, version: int | None = None,
@@ -1324,49 +1279,13 @@ class LakeTable:
         snaps, kill_seq = self._active_chain(version)
         if not snaps or not probes:
             return self._empty(version)
-        if len(snaps) >= (1 << self.ORD_VERSION_BITS):
-            raise RuntimeError(
-                f"active chain of {len(snaps)} snapshots exceeds the "
-                f"read-ordering tiebreak capacity (2^{self.ORD_VERSION_BITS}) "
-                "— run compact()"
-            )
-        sorted_probes = sorted(probes)
-        n_total = n_read = 0
-        dfs = []
-        for rank, s in enumerate(snaps):  # rank = position in FULL chain
-            full = os.path.join(self.path, s.files_dir)
-            kept, n_files = self._prune_files(s, full, "doc_id", sorted_probes)
-            if kept is not None:
-                n_total += n_files
-                n_read += len(kept)
-                if not kept:
-                    continue
-                df = self.spark.read.parquet(*kept)
-            else:
-                df = self.spark.read.parquet(full)
-            dfs.append(df.withColumn(VERSION_COL, F.lit(rank)))
-        if prune_stats is not None:
-            prune_stats.update(
-                files_total=n_total, files_read=n_read, pruned=n_total - n_read
-            )
-        if not dfs:
+        rows = self._scan(snaps, kill_seq, prune=self._probe_prune("doc_id", probes),
+                          prune_stats=prune_stats)
+        if rows is None:
             return self._empty(version)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        out = out.where(F.col("doc_id").isin(list(probes)))
-        if kill_seq is not None:
-            out = out.where(F.col(SEQ_COL) >= kill_seq)
-        out = out.withColumn(
-            "_ord",
-            F.col(SEQ_COL) * F.lit(1 << self.ORD_VERSION_BITS) + F.col(VERSION_COL),
-        )
-        winners = out.groupBy("doc_id").agg(F.max("_ord").alias("_ord"))
-        lww = out.join(winners, ["doc_id", "_ord"]).drop("_ord", VERSION_COL)
+        lww = self._lww(rows.where(F.col("doc_id").isin(list(probes))))
         lww = lww.where(~F.col(DELETED_COL))
-        data_cols = [c for c in lww.columns
-                     if c not in (SEQ_COL, DELETED_COL, "doc_id")]
-        return lww.select("doc_id", *data_cols)
+        return lww.select("doc_id", *_payload_cols(lww))
 
     def schema_history(self) -> list[dict]:
         """Schema-evolution audit: for each committed version whose DDL
@@ -1446,41 +1365,17 @@ class LakeTable:
         snaps, kill_seq = self._active_chain()
         if not snaps:
             return out_empty
-        sorted_probes = sorted(probes)
-        n_total = n_read = 0
-        dfs = []
-        for s in snaps:
-            full = os.path.join(self.path, s.files_dir)
-            kept, n_files = self._prune_files(s, full, key, sorted_probes)
-            if kept is not None:
-                n_total += n_files
-                n_read += len(kept)
-                if not kept:
-                    continue
-                df = self.spark.read.parquet(*kept)
-            else:
-                df = self.spark.read.parquet(full)
-            dfs.append(df.withColumn("version", F.lit(s.version)))
-        if prune_stats is not None:
-            prune_stats.update(
-                files_total=n_total, files_read=n_read, pruned=n_total - n_read
-            )
-        if not dfs:
+        out = self._scan(snaps, kill_seq, prune=self._probe_prune(key, probes),
+                         prune_stats=prune_stats)
+        if out is None:
             return out_empty
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
         out = out.where(F.col(key).isin(list(probes)))
-        if kill_seq is not None:
-            out = out.where(F.col(SEQ_COL) >= kill_seq)
-        payload = [c for c in out.columns
-                   if c not in (key, "version", SEQ_COL, DELETED_COL)]
         return out.select(
             key,
-            "version",
+            _version_of_rank(snaps).alias("version"),
             F.col(SEQ_COL).alias("op_seq"),
             F.col(DELETED_COL).alias("deleted"),
-            *payload,
+            *_payload_cols(out, key),
         ).orderBy(key, F.desc("op_seq"))
 
     # ---------- incremental change feed ----------
@@ -1543,12 +1438,6 @@ class LakeTable:
 
         pre_files, pre_kill = self._active_chain(v_from)
         win_files = [s for s in window if s.files_dir is not None]
-        n_chain = len(pre_files) + len(win_files)
-        if n_chain >= (1 << self.ORD_VERSION_BITS):
-            raise RuntimeError(
-                f"chain of {n_chain} snapshots exceeds the ordering tiebreak "
-                f"capacity (2^{self.ORD_VERSION_BITS}) — run compact()"
-            )
         # the window's drop barriers were excluded above, but a barrier
         # committed AT OR BEFORE v_from still kills late pre-barrier rows
         # arriving inside the window (barriers are seq-scoped, order-free)
@@ -1561,32 +1450,20 @@ class LakeTable:
         if not win_files:
             return self._empty_changes(payload)
 
-        post_all = self._union_ranked(win_files, rank_offset=len(pre_files))
-        if kill_to is not None:
-            post_all = post_all.where(F.col(SEQ_COL) >= kill_to)
-        post_w = post_all.groupBy("doc_id").agg(F.max("_ord").alias("_ord"))
-        post = post_all.join(post_w, ["doc_id", "_ord"])
-        # rank -> committing version, via a tiny array literal (the chain
-        # is manifest-sized; no join, no shuffle)
-        ver_by_rank = F.array(*[F.lit(s.version) for s in win_files])
+        # window ranks continue the pre-chain's, so the two sides' _ord
+        # compare as one chain
+        post = self._lww(self._scan(win_files, kill_to, rank_offset=len(pre_files)))
         post = post.withColumn(
-            self.COMMIT_VERSION_COL,
-            F.element_at(ver_by_rank, F.col(VERSION_COL) - len(pre_files) + 1),
+            self.COMMIT_VERSION_COL, _version_of_rank(win_files, len(pre_files))
         )
         keys = post.select("doc_id")
 
+        pre = None
         if pre_files:
-            pre_all = self._union_ranked(pre_files, rank_offset=0)
-            if pre_kill is not None:
-                pre_all = pre_all.where(F.col(SEQ_COL) >= pre_kill)
             # key filter BELOW the aggregate: the LWW shuffle carries
             # changed keys only (AQE broadcasts `keys` from runtime size
             # on a trigger-bounded window)
-            pre_all = pre_all.join(keys, "doc_id", "left_semi")
-            pre_w = pre_all.groupBy("doc_id").agg(F.max("_ord").alias("_ord"))
-            pre = pre_all.join(pre_w, ["doc_id", "_ord"])
-        else:
-            pre = None
+            pre = self._lww(self._scan(pre_files, pre_kill).join(keys, "doc_id", "left_semi"))
 
         post_side = post.select(
             "doc_id",
@@ -1643,22 +1520,6 @@ class LakeTable:
         return j.select(
             "doc_id", self.CHANGE_TYPE_COL, *out_pre, *out_post,
             self.COMMIT_VERSION_COL,
-        )
-
-    def _union_ranked(self, snaps: list[Snapshot], rank_offset: int) -> DataFrame:
-        """Union data files with ``_ord = _seq << BITS | chain rank`` —
-        the read-side ordering key of :meth:`_materialize`, offset so
-        ranks stay globally comparable across a chain split."""
-        dfs = []
-        for i, s in enumerate(snaps):
-            df = self.spark.read.parquet(os.path.join(self.path, s.files_dir))
-            dfs.append(df.withColumn(VERSION_COL, F.lit(rank_offset + i)))
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
-        return out.withColumn(
-            "_ord",
-            F.col(SEQ_COL) * F.lit(1 << self.ORD_VERSION_BITS) + F.col(VERSION_COL),
         )
 
     def _chain_payload_cols(self, snaps: list[Snapshot]) -> list[str]:
@@ -1770,6 +1631,42 @@ def prepare_delta(collapsed: DataFrame, keep_table: bool = False) -> DataFrame:
 
 def _ddl(df: DataFrame) -> str:
     return df.schema.simpleString()
+
+
+def live_snapshots(snaps: list[Snapshot]) -> list[Snapshot]:
+    """The live part of a version-ordered snapshot list — the one chain
+    rule of every read (:meth:`LakeTable._active_chain`) and of physical
+    replication (:class:`LakeReplicator`).  File-less truncates stay in
+    it.
+
+    - the last version-scoped truncate (legacy wipe) or compact starts
+      it: snapshots before it are dead / subsumed (the compact is the
+      new base; the wipe carries no rows or barrier, so reads skip it)
+    - a minor compaction (action='minicompact') replaces exactly the
+      delta versions listed in its ``subsumes`` — those drop out (time
+      travel BELOW the minicompact still sees them: callers pass the
+      version-filtered list, so a too-new minicompact never hides them)"""
+    start = 0
+    for i, s in enumerate(snaps):
+        if s.action == "compact" or (s.action == "truncate" and s.trunc_seq is None):
+            start = i
+    dead = {v for s in snaps for v in (s.subsumes or ())}
+    return [s for s in snaps[start:] if s.version not in dead]
+
+
+def _version_of_rank(snaps: list[Snapshot], offset: int = 0):
+    """Column: the committing version of a :meth:`LakeTable._scan` row,
+    from its rank, via a tiny array literal (the chain is
+    manifest-sized; no join, no shuffle)."""
+    return F.element_at(
+        F.array(*[F.lit(s.version) for s in snaps]), F.col(VERSION_COL) - offset + 1
+    )
+
+
+def _payload_cols(df: DataFrame, key: str = "doc_id") -> list[str]:
+    """``df``'s columns minus the key and every hidden column."""
+    return [c for c in df.columns
+            if c not in (key, SEQ_COL, DELETED_COL, VERSION_COL, "_ord")]
 
 
 # ---------- zone-map pruning helpers (driver-side footer reads) ----------

@@ -561,8 +561,9 @@ def ivf_topk(emb: DataFrame, k: int = 8, iters: int = 2, n_queries: int = 8,
     is generated twice."""
     # spread before assignment: same CPU-heavy tiny-by-bytes guard as
     # training; the query side is n_queries rows and stays unspread.
-    # Lazily checkpointed and shared with training (quantize the
-    # corpus once, not once per consumer).
+    # Checkpointed and shared with training (quantize the corpus once,
+    # not once per consumer).  Not lazy: under AQE, building a
+    # localCheckpoint over _spread's repartition runs that shuffle.
     p = _spread(_prepared(emb), "vec_id").localCheckpoint(eager=False)
     cents = train_kmeans(emb, k, iters, prepared=p)
     corpus = p.where(F.col("vec_id") >= n_queries).select(

@@ -24,6 +24,7 @@ so the split only matters for lineage stats.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,9 +224,13 @@ def write_oplog_bytes(
     estimate gets right).  ``maxFilesPerTrigger=1`` then gives triggers
     that never exceed the budget by more than one file's rounding —
     Spark's own documented sizing rule for file-source byte budgets.
-    Returns the number of files written.  ``df`` is cached for the
-    call: each drop is one filtered pass over it, and a generator
-    frame would otherwise be regenerated once per drop."""
+    Returns the number of files written.
+
+    All drops are written by ONE Spark job: each row is tagged with its
+    drop index and shuffled by it, so ``partitionBy`` writes exactly one
+    file per drop; the files then move flat into ``path`` with mtimes
+    rising in drop order, the order the file source reads them in.
+    ``df`` is cached for the call (two pilot passes plus the write)."""
     import shutil
 
     with persisted(df):
@@ -235,13 +240,6 @@ def write_oplog_bytes(
         mn, mx = bounds
         if mn is None or mx is None:
             return 0  # empty feed: nothing to drop
-
-        def write_span(lo: int, hi: int, dest: str, first: bool) -> None:
-            # repartition(1): one file per drop WITHOUT collapsing the
-            # generating stage's parallelism (coalesce(1) would)
-            df.where((F.col("op_seq") >= lo) & (F.col("op_seq") < hi)).repartition(
-                1
-            ).write.mode("overwrite" if first else "append").parquet(dest)
 
         # pilots go to a throwaway dir: they only measure bytes/row, so the
         # REAL feed's every file (including the first) respects the budget.
@@ -253,18 +251,39 @@ def write_oplog_bytes(
         rows = min(pilot_rows, mx + 1 - mn)
         try:
             for _ in range(2):
-                write_span(mn, mn + rows, pilot_dir, first=True)
+                # repartition(1): one file WITHOUT collapsing the
+                # generating stage's parallelism (coalesce(1) would)
+                df.where(
+                    (F.col("op_seq") >= mn) & (F.col("op_seq") < mn + rows)
+                ).repartition(1).write.mode("overwrite").parquet(pilot_dir)
                 bytes_per_row = max(1.0, _dir_parquet_bytes(pilot_dir) / rows)
                 rows = max(1, min(int(chunk_bytes / bytes_per_row), mx + 1 - mn))
         finally:
             # the pilot dir is pure measurement scratch — never leave it
             # behind for a feed reader to mistake for a drop
             shutil.rmtree(pilot_dir, ignore_errors=True)
-        rows_per_chunk = rows
-        cur = mn
-        n_files = 0
-        while cur <= mx:
-            write_span(cur, cur + rows_per_chunk, path, first=(n_files == 0))
-            cur += rows_per_chunk
-            n_files += 1
-        return n_files
+        n_drops = (mx - mn) // rows + 1
+        staged = f"{path}.drops-{os.getpid()}"
+        try:
+            df.where(
+                (F.col("op_seq") >= mn) & (F.col("op_seq") < mn + n_drops * rows)
+            ).withColumn("drop", F.floor((F.col("op_seq") - mn) / rows)).repartition(
+                "drop"
+            ).write.mode("overwrite").partitionBy("drop").parquet(staged)
+            drops = sorted(
+                (int(d.split("=", 1)[1]), os.path.join(staged, d))
+                for d in os.listdir(staged) if d.startswith("drop=")
+            )
+            shutil.rmtree(path, ignore_errors=True)  # a feed is replaced, never appended to
+            os.makedirs(path)
+            # whole seconds apart, ending now: the file source orders a
+            # feed by mtime, and coarse filesystems keep seconds only
+            t0 = int(time.time()) - len(drops)
+            for i, (k, d) in enumerate(drops):
+                (name,) = [f for f in os.listdir(d) if f.endswith(".parquet")]
+                dst = os.path.join(path, f"drop-{k:06d}-{name}")
+                os.rename(os.path.join(d, name), dst)
+                os.utime(dst, (t0 + i, t0 + i))
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+        return len(drops)
