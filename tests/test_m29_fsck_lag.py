@@ -236,3 +236,39 @@ def test_compact_lineage_folds_files_and_preserves_consumers(spark, tmp_path):
     rep2 = pipe.compact_lineage(keep_recent=2)
     assert rep2["folded"] == 0
     assert sorted(map(tuple, pipe.lineage().collect())) == rows_before
+
+
+
+def test_fsck_reports_unreadable_manifests(spark, tmp_path):
+    """A corrupt manifest is reported, not raised: bad JSON and a
+    manifest missing its fields each land in ``errors``, the chain and
+    tag checks still run over the manifests that could be read, and
+    repair keeps every unreferenced data dir (the unreadable manifest
+    may own it)."""
+    import json
+
+    t = _tbl(spark, tmp_path)
+    t.tag("pin")
+    v1_dir = t.snapshots()[-1].files_dir
+    meta = os.path.join(t.path, "_meta")
+    with open(os.path.join(meta, "v00000002.json"), "w") as f:
+        f.write("{not json")
+    r = LakeTable(None, t.path).fsck(verify_rows=False)
+    assert len(r["errors"]) == 1
+    assert r["errors"][0].startswith("unreadable manifest v00000002.json")
+
+    with open(os.path.join(meta, "v00000003.json"), "w") as f:
+        json.dump({"version": 3}, f)  # every other field missing
+    orphan = os.path.join(t.path, "data", "s-unowned")
+    os.makedirs(orphan)
+    shutil.rmtree(os.path.join(t.path, v1_dir))
+    r = LakeTable(None, t.path).fsck(verify_rows=False, repair=True)
+    errs = r["errors"]
+    assert [e.split(":")[0] for e in errs[:2]] == [
+        "unreadable manifest v00000002.json", "unreadable manifest v00000003.json",
+    ]
+    # the readable v1 is still audited, as the tag's chain and the active one
+    assert f"tag pin: v1 files missing ({v1_dir})" in errs
+    assert f"v1: files_dir missing: {v1_dir}" in errs
+    assert r["orphans"] == [os.path.join("data", "s-unowned")]
+    assert os.path.isdir(orphan) and r["repaired"] == []

@@ -186,3 +186,110 @@ def test_fsck_inventory_gap_flagged_none_bounds_tolerated(lake):
         json.dump(m, f)
     errs = LakeTable(lake.spark, lake.path).fsck()["errors"]
     assert any("absent from file_stats inventory" in e for e in errs)
+
+
+# ---------- one manifest-log parse per lake operation ----------
+
+_OPLOG_DDL = (
+    "op_seq long, op_ts timestamp, op string, table string, doc_id string, "
+    "after struct<tokens:array<int>,n_tok:int,source:string>"
+)
+
+
+def _delta(spark, rows):
+    import datetime
+
+    ts = datetime.datetime(2026, 1, 1)
+    return collapse(spark.createDataFrame(
+        [(seq, ts, op, "t", k, after) for seq, op, k, after in rows], _OPLOG_DDL
+    )).drop("table")
+
+
+@pytest.fixture(scope="module")
+def _tagged_lake(spark, tmp_path_factory):
+    """A clone, three deltas, a seq barrier and two tags; built once per
+    module, copied per use (the lake stores table-relative paths)."""
+    tbl = LakeTable(spark, str(tmp_path_factory.mktemp("tagged") / "lake"))
+    tbl.commit_append(spark.createDataFrame(
+        [("a", [1], 1, "s0"), ("b", [2], 1, "s0"), ("c", [3], 1, "s0")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    ), batch_id="clone")
+    tbl.commit_delta(_delta(spark, [(10, "update", "a", ([1, 1], 2, "s1")),
+                                    (11, "insert", "d", ([4], 1, "s1"))]), "E1")
+    tbl.commit_delta(_delta(spark, [(12, "delete", "b", None)]), "E2")
+    tbl.commit_delta(_delta(spark, [(14, "insert", "e", ([5], 1, "s3"))]), "E3")
+    tbl.commit_truncate(batch_id="barrier", trunc_seq=11)
+    tbl.tag("t-clone", version=1)
+    tbl.tag("t-e2", version=3)
+    return tbl.path
+
+
+def test_each_lake_operation_parses_the_log_once(spark, tmp_path, _tagged_lake,
+                                                  monkeypatch):
+    """Pins how often each operation parses the manifest log (calls of
+    ``LakeTable.snapshots``, per table path): a commit's claim re-parses
+    before its O_EXCL link, everything else reuses one parsed list."""
+    from yadex_spark.lake.replicate import LakeReplicator
+    from yadex_spark.streaming.pipeline import CdcPipeline
+
+    calls: dict[str, int] = {}
+    real = LakeTable.snapshots
+
+    def counted(self):
+        calls[self.path] = calls.get(self.path, 0) + 1
+        return real(self)
+
+    monkeypatch.setattr(LakeTable, "snapshots", counted)
+    n = [0]
+
+    def fresh() -> LakeTable:
+        n[0] += 1
+        path = str(tmp_path / f"root{n[0]}" / "t")
+        shutil.copytree(_tagged_lake, path)
+        return LakeTable(spark, path)
+
+    def parses(op, tbl=None) -> int:
+        tbl = tbl or fresh()
+        calls.clear()
+        op(tbl)
+        return calls.get(tbl.path, 0)
+
+    clone = spark.createDataFrame([("z", [9], 1, "s9")],
+                                  "doc_id string, tokens array<int>, n_tok int, source string")
+    delta = _delta(spark, [(20, "insert", "f", ([6], 1, "s4"))])
+    assert parses(lambda t: t.commit_delta(delta, "E4")) == 2
+    assert parses(lambda t: t.commit_delta(delta, "E1")) == 1  # replay
+    assert parses(lambda t: t.commit_append(clone, batch_id="clone2")) == 2
+    assert parses(lambda t: t.commit_append(clone, batch_id="clone")) == 1
+    assert parses(lambda t: t.compact()) == 2
+    assert parses(lambda t: t.compact_minor()) == 2
+    assert parses(lambda t: t.restore(version=3)) == 2
+    assert parses(lambda t: t.tag("t-new")) == 1
+    for k in (0, 3):
+        assert parses(lambda t: t.vacuum(retain_last=k)) == 1
+    assert parses(lambda t: t.purge_keys(["a"])) == 3
+
+    # fsck: no strict parse at all, one lenient one
+    lenient = []
+    real_parse = T._parse_log
+    monkeypatch.setattr(T, "_parse_log",
+                        lambda d, errors=None: lenient.append(errors is not None)
+                        or real_parse(d, errors))
+    assert parses(lambda t: t.fsck(verify_rows=False)) == 0
+    assert lenient == [True]
+    monkeypatch.setattr(T, "_parse_log", real_parse)
+
+    # physical replication: one source parse per sync, and on the target
+    # one bookmark parse plus at most two per replayed snapshot
+    src, dst = fresh(), LakeTable(spark, str(tmp_path / "replica"))
+    calls.clear()
+    assert LakeReplicator(src, dst).sync() == 5
+    assert calls[src.path] == 1 and calls[dst.path] == 1 + 2 * 5
+
+    # staging GC: one parse per table, however many versions it keeps
+    tbl = fresh()
+    root = os.path.dirname(tbl.path)
+    os.makedirs(os.path.join(root, "_staging"))
+    pipe = CdcPipeline(spark, oplog_dir=str(tmp_path / "no-feed"), lake_dir=root,
+                       checkpoint_dir=str(tmp_path / "ckpt"))
+    assert parses(lambda t: pipe.vacuum_staging(retain_last=3), tbl) == 1

@@ -19,11 +19,12 @@ re-reading the original feed.  Two modes:
 
 Exactly-once with NO extra state: the target's committed ``batch_id``
 set IS the bookmark (``repl:<mode>:...:v<version>``) — the same
-idempotence rule the pipeline uses for epochs (lake/table.py:172-192),
-so a crash anywhere mid-sync resumes at the exact snapshot it died on
-and a replayed sync is a no-op.  This fixes, at the cascade level, the
-reference's bookmark-advance-on-error leak (msync/bulkwrite.go:96-110):
-here the data commit and the bookmark are the SAME atomic manifest.
+idempotence rule the pipeline uses for epochs
+(``LakeTable._commit_manifest``), so a crash anywhere mid-sync resumes
+at the exact snapshot it died on and a replayed sync is a no-op.  This
+fixes, at the cascade level, the reference's bookmark-advance-on-error
+leak (msync/bulkwrite.go:96-110): here the data commit and the bookmark
+are the SAME atomic manifest.
 
 Scale: each physical step is a column-complete scan of one source
 snapshot's files (O(batch), embarrassingly parallel) and each logical
@@ -78,17 +79,17 @@ class LakeReplicator:
         """Apply source snapshots up to ``v_to`` (default: latest).
         Returns the number of commits applied to the target (0 = already
         caught up).  Safe to call repeatedly / after a crash."""
+        snaps = self.source.snapshots()
         if v_to is None:
-            v_to = self.source.latest_version()
+            v_to = snaps[-1].version if snaps else 0
         v_from = self.last_replicated()
         if v_to <= v_from:
             return 0
         if self.mode == "physical":
-            return self._sync_physical(v_from, v_to)
+            return self._sync_physical(v_from, [s for s in snaps if s.version <= v_to])
         return self._sync_logical(v_from, v_to)
 
-    def _sync_physical(self, v_from: int, v_to: int) -> int:
-        snaps = [s for s in self.source.snapshots() if s.version <= v_to]
+    def _sync_physical(self, v_from: int, snaps: list[Snapshot]) -> int:
         # replay the source's live chain past the bookmark: snapshots
         # behind the last full truncate / compact may be vacuumed (files
         # gone) and are dead anyway — that boundary snapshot resets the
@@ -96,17 +97,14 @@ class LakeReplicator:
         # may have replaced — and vacuum deleted — the delta files of
         # the versions it subsumes: never replay a subsumed delta, its
         # collapsed rows travel inside the minicompact instead
-        todo = [s for s in live_snapshots(snaps) if s.version > v_from]
-        n = 0
-        for s in todo:
-            n += self._apply_snapshot(s, v_from)
-        return n
+        return sum(self._apply_snapshot(s, v_from)
+                   for s in live_snapshots(snaps) if s.version > v_from)
 
     def _apply_snapshot(self, s: Snapshot, v_from: int = 0) -> int:
         """Replay ONE source snapshot onto the target, preserving its
         action semantics.  Idempotent by batch_id; a crash between the
         data write and the manifest leaves only an orphan dir that
-        ``vacuum()`` collects.
+        ``fsck(repair=True)`` collects.
 
         A source **minicompact** replays in one of two forms:
 
@@ -140,11 +138,9 @@ class LakeReplicator:
             df = self.source.spark.read.parquet(
                 os.path.join(self.source.path, s.files_dir)
             )
-            rel, n = self.target._write_data(
-                df, self.target.latest_version() + 1, n_rows=s.n_rows
-            )
-            claimed = self.target._commit_manifest(
-                s.action, bid, s.schema_ddl, n, rel, trunc_seq=s.trunc_seq
+            claimed = self.target._write_and_claim(
+                df, s.action, bid, n_rows=s.n_rows, ddl=s.schema_ddl,
+                trunc_seq=s.trunc_seq,
             )
         return int(claimed is not None)  # None: a racing sync took the batch id
 

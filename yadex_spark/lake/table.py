@@ -10,8 +10,10 @@ plan shape is identical):
 
 Layout::
 
-    <dir>/_meta/v00000001.json      one manifest per snapshot version
-    <dir>/data/s00000001/*.parquet  data files of that snapshot
+    <dir>/_meta/v00000001.json              one manifest per snapshot version
+    <dir>/data/s<ms>-<pid>-<tid>/*.parquet  data files of one snapshot (a
+                                            writer-unique name; the manifest
+                                            names its dir, nothing parses it)
 
 - **append**   snapshot-load rows (initial clone, SURVEY.md I2)
 - **delta**    one collapsed CDC micro-batch: upserts + delete
@@ -114,40 +116,19 @@ class LakeTable:
     # ---------- manifest plumbing ----------
 
     def snapshots(self) -> list[Snapshot]:
-        """All committed snapshots in version order, from the newest
-        metadata CHECKPOINT (one JSON carrying every manifest folded so
-        far — see :meth:`compact_meta`) plus the per-version tail files
-        after it.  Duplicates (a crash between checkpoint creation and
-        folded-file deletion) resolve by version — contents are
-        identical by construction."""
-        meta_dir = os.path.join(self.path, META)
-        ckpt_name = None
-        tails = []
-        for name in os.listdir(meta_dir):
-            if name.startswith("checkpoint-v") and name.endswith(".json"):
-                if ckpt_name is None or name > ckpt_name:
-                    ckpt_name = name
-            elif name.startswith("v") and name.endswith(".json"):
-                tails.append(name)
-        by_version: dict[int, Snapshot] = {}
-        if ckpt_name is not None:
-            with open(os.path.join(meta_dir, ckpt_name)) as f:
-                for m in json.load(f)["manifests"]:
-                    by_version[m["version"]] = Snapshot(**m)
-        for name in tails:
-            with open(os.path.join(meta_dir, name)) as f:
-                m = json.load(f)
-            by_version[m["version"]] = Snapshot(**m)
-        return [by_version[v] for v in sorted(by_version)]
+        """All committed snapshots in version order (:func:`_parse_log`)
+        — the one reader of the manifest log: each lake operation parses
+        it once and hands the list down."""
+        return _parse_log(os.path.join(self.path, META))
 
     def compact_meta(self, keep_recent: int = 64) -> dict:
         """Fold per-version manifest files into ONE checkpoint JSON (the
         Iceberg metadata.json / snapshot-log shape).  Every lake
-        operation calls :meth:`snapshots` — commit (latest version +
-        batch-id idempotence), read (active chain), fsck, replication —
-        and each call opens every manifest file: O(versions) file opens
-        per OPERATION, quadratic over a 10^5-epoch ingest.  After the
-        fold it is one checkpoint read plus a bounded tail.
+        operation parses the log once (:meth:`snapshots`; a commit's
+        claim once per attempt), and without a checkpoint that parse
+        opens every manifest file: O(versions) file opens per
+        operation, quadratic over a 10^5-epoch ingest.  After the fold
+        it is one checkpoint read plus a bounded tail.
 
         ``keep_recent`` newest versions keep their per-version files
         (bounds the rewrite cadence; any value is crash-safe).  The
@@ -174,17 +155,9 @@ class LakeTable:
         if not folded:
             return {"folded": 0, "checkpoint": old_ckpts[0] if old_ckpts else None}
         name = f"checkpoint-v{folded[-1]['version']:08d}.json"
-        final = os.path.join(meta_dir, name)
-        tmp = os.path.join(
-            meta_dir, f".tmp-ckpt-{os.getpid()}-{threading.get_ident()}.json"
-        )
-        with open(tmp, "w") as f:
-            json.dump({"version": folded[-1]["version"], "manifests": folded}, f)
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
-            pass  # same-version checkpoint already exists (identical)
-        os.unlink(tmp)
+        # a lost link means the same-version checkpoint exists (identical)
+        _publish_json(os.path.join(meta_dir, name),
+                      {"version": folded[-1]["version"], "manifests": folded})
         removed = 0
         for n in to_fold:
             try:
@@ -245,45 +218,46 @@ class LakeTable:
                 subsumes=subsumes, file_stats=file_stats,
                 col_stats=col_stats,
             )
-            # unique per pid AND thread: same-process writers (two streams
-            # in one driver) racing a version would otherwise interleave
-            # writes into one shared tmp file and link corrupt JSON
-            tmp = os.path.join(
-                meta_dir,
-                f".tmp-v{version:08d}-{os.getpid()}-{threading.get_ident()}.json",
-            )
-            final = os.path.join(meta_dir, f"v{version:08d}.json")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            try:
-                # os.link fails with EEXIST if another writer claimed the
-                # version — optimistic concurrency, retry with next version
-                os.link(tmp, final)
-                os.unlink(tmp)
+            if _publish_json(os.path.join(meta_dir, f"v{version:08d}.json"), manifest):
                 return version
-            except FileExistsError:
-                os.unlink(tmp)
-                continue
+            # another writer claimed the version (optimistic concurrency):
+            # re-parse, re-check the batch id, retry with the next version
 
-    def _write_data(self, df: DataFrame, version_hint: int, n_rows: int | None = None) -> tuple[str, int]:
-        # writer-unique dir: two threads racing the same version hint in
-        # the same millisecond would otherwise write into ONE directory
-        # and abort each other's job (found by the m27 concurrency
-        # stress); the manifest, not the dir name, assigns the version
+    def _write_and_claim(self, df: DataFrame, action: str,
+                         batch_id: str | None = None, n_rows: int | None = None,
+                         ddl: str | None = None, commit_empty: bool = True,
+                         **claim) -> int | None:
+        """The one write-then-claim path of every files-bearing commit:
+        write ``df`` into a fresh data dir, then claim the next version
+        over it (:meth:`_commit_manifest`, with ``claim`` = its
+        ``trunc_seq``/``subsumes``/``stats_cols``).  ``ddl`` defaults to
+        ``df``'s schema without the hidden columns.  The row count is
+        ``n_rows`` when the caller knows it, else captured DURING the
+        write (an Observation piggybacks on the job — no read-back scan).
+
+        Returns the claimed version, or None — and removes the dir —
+        when the write was empty and ``commit_empty`` is False, or when
+        a racing writer committed ``batch_id`` first.  The dir name is
+        writer-unique (ms/pid/thread): two threads committing in the
+        same millisecond would otherwise write into ONE directory and
+        abort each other's job (found by the m27 concurrency stress);
+        the manifest, not the dir name, assigns the version."""
         rel = os.path.join(
-            DATA,
-            f"s{version_hint:08d}-{int(time.time() * 1000)}"
-            f"-{os.getpid()}-{threading.get_ident()}",
+            DATA, f"s{int(time.time() * 1000)}-{os.getpid()}-{threading.get_ident()}"
         )
         full = os.path.join(self.path, rel)
         if n_rows is None:
-            # exact count captured DURING the write (Observation piggybacks
-            # on the job) — no read-back scan on the clone/compaction paths
             obs = Observation()
             df = df.observe(obs, F.count(F.lit(1)).alias("n"))
         df.write.mode("overwrite").parquet(full)
         n = n_rows if n_rows is not None else int(obs.get["n"])
-        return rel, n
+        if ddl is None:
+            ddl = _ddl(df.drop(SEQ_COL, DELETED_COL))
+        v = (self._commit_manifest(action, batch_id, ddl, n, rel, **claim)
+             if n or commit_empty else None)
+        if v is None:
+            shutil.rmtree(full, ignore_errors=True)
+        return v
 
     # ---------- write paths ----------
 
@@ -298,11 +272,7 @@ class LakeTable:
         stored = df.withColumn(SEQ_COL, F.lit(as_of_seq).cast("long")).withColumn(
             DELETED_COL, F.lit(False)
         )
-        rel, n = self._write_data(stored, self.latest_version() + 1)
-        v = self._commit_manifest("append", batch_id, _ddl(df), n, rel)
-        if v is None:  # a racing writer committed this batch id first
-            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
-        return v
+        return self._write_and_claim(stored, "append", batch_id, ddl=_ddl(df))
 
     def commit_delta(self, collapsed: DataFrame, batch_id: str, n_rows: int | None = None) -> int | None:
         """Apply one collapsed micro-batch (the MERGE INTO equivalent).
@@ -313,16 +283,11 @@ class LakeTable:
         """
         if batch_id in self.committed_batch_ids():
             return None
-        stored = prepare_delta(collapsed)
-        rel, n = self._write_data(stored, self.latest_version() + 1, n_rows)
         # an empty delta is a no-op: committing it would chain an empty
         # parquet snapshot (no readable schema) and burn a version;
         # replaying the epoch later is naturally idempotent
-        ddl = _ddl(stored.drop(SEQ_COL, DELETED_COL))
-        v = self._commit_manifest("delta", batch_id, ddl, n, rel) if n else None
-        if v is None:  # empty, or a racing writer committed this batch id
-            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
-        return v
+        return self._write_and_claim(prepare_delta(collapsed), "delta", batch_id,
+                                     n_rows, commit_empty=False)
 
     def commit_delta_dir(self, files_dir: str, batch_id: str,
                          n_rows: int, schema_ddl: str) -> int | None:
@@ -457,12 +422,9 @@ class LakeTable:
                 int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                 snaps, target_file_bytes,
             )
-        cur = self._cluster(cur, n_buckets, cluster_by, zorder_bits)
-        rel, n = self._write_data(cur, self.latest_version() + 1)
-        ddl = _ddl(cur.drop(SEQ_COL, DELETED_COL))
-        return self._commit_manifest(
-            "compact", None, ddl, n, rel, trunc_seq=kill_seq,
-            stats_cols=list(cluster_by) if cluster_by else None,
+        return self._write_and_claim(
+            self._cluster(cur, n_buckets, cluster_by, zorder_bits), "compact",
+            trunc_seq=kill_seq, stats_cols=list(cluster_by) if cluster_by else None,
         )
 
     def compact_minor(self, min_deltas: int = 2,
@@ -536,11 +498,8 @@ class LakeTable:
         # doc_id-clustered merge at a time
         merged = self._cluster(self._materialize(run, keep_deleted=True),
                                n_buckets, cluster_by, zorder_bits)
-        rel, n = self._write_data(merged, self.latest_version() + 1)
-        ddl = _ddl(merged.drop(SEQ_COL, DELETED_COL))
-        return self._commit_manifest(
-            "minicompact", None, ddl, n, rel,
-            subsumes=[s.version for s in run],
+        return self._write_and_claim(
+            merged, "minicompact", subsumes=[s.version for s in run],
             stats_cols=list(cluster_by) if cluster_by else None,
         )
 
@@ -575,15 +534,11 @@ class LakeTable:
         cur = cur.where(~F.col("doc_id").isin(list(keys)))
         n_buckets = n_buckets or int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         cur = self._cluster(cur, n_buckets)
-        rel, n = self._write_data(cur, self.latest_version() + 1)
-        if n == 0:
+        v = self._write_and_claim(cur, "compact", trunc_seq=kill_seq, commit_empty=False)
+        if v is None:
             # purge emptied the table: an empty parquet dir has no
             # readable schema, so commit a full wipe instead
-            shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
             v = self._commit_manifest("truncate", None, _ddl(cur.drop(SEQ_COL, DELETED_COL)), 0, None)
-        else:
-            ddl = _ddl(cur.drop(SEQ_COL, DELETED_COL))
-            v = self._commit_manifest("compact", None, ddl, n, rel, trunc_seq=kill_seq)
         self.vacuum()
         return v
 
@@ -602,25 +557,18 @@ class LakeTable:
         logical replica lagging within the window — keeps working for
         those versions across compactions.  Versions older than the
         window lose their files (manifests remain as history); the
-        default 0 retains only the current state.  Cost: N+1 manifest
-        walks, driver-side only — no file reads.
+        default 0 retains only the current state (the keep-set is
+        :meth:`_retained_dirs`).  Cost: one manifest parse, driver-side
+        only — no file reads.
 
         Safe against the shared staging layout: a delta committed via
         ``commit_delta_dir`` points at its own ``table=<t>`` subdir, so
         vacuuming one table never touches a sibling table's staging
         data."""
-        latest = self.latest_version()
-        keep = set()
-        keep_versions = set(range(max(1, latest - retain_last), latest + 1))
-        # named refs (tags) pin their versions forever — a tagged
-        # training-run snapshot must re-read byte-identical regardless
-        # of the rolling retain_last window
-        keep_versions.update(self.tags().values())
-        for v in keep_versions:
-            active, _ = self._active_chain(v)
-            keep.update(s.files_dir for s in active)
+        snaps = self.snapshots()
+        keep = self._retained_dirs(snaps, retain_last)
         removed = []
-        for s in self.snapshots():
+        for s in snaps:
             if s.files_dir and s.files_dir not in keep:
                 full = os.path.join(self.path, s.files_dir)
                 if os.path.isdir(full):
@@ -628,6 +576,21 @@ class LakeTable:
                         shutil.rmtree(full)
                     removed.append(s.files_dir)
         return removed
+
+    def _retained_dirs(self, snaps: list[Snapshot], retain_last: int) -> set[str]:
+        """The one retention rule, for :meth:`vacuum` and the pipeline's
+        staging GC (``CdcPipeline.vacuum_staging``): the ``files_dir`` of
+        every snapshot in the active chains of the last ``retain_last``
+        versions plus the latest, and of every tagged version — named
+        refs pin their versions forever, so a tagged training-run
+        snapshot re-reads byte-identical regardless of the rolling
+        window.  Two drifting copies of this rule once deleted retained
+        time-travel data."""
+        latest = snaps[-1].version if snaps else 0
+        keep_versions = set(range(max(1, latest - retain_last), latest + 1))
+        keep_versions.update(self.tags().values())
+        return {s.files_dir for v in keep_versions
+                for s in self._active_chain(v, snaps)[0]}
 
     def history(self) -> DataFrame:
         """The manifest log as a DataFrame (Delta ``DESCRIBE HISTORY`` /
@@ -694,10 +657,8 @@ class LakeTable:
                 int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                 snaps, None,
             )
-        cur = self._cluster(cur, n_buckets)
-        rel, n = self._write_data(cur, self.latest_version() + 1)
-        ddl = _ddl(cur.drop(SEQ_COL, DELETED_COL))
-        return self._commit_manifest("compact", None, ddl, n, rel, trunc_seq=kill_seq)
+        return self._write_and_claim(self._cluster(cur, n_buckets), "compact",
+                                     trunc_seq=kill_seq)
 
     # ---------- named refs (tags) ----------
 
@@ -728,7 +689,7 @@ class LakeTable:
             version = snaps[-1].version
         if version not in {s.version for s in snaps}:
             raise ValueError(f"unknown version {version}")
-        gone = self._vacuumed(self._active_chain(version)[0])
+        gone = self._vacuumed(self._active_chain(version, snaps)[0])
         if gone:
             raise ValueError(
                 f"version {version} is not taggable: its files "
@@ -736,18 +697,10 @@ class LakeTable:
             )
         refs = os.path.join(self.path, self._REFS)
         os.makedirs(refs, exist_ok=True)
-        tmp = os.path.join(
-            refs, f".tmp-{os.getpid()}-{threading.get_ident()}.json"
-        )
-        with open(tmp, "w") as f:
-            json.dump({"name": name, "version": version,
-                       "created_at": time.time()}, f)
-        try:
-            os.link(tmp, os.path.join(refs, f"{name}.json"))
-        except FileExistsError:
-            raise ValueError(f"tag already exists: {name}") from None
-        finally:
-            os.unlink(tmp)
+        if not _publish_json(os.path.join(refs, f"{name}.json"),
+                             {"name": name, "version": version,
+                              "created_at": time.time()}):
+            raise ValueError(f"tag already exists: {name}")
         return version
 
     def tags(self) -> dict[str, int]:
@@ -791,45 +744,32 @@ class LakeTable:
           (``verify_rows``) its parquet footer row counts sum to the
           manifest's ``n_rows`` (history versions may legitimately have
           been vacuumed — only the active chain must be readable);
-        - orphan data dirs (a writer crashed between ``_write_data``
+        - orphan data dirs (a writer crashed between the data write
           and ``_commit_manifest``: written, claimed by no manifest)
           and stale ``.tmp-*`` manifest files from crashed commits.
+
+        An unreadable manifest or checkpoint is reported, not raised:
+        the other checks run over the manifests that could be read.
 
         ``repair=True`` deletes orphans and stale tmp files — never a
         dir ANY manifest references (removing unreachable history is
         :meth:`vacuum`'s decision; fsck touches only what no version
-        owns).  Returns ``{"errors", "orphans", "tmp_manifests",
-        "repaired"}`` — all empty = healthy."""
+        owns), and no orphan while some manifest is unreadable (it may
+        be that manifest's data).  Returns ``{"errors", "orphans",
+        "tmp_manifests", "repaired"}`` — all empty = healthy."""
         import pyarrow.parquet as pq
 
         meta_dir = os.path.join(self.path, META)
-        report: dict = {"errors": [], "orphans": [], "tmp_manifests": [], "repaired": []}
-        by_version: dict[int, dict] = {}
-        for name in sorted(os.listdir(meta_dir)):
-            p = os.path.join(meta_dir, name)
-            if name.startswith(".tmp-"):
-                report["tmp_manifests"].append(name)
-                continue
-            if name.startswith("checkpoint-v") and name.endswith(".json"):
-                # metadata checkpoint (compact_meta): folded manifests
-                # count exactly like per-version files for every check
-                try:
-                    with open(p) as f:
-                        for m in json.load(f)["manifests"]:
-                            by_version.setdefault(m["version"], m)
-                except Exception as ex:
-                    report["errors"].append(f"unreadable checkpoint {name}: {ex}")
-                continue
-            if not (name.startswith("v") and name.endswith(".json")):
-                continue
-            try:
-                with open(p) as f:
-                    m = json.load(f)
-                by_version[m["version"]] = m
-            except Exception as ex:
-                report["errors"].append(f"unreadable manifest {name}: {ex}")
-        manifests = [by_version[v] for v in sorted(by_version)]
-        versions = sorted(m["version"] for m in manifests)
+        report: dict = {
+            "errors": [], "orphans": [], "repaired": [],
+            "tmp_manifests": sorted(n for n in os.listdir(meta_dir)
+                                    if n.startswith(".tmp-")),
+        }
+        # the one lenient parse: unreadable manifests land in the report
+        # and every check below runs over the ones that could be read
+        snaps = _parse_log(meta_dir, report["errors"])
+        log_readable = not report["errors"]
+        versions = [s.version for s in snaps]
         if versions and versions != list(range(1, versions[-1] + 1)):
             missing = sorted(set(range(1, versions[-1] + 1)) - set(versions))
             report["errors"].append(f"version chain gap: missing {missing}")
@@ -838,15 +778,15 @@ class LakeTable:
         # or forward reference means a hand-edited or corrupt manifest —
         # the active chain would silently mis-resolve)
         vset = set(versions)
-        for m in manifests:
-            for sv in (m.get("subsumes") or []):
-                if sv >= m["version"]:
+        for s in snaps:
+            for sv in (s.subsumes or []):
+                if sv >= s.version:
                     report["errors"].append(
-                        f"v{m['version']}: subsumes forward/self version {sv}"
+                        f"v{s.version}: subsumes forward/self version {sv}"
                     )
                 elif sv not in vset:
                     report["errors"].append(
-                        f"v{m['version']}: subsumes missing version {sv}"
+                        f"v{s.version}: subsumes missing version {sv}"
                     )
         # named refs: a tag must point at an existing version and its
         # chain's files must still exist (vacuum retains tagged chains,
@@ -855,16 +795,16 @@ class LakeTable:
             if tv not in vset:
                 report["errors"].append(f"tag {tname}: unknown version {tv}")
                 continue
-            for s in self._vacuumed(self._active_chain(tv)[0]):
+            for s in self._vacuumed(self._active_chain(tv, snaps)[0]):
                 report["errors"].append(
                     f"tag {tname}: v{s.version} files missing ({s.files_dir})"
                 )
         referenced = {
-            os.path.normpath(os.path.join(self.path, m["files_dir"]))
-            for m in manifests
-            if m.get("files_dir")
+            os.path.normpath(os.path.join(self.path, s.files_dir))
+            for s in snaps
+            if s.files_dir
         }
-        active, _ = self._active_chain()
+        active, _ = self._active_chain(None, snaps)
         for s in active:
             if not s.files_dir:
                 continue
@@ -929,10 +869,12 @@ class LakeTable:
                 if os.path.isdir(full) and full not in referenced:
                     report["orphans"].append(os.path.join(DATA, name))
         if repair:
-            for rel in report["orphans"]:
-                shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
-                report["repaired"].append(rel)
-            report["orphans"] = []
+            # an unreadable manifest may own an "orphan": keep them all
+            if log_readable:
+                for rel in report["orphans"]:
+                    shutil.rmtree(os.path.join(self.path, rel), ignore_errors=True)
+                    report["repaired"].append(rel)
+                report["orphans"] = []
             for name in report["tmp_manifests"]:
                 try:
                     os.unlink(os.path.join(meta_dir, name))
@@ -944,15 +886,19 @@ class LakeTable:
 
     # ---------- read paths ----------
 
-    def _active_chain(self, version: int | None = None) -> tuple[list[Snapshot], int | None]:
+    def _active_chain(self, version: int | None = None,
+                      snaps: list[Snapshot] | None = None) -> tuple[list[Snapshot], int | None]:
         """(data snapshots to union, seq-scoped kill barrier) of the
-        :func:`live_snapshots` at ``version`` (default: latest).
+        :func:`live_snapshots` at ``version`` (default: latest) of
+        ``snaps`` — the operation's parsed log (default: parse it now).
 
         Seq-scoped truncates (drop barriers) return the max barrier; the
         read applies it as a ``_seq >= barrier`` predicate so it is
         correct under out-of-order epoch arrival."""
+        if snaps is None:
+            snaps = self.snapshots()
         active = live_snapshots(
-            [s for s in self.snapshots() if version is None or s.version <= version]
+            [s for s in snaps if version is None or s.version <= version]
         )
         # compacts inherit the barrier (see compact()) so a late pre-barrier
         # epoch arriving after a compaction still cannot resurrect dead rows
@@ -1436,12 +1382,12 @@ class LakeTable:
         ):
             return self._changes_by_diff(v_from, v_to)
 
-        pre_files, pre_kill = self._active_chain(v_from)
+        pre_files, pre_kill = self._active_chain(v_from, all_snaps)
         win_files = [s for s in window if s.files_dir is not None]
         # the window's drop barriers were excluded above, but a barrier
         # committed AT OR BEFORE v_from still kills late pre-barrier rows
         # arriving inside the window (barriers are seq-scoped, order-free)
-        _, kill_to = self._active_chain(v_to)
+        _, kill_to = self._active_chain(v_to, all_snaps)
 
         pre_payload = self._chain_payload_cols(pre_files)
         win_payload = self._chain_payload_cols(win_files)
@@ -1631,6 +1577,64 @@ def prepare_delta(collapsed: DataFrame, keep_table: bool = False) -> DataFrame:
 
 def _ddl(df: DataFrame) -> str:
     return df.schema.simpleString()
+
+
+def _parse_log(meta_dir: str, errors: list | None = None) -> list[Snapshot]:
+    """All committed snapshots in version order, from the newest
+    metadata CHECKPOINT (one JSON carrying every manifest folded so far
+    — see :meth:`LakeTable.compact_meta`) plus the per-version tail
+    files after it.  Duplicates (a crash between checkpoint creation and
+    folded-file deletion) resolve by version — contents are identical
+    by construction.
+
+    Strict by default.  With ``errors`` (fsck's lenient mode) an
+    unreadable checkpoint or manifest — bad JSON, missing fields — is
+    recorded there and skipped, so the audit still runs over every
+    manifest that could be read."""
+    ckpt = None
+    names = []
+    for name in sorted(os.listdir(meta_dir)):
+        if name.startswith("checkpoint-v") and name.endswith(".json"):
+            ckpt = name  # sorted: the last one is the newest
+        elif name.startswith("v") and name.endswith(".json"):
+            names.append(name)
+    by_version: dict[int, Snapshot] = {}
+    for name in ([ckpt] if ckpt else []) + names:
+        try:
+            with open(os.path.join(meta_dir, name)) as f:
+                m = json.load(f)
+            snaps = ([Snapshot(**x) for x in m["manifests"]]
+                     if name == ckpt else [Snapshot(**m)])
+        except Exception as ex:
+            if errors is None:
+                raise
+            kind = "checkpoint" if name == ckpt else "manifest"
+            errors.append(f"unreadable {kind} {name}: {ex}")
+            continue
+        for snap in snaps:
+            by_version[snap.version] = snap
+    return [by_version[v] for v in sorted(by_version)]
+
+
+def _publish_json(final: str, obj) -> bool:
+    """Create ``final`` holding ``obj`` with O_EXCL semantics: write a
+    writer-unique tmp file beside it, hard-link it into place, unlink
+    the tmp.  True when the link won, False when ``final`` already
+    existed (the caller decides what that means).  The tmp name is
+    unique per pid AND thread: same-process writers (two streams in one
+    driver) would otherwise interleave writes into one shared tmp file
+    and link corrupt JSON."""
+    d, base = os.path.split(final)
+    tmp = os.path.join(d, f".tmp-{os.getpid()}-{threading.get_ident()}-{base}")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    try:
+        os.link(tmp, final)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
 
 
 def live_snapshots(snaps: list[Snapshot]) -> list[Snapshot]:

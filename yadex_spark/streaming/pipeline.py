@@ -174,9 +174,6 @@ class CdcPipeline:
     #: hours — the reference never blocks its apply path on maintenance.
     #: Call maintain() out-of-band instead (or let run_with_reload).
     compact_every: int = 0
-    # narrow = codegen'd HashAggregate on max(op_seq) + join-back; beats the
-    # wide struct-max (SortAggregate, no codegen)
-    collapse_impl: str = "narrow"
     #: broadcast the collapse winner set when the epoch's estimated
     #: distinct-key count is at or below this (≈50-100 B/key in the
     #: broadcast hash relation → 2M keys ≈ 100-200 MB per executor);
@@ -328,11 +325,7 @@ class CdcPipeline:
             )
 
         est_keys = sum(r["nkeys"] or 0 for r in inv if r["table"] in routed)
-        collapsed = collapse(
-            live,
-            impl=self.collapse_impl,
-            broadcast_winners=est_keys <= self.broadcast_keys_max,
-        )
+        collapsed = collapse(live, broadcast_winners=est_keys <= self.broadcast_keys_max)
         stats_obs = Observation()
         metrics = []
         for i, t in enumerate(names):
@@ -888,25 +881,12 @@ class CdcPipeline:
         with self._maintenance_lease():
             if min_live_seq == "auto":
                 min_live_seq = feed_min_offset(self.spark, self.oplog_dir)
-            per_table = {}
-            for t in self.tables():
-                tbl = self.table(t)
-                v = tbl.compact(min_live_seq=min_live_seq,
-                                cluster_by=cluster_by)
-                removed = tbl.vacuum(retain_last=retain_last) if vacuum else []
-                meta = tbl.compact_meta()
-                per_table[t] = {"compacted_version": v, "data_dirs_removed": len(removed),
-                                "manifests_folded": meta["folded"]}
-            staging_removed = (self.vacuum_staging(retain_last=retain_last)
-                               if vacuum else [])
-            lineage = self.compact_lineage()
-        return {
-            "tables": per_table,
-            "lineage": lineage,
-            "min_live_seq": min_live_seq,
-            "staging_dirs_removed": len(staging_removed),
-            "ms": round((time.monotonic() - t0) * 1000, 1),
-        }
+            report = self._maintain_tables(
+                "compacted_version", vacuum, retain_last,
+                lambda tbl: tbl.compact(min_live_seq=min_live_seq, cluster_by=cluster_by),
+            )
+        return {**report, "min_live_seq": min_live_seq,
+                "ms": round((time.monotonic() - t0) * 1000, 1)}
 
     def maintain_minor(self, min_deltas: int = 2, vacuum: bool = True,
                        retain_last: int = 0,
@@ -921,27 +901,37 @@ class CdcPipeline:
         Same lease + not-while-applying rules as :meth:`maintain`."""
         t0 = time.monotonic()
         with self._maintenance_lease():
-            per_table = {}
-            for t in self.tables():
-                tbl = self.table(t)
-                v = tbl.compact_minor(min_deltas=min_deltas,
-                                      cluster_by=cluster_by)
-                removed = (tbl.vacuum(retain_last=retain_last)
-                           if (vacuum and v is not None) else [])
-                meta = tbl.compact_meta()
-                per_table[t] = {
-                    "minicompacted_version": v,
-                    "data_dirs_removed": len(removed),
-                    "manifests_folded": meta["folded"],
-                }
-            staging_removed = (self.vacuum_staging(retain_last=retain_last)
-                               if vacuum else [])
-            lineage = self.compact_lineage()
+            report = self._maintain_tables(
+                "minicompacted_version", vacuum, retain_last,
+                lambda tbl: tbl.compact_minor(min_deltas=min_deltas, cluster_by=cluster_by),
+                vacuum_unchanged=False,
+            )
+        return {**report, "ms": round((time.monotonic() - t0) * 1000, 1)}
+
+    def _maintain_tables(self, version_key: str, vacuum: bool, retain_last: int,
+                         rewrite, vacuum_unchanged: bool = True) -> dict:
+        """The one per-table pass of :meth:`maintain` and
+        :meth:`maintain_minor`, run under the caller's maintenance lease:
+        ``rewrite(tbl)`` (the compaction; its version lands under
+        ``version_key``), the table's vacuum (skipped for a table the
+        rewrite left unchanged unless ``vacuum_unchanged``) and manifest
+        checkpoint, then the staging GC and the lineage fold."""
+        per_table = {}
+        for t in self.tables():
+            tbl = self.table(t)
+            v = rewrite(tbl)
+            removed = (tbl.vacuum(retain_last=retain_last)
+                       if vacuum and (vacuum_unchanged or v is not None) else [])
+            per_table[t] = {
+                version_key: v,
+                "data_dirs_removed": len(removed),
+                "manifests_folded": tbl.compact_meta()["folded"],
+            }
+        staging_removed = self.vacuum_staging(retain_last=retain_last) if vacuum else []
         return {
             "tables": per_table,
-            "lineage": lineage,
+            "lineage": self.compact_lineage(),
             "staging_dirs_removed": len(staging_removed),
-            "ms": round((time.monotonic() - t0) * 1000, 1),
         }
 
     def purge_keys(self, keys: list) -> dict:
@@ -1011,25 +1001,12 @@ class CdcPipeline:
         # LIVE committed data as garbage and delete it
         referenced = set()
         for t in self.tables():
+            # the keep-set of LakeTable.vacuum(retain_last) itself, tags
+            # included: manifests outside it stay as history but their
+            # staging data is garbage
             tbl = self.table(t)
-            # same keep-set as LakeTable.vacuum(retain_last): the chains
-            # of the last N versions plus the current one — manifests
-            # OUTSIDE the retention window stay as history but their
-            # staging data is garbage.  A mismatch here (lake vacuum
-            # retaining a version whose delta lives in staging while
-            # this pass keys only on the current chain) deleted retained
-            # time-travel data — found by driving maintain_minor(retain_last=1)
-            latest = tbl.latest_version()
-            keep_versions = set(range(max(1, latest - retain_last), latest + 1))
-            # named refs pin their chains forever (LakeTable.vacuum
-            # honors tags; a staging pass that didn't would gut a
-            # tagged delta that still lives under _staging)
-            keep_versions.update(tbl.tags().values())
-            for v in keep_versions:
-                active, _ = tbl._active_chain(v)
-                for s in active:
-                    if s.files_dir:
-                        referenced.add(os.path.realpath(os.path.join(tbl.path, s.files_dir)))
+            for d in tbl._retained_dirs(tbl.snapshots(), retain_last):
+                referenced.add(os.path.realpath(os.path.join(tbl.path, d)))
         removed = []
         for scope in sorted(os.listdir(staging_root)):
             sdir = os.path.join(staging_root, scope)
