@@ -280,11 +280,11 @@ def test_each_lake_operation_parses_the_log_once(spark, tmp_path, _tagged_lake,
     monkeypatch.setattr(T, "_parse_log", real_parse)
 
     # physical replication: one source parse per sync, and on the target
-    # one bookmark parse plus at most two per replayed snapshot
+    # one bookmark parse plus one (the claim) per replayed snapshot
     src, dst = fresh(), LakeTable(spark, str(tmp_path / "replica"))
     calls.clear()
     assert LakeReplicator(src, dst).sync() == 5
-    assert calls[src.path] == 1 and calls[dst.path] == 1 + 2 * 5
+    assert calls[src.path] == 1 and calls[dst.path] == 1 + 5
 
     # staging GC: one parse per table, however many versions it keeps
     tbl = fresh()

@@ -403,6 +403,29 @@ def test_dedup_clusters_driver_path_equals_distributed(spark):
                                 "x": "x", "y": "x"}
 
 
+def test_dedup_clusters_driver_failure_falls_through(spark, monkeypatch):
+    """A failing driver union-find (e.g. its collect over
+    spark.driver.maxResultSize) falls through to pointer jumping: the
+    labeling — singletons from ``all_docs`` included — equals the
+    distributed path's."""
+    from yadex_spark.operators import dedup
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6), (7, 5)],
+                                  "doc_a long, doc_b long")
+    docs = spark.createDataFrame([(i,) for i in range(1, 10)], "doc_id long")
+    want = {tuple(r) for r in dedup.dedup_clusters(
+        pairs, all_docs=docs, driver_cc_max_edges=0).collect()}
+
+    def boom(*_a, **_k):
+        raise RuntimeError("driver result too large")
+
+    monkeypatch.setattr(dedup, "_driver_union_find", boom)
+    stats: dict = {}
+    got = {tuple(r) for r in dedup.dedup_clusters(pairs, all_docs=docs, stats=stats).collect()}
+    assert got == want and len(got) == 9
+    assert stats["rounds"] >= 1  # answered by the distributed path
+
+
 def test_simhash_chunks_match_bitstring(spark):
     """_simhash_chunks is the bit-exact integer form of the simhash bit
     string: chunk i == int(bitstring[off:off+w], 2) — the equivalence

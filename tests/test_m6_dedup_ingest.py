@@ -267,3 +267,25 @@ def test_minor_maintain_preserves_semantics_and_prunes(spark, tmp_path, feed):
     assert st["files_read"] <= 2  # merged files are range-clustered
     got = {(r["doc_id"], r["ingest_seq"]) for r in ing2.accepted().collect()}
     assert got == want | {("mlate0", 20_000)}  # dup dropped, fresh kept
+
+
+def test_maintain_folds_every_tables_manifest_log(spark, tmp_path, feed, monkeypatch):
+    """Both maintenance tiers fold the manifest log of every table they
+    maintain, once each (the CdcPipeline's per-table step): a registry
+    takes one version per epoch and is parsed several times per epoch,
+    so an unfolded log makes every epoch's parse grow with history."""
+    from yadex_spark.lake.table import LakeTable
+
+    _, path = feed
+    ing = DedupIngest(spark, path, str(tmp_path / "lake"), str(tmp_path / "ckpt"),
+                      max_files_per_trigger=1)
+    ing.run_available_now()
+    calls = []
+    real = LakeTable.compact_meta
+    monkeypatch.setattr(LakeTable, "compact_meta",
+                        lambda self, *a, **k: calls.append(self.path) or real(self, *a, **k))
+    for minor in (True, False):
+        calls.clear()
+        rep = ing.maintain(minor=minor)
+        assert sorted(calls) == sorted([ing.seen.path, ing.accepted_table.path])
+        assert all(rep[t]["manifests_folded"] >= 0 for t in ("seen", "accepted"))

@@ -102,9 +102,12 @@ class LakeReplicator:
 
     def _apply_snapshot(self, s: Snapshot, v_from: int = 0) -> int:
         """Replay ONE source snapshot onto the target, preserving its
-        action semantics.  Idempotent by batch_id; a crash between the
-        data write and the manifest leaves only an orphan dir that
-        ``fsck(repair=True)`` collects.
+        action semantics.  Idempotent by batch_id: ``sync`` only replays
+        versions past the bookmark it parsed (no such id was committed
+        then), and the claim re-checks the id under O_EXCL against a
+        racing sync — so the target log is parsed once per snapshot, in
+        the claim.  A crash between the data write and the manifest
+        leaves only an orphan dir that ``fsck(repair=True)`` collects.
 
         A source **minicompact** replays in one of two forms:
 
@@ -123,8 +126,6 @@ class LakeReplicator:
           last-writer-wins picks one deterministically — state-safe,
           briefly storage-duplicated until the target's own compaction."""
         bid = self._batch_id(s.version - 1, s.version)
-        if bid in self.target.committed_batch_ids():
-            return 0
         if s.files_dir is None:  # truncate (full wipe or seq barrier)
             claimed = self.target._commit_manifest(
                 s.action, bid, s.schema_ddl, 0, None, trunc_seq=s.trunc_seq
@@ -159,9 +160,8 @@ class LakeReplicator:
         Delta-CDF "changes no longer available, refresh the consumer"
         path, at O(one scan of each side) with the same collapsed-delta
         commit and the same idempotent batch id."""
+        # past the bookmark by construction; commit_delta re-checks the id
         bid = self._batch_id(v_from, v_to)
-        if bid in self.target.committed_batch_ids():
-            return 0
         if self._pre_state_vacuumed(v_from):
             from yadex_spark.lake.table import state_diff
 

@@ -23,8 +23,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from yadex_spark.operators.common import spread as _spread
+from yadex_spark.operators.sketch import kmv_hash
 
 HEX = "0123456789abcdef"
+
+#: :func:`dedup_clusters`' default edge cap for the driver union-find
+#: (2^20 distinct edges — ~32 MB collected)
+DRIVER_CC_MAX_EDGES = 1 << 20
 
 
 def words_col(text: Column) -> Column:
@@ -115,34 +120,38 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, pct_threshold: int = 2,
 def minhash_signatures(docs: DataFrame, k: int = 8, n: int = 3) -> DataFrame:
     """k-permutation MinHash as k BIGINT-mins of seeded md5 over shingles.
 
-    The hash is the top 60 bits of md5 as an integer (15 hex chars —
-    fits a signed 64-bit in both engines; DuckDB mirrors it with
+    The hash is ``sketch.kmv_hash`` of ``'<i>|<shingle>'``: the top 60
+    bits of md5 as an integer (15 hex chars — fits a signed 64-bit in
+    both engines; DuckDB mirrors it with
     CAST('0x'||substr(md5(..),1,15) AS BIGINT)).  Numeric min over
     fixed-width hex equals the string min, but a BIGINT agg buffer runs
     as a codegen'd HashAggregate — the round-1 string min fell back to
     SortAggregate (var-length buffers, no codegen)."""
     sh = doc_shingles(docs, n)
-    aggs = [
-        F.min(
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{i}|"), F.col("sh"))), 1, 15), 16, 10
-            ).cast("long")
-        ).alias(f"sig{i}")
-        for i in range(k)
-    ]
+    aggs = [F.min(kmv_hash(F.concat(F.lit(f"{i}|"), F.col("sh")))).alias(f"sig{i}")
+            for i in range(k)]
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_pairs(docs: DataFrame, k: int = 8, n: int = 3) -> DataFrame:
-    """LSH banding with 1-row bands: candidate pairs sharing ANY of the
-    k min-hashes (shingle→minhash→band→bucket-join)."""
+def minhash_bands(docs: DataFrame, k: int = 8, n: int = 3) -> DataFrame:
+    """(doc_id, band, sig): the k 1-row LSH bands of every doc with at
+    least one shingle — band i holds :func:`minhash_signatures`' sig i.
+    The one banding kernel of :func:`minhash_lsh_pairs`,
+    ``text.decontaminate_fuzzy`` and the streaming near-dup registry
+    (whose on-disk band key is ``'<band>|<sig>'``)."""
     sigs = minhash_signatures(docs, k, n)
-    bands = sigs.select(
+    return sigs.select(
         "doc_id",
         F.explode(
             F.array(*[F.struct(F.lit(i).alias("band"), F.col(f"sig{i}").alias("sig")) for i in range(k)])
         ).alias("bs"),
     ).select("doc_id", "bs.band", "bs.sig")
+
+
+def minhash_lsh_pairs(docs: DataFrame, k: int = 8, n: int = 3) -> DataFrame:
+    """LSH banding with 1-row bands: candidate pairs sharing ANY of the
+    k min-hashes (shingle→minhash→band→bucket-join)."""
+    bands = minhash_bands(docs, k, n)
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -380,7 +389,7 @@ def simhash_pairs(docs: DataFrame, bits: int = 64, bands: int = 4,
 def dedup_clusters(pairs: DataFrame, max_iter: int = 30,
                    all_docs: DataFrame | None = None,
                    stats: dict | None = None,
-                   driver_cc_max_edges: int | None = None) -> DataFrame:
+                   driver_cc_max_edges: int = DRIVER_CC_MAX_EDGES) -> DataFrame:
     """Connected components over near-dup pairs: every doc that appears
     in a pair gets its component's MIN doc id as ``cluster_id`` — the
     canonical-representative assignment a real dedup pass needs (pair
@@ -421,116 +430,110 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 30,
     relation whose O(E α(E)) sequential union-find costs milliseconds,
     where every distributed round costs a full job wave; graphs over
     the cap take the unchanged pointer-jumping path, so the 100 TB
-    shape is identical.  0 disables the driver path entirely."""
-    import os as _os
-
-    if driver_cc_max_edges is None:
-        driver_cc_max_edges = int(
-            _os.environ.get("YADEX_CC_DRIVER_MAX_EDGES", str(1 << 20))
-        )
+    shape is identical.  If the driver path fails (e.g. the collect
+    exceeds ``spark.driver.maxResultSize``), the labeling falls through
+    to pointer jumping.  0 disables the driver path entirely."""
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .distinct()
     ).persist()
-
-    if driver_cc_max_edges > 0:
+    try:
+        out = None
         # bounded size probe: scans at most cap+1 rows (LocalLimit
         # short-circuits), never the full edge set
-        probe = edges.limit(driver_cc_max_edges + 1).count()
-        if probe <= driver_cc_max_edges:
+        if (driver_cc_max_edges > 0
+                and edges.limit(driver_cc_max_edges + 1).count() <= driver_cc_max_edges):
             try:
                 out = _driver_union_find(pairs.sparkSession, edges, stats)
-                if all_docs is not None:
-                    singles = (
-                        all_docs.select("doc_id").distinct()
-                        .join(out.select("doc_id"), "doc_id", "left_anti")
-                        .withColumn("cluster_id", F.col("doc_id"))
-                    )
-                    out = out.unionByName(singles)
-                return out
-            finally:
-                edges.unpersist()
+            except Exception:  # driver-side failure: fall through to the joins
+                pass
+        if out is None:
+            out = _pointer_jumping(edges, max_iter, stats)
+    finally:
+        edges.unpersist()
+    if all_docs is not None:
+        singles = (
+            all_docs.select("doc_id").distinct()
+            .join(out.select("doc_id"), "doc_id", "left_anti")
+            .withColumn("cluster_id", F.col("doc_id"))
+        )
+        out = out.unionByName(singles)
+    return out
 
+
+def _pointer_jumping(edges: DataFrame, max_iter: int, stats: dict | None) -> DataFrame:
+    """(doc_id, cluster_id) by iterative min-label propagation with
+    double pointer jumps over the symmetric ``edges`` (src, dst) — the
+    distributed path of :func:`dedup_clusters`."""
     labels = (
         edges.select(F.col("src").alias("doc")).distinct()
         .withColumn("label", F.col("doc"))
     ).persist()
 
     initial = labels  # unpersisted once round 1 has replaced it
-    try:
-        for round_no in range(1, max_iter + 1):
-            nbr_min = (
-                edges.join(
-                    labels.select(F.col("doc").alias("dst"), F.col("label").alias("nl")),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.min("nl").alias("nbr_min"))
+    for round_no in range(1, max_iter + 1):
+        nbr_min = (
+            edges.join(
+                labels.select(F.col("doc").alias("dst"), F.col("label").alias("nl")),
+                "dst",
             )
-            # inner join: every doc in `labels` has >= 1 neighbor by
-            # construction (edges are symmetric and labels = edge
-            # sources), so nothing is lost.  The previous label rides
-            # along as `_prev` so the convergence check below is a
-            # plain filter over the round's own output — the old shape
-            # paid a join-with-previous-labels count job per round.
+            .groupBy("src")
+            .agg(F.min("nl").alias("nbr_min"))
+        )
+        # inner join: every doc in `labels` has >= 1 neighbor by
+        # construction (edges are symmetric and labels = edge
+        # sources), so nothing is lost.  The previous label rides
+        # along as `_prev` so the convergence check below is a
+        # plain filter over the round's own output — the old shape
+        # paid a join-with-previous-labels count job per round.
+        cur = (
+            labels.join(nbr_min, labels.doc == nbr_min.src)
+            .select(
+                labels.doc.alias("doc"),
+                F.least(labels.label, F.col("nbr_min")).alias("label"),
+                labels.label.alias("_prev"),
+            )
+        )
+        # DOUBLE pointer jump: label <- label(label), twice.  Labels
+        # are always node ids, so the looked-up value exists and is
+        # <= the current label; the second jump contracts chains
+        # twice as fast for one extra small-table join, halving the
+        # round count — and the per-round fixed cost (job launch,
+        # checkpoint, codegen) dominated this operator.  (Distinct
+        # column names on the lookup side: a USING self-join on a
+        # column aliasing the other side's attribute is ambiguous.)
+        for _ in range(2):
+            lut = cur.select(
+                F.col("doc").alias("_lk"), F.col("label").alias("_jmp")
+            )
             cur = (
-                labels.join(nbr_min, labels.doc == nbr_min.src)
+                cur.join(lut, F.col("label") == F.col("_lk"), "left")
                 .select(
-                    labels.doc.alias("doc"),
-                    F.least(labels.label, F.col("nbr_min")).alias("label"),
-                    labels.label.alias("_prev"),
+                    "doc", F.coalesce("_jmp", "label").alias("label"), "_prev"
                 )
             )
-            # DOUBLE pointer jump: label <- label(label), twice.  Labels
-            # are always node ids, so the looked-up value exists and is
-            # <= the current label; the second jump contracts chains
-            # twice as fast for one extra small-table join, halving the
-            # round count — and the per-round fixed cost (job launch,
-            # checkpoint, codegen) dominated this operator.  (Distinct
-            # column names on the lookup side: a USING self-join on a
-            # column aliasing the other side's attribute is ambiguous.)
-            for _ in range(2):
-                lut = cur.select(
-                    F.col("doc").alias("_lk"), F.col("label").alias("_jmp")
-                )
-                cur = (
-                    cur.join(lut, F.col("label") == F.col("_lk"), "left")
-                    .select(
-                        "doc", F.coalesce("_jmp", "label").alias("label"), "_prev"
-                    )
-                )
-            # truncate the logical plan each round: without it iteration
-            # i carries an i-deep lineage and Catalyst re-analysis alone
-            # grows quadratically.  Lazy: the changed-count below is the
-            # materializing action — ONE job per round where the old
-            # shape paid an eager-checkpoint job PLUS a count job.
-            new = cur.localCheckpoint(eager=False)
-            changed = new.where(F.col("label") != F.col("_prev")).count()
-            if initial is not None:
-                initial.unpersist()
-                initial = None
-            # (each round's localCheckpoint blocks are released by
-            # context GC once unreferenced — ~log(diameter) small label
-            # tables per call, bounded)
-            labels = new.select("doc", "label")
-            if changed == 0:
-                if stats is not None:
-                    stats["rounds"] = round_no
-                out = labels.select(
-                    F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id")
-                )
-                if all_docs is not None:
-                    singles = (
-                        all_docs.select("doc_id").distinct()
-                        .join(out.select("doc_id"), "doc_id", "left_anti")
-                        .withColumn("cluster_id", F.col("doc_id"))
-                    )
-                    out = out.unionByName(singles)
-                return out
-        raise RuntimeError(f"dedup_clusters did not converge in {max_iter} rounds")
-    finally:
-        edges.unpersist()
+        # truncate the logical plan each round: without it iteration
+        # i carries an i-deep lineage and Catalyst re-analysis alone
+        # grows quadratically.  Lazy: the changed-count below is the
+        # materializing action — ONE job per round where the old
+        # shape paid an eager-checkpoint job PLUS a count job.
+        new = cur.localCheckpoint(eager=False)
+        changed = new.where(F.col("label") != F.col("_prev")).count()
+        if initial is not None:
+            initial.unpersist()
+            initial = None
+        # (each round's localCheckpoint blocks are released by
+        # context GC once unreferenced — ~log(diameter) small label
+        # tables per call, bounded)
+        labels = new.select("doc", "label")
+        if changed == 0:
+            if stats is not None:
+                stats["rounds"] = round_no
+            return labels.select(
+                F.col("doc").alias("doc_id"), F.col("label").alias("cluster_id")
+            )
+    raise RuntimeError(f"dedup_clusters did not converge in {max_iter} rounds")
 
 
 def _driver_union_find(spark, edges: DataFrame, stats: dict | None) -> DataFrame:
@@ -580,8 +583,8 @@ def chunk_structs(text: Column, p: int) -> Column:
     """array<struct<p0,nw,passage>> — a document's content-defined
     chunks: a word STARTS a new chunk when hash(word) % p == 0
     (expected chunk length ~p words), so chunking is shift-invariant.
-    Pure per-row HOFs, O(words) per doc; the shared chunker of
-    :func:`passage_dedup` and the streaming span-dedup ingest."""
+    Pure per-row HOFs, O(words) per doc; exploded by
+    :func:`_chunk_rows`."""
     ws = words_col(text)
     n = F.size(ws)
     is_b = lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long") % p == 0  # noqa: E731
@@ -633,20 +636,10 @@ def passage_dedup(docs: DataFrame, p: int = 6, min_words: int = 4) -> DataFrame:
     join-back, so on a mostly-unique corpus the build side is small
     enough for AQE to broadcast; reassembly is one groupBy(doc_id).
     """
-    chunk = chunk_structs(F.col("text"), p)
-    # spread BEFORE the chunk explode: per-word md5 + slicing is
-    # CPU-heavy but tiny by bytes, the exact shape AQE coalescing (or a
-    # single-file scan) serializes to one task — the decontaminate
-    # lesson; measured 6-8x on the chunking stage at sf0.1
     # stage barrier: the chunk explode (per-word md5 + slicing) feeds
     # BOTH the winner aggregate and the keep join-back — without it the
     # chunking pass runs twice (guide §2.4)
-    chunks = (
-        _spread(docs.select("doc_id", "text"), "doc_id")
-        .select("doc_id", F.explode(chunk).alias("c"))
-        .select("doc_id", "c.p0", "c.nw", F.md5("c.passage").alias("ph"), "c.passage")
-        .localCheckpoint(eager=False)
-    )
+    chunks = _chunk_rows(docs, p, "doc_id").localCheckpoint(eager=False)
     eligible = chunks.where(F.col("nw") >= min_words)
     winners = (
         eligible.groupBy("ph")
@@ -660,7 +653,29 @@ def passage_dedup(docs: DataFrame, p: int = 6, min_words: int = 4) -> DataFrame:
         | F.col("w").isNull()
         | (F.struct("doc_id", "p0") == F.col("w")),
     )
-    return kept.groupBy("doc_id").agg(
+    return _rebuild_chunks(kept, "doc_id")
+
+
+def _chunk_rows(docs: DataFrame, p: int, key: str, *carry: str) -> DataFrame:
+    """(key, *carry, p0, nw, ph, passage): one row per content-defined
+    chunk occurrence (:func:`chunk_structs`), ``ph`` its md5 — the chunk
+    hash of :func:`passage_dedup` and of the streaming span registry.
+    Spread on ``key`` BEFORE the explode: per-word md5 + slicing is
+    CPU-heavy but tiny by bytes, the exact shape AQE coalescing (or a
+    single-file scan) serializes to one task — the decontaminate
+    lesson; measured 6-8x on the chunking stage at sf0.1."""
+    return (
+        _spread(docs.select(key, *carry, "text"), key)
+        .select(key, *carry, F.explode(chunk_structs(F.col("text"), p)).alias("c"))
+        .select(key, *carry, "c.p0", "c.nw", F.md5("c.passage").alias("ph"), "c.passage")
+    )
+
+
+def _rebuild_chunks(kept: DataFrame, *keys: str) -> DataFrame:
+    """One row per doc of :func:`_chunk_rows` rows carrying a ``keep``
+    flag: (*keys, n_chunks, n_dropped, clean_text = the kept passages
+    in position order)."""
+    return kept.groupBy(*keys).agg(
         F.count("*").alias("n_chunks"),
         F.sum(F.when(F.col("keep"), 0).otherwise(1)).alias("n_dropped"),
         F.concat_ws(

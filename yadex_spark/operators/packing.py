@@ -96,15 +96,21 @@ def train_val_split(docs: DataFrame, val_pct: int = 10) -> DataFrame:
     a doc never migrates between train and val as the corpus grows.
 
     Output: (doc_id, bucket, split)."""
+    return docs.select("doc_id", *_split_cols(F.col("doc_id"), val_pct))
+
+
+def _split_cols(key, val_pct: int) -> list:
+    """[bucket, split]: md5(string(key)) prefix mod 100, and 'val' when
+    the bucket is under ``val_pct`` — the one split rule of
+    :func:`train_val_split` and :func:`leakage_safe_split`."""
     bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
+        F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10)
         .cast("long") % 100
     )
-    return docs.select(
-        "doc_id",
+    return [
         bucket.alias("bucket"),
         F.when(bucket < val_pct, "val").otherwise("train").alias("split"),
-    )
+    ]
 
 
 def leakage_safe_split(docs: DataFrame, pairs: DataFrame,
@@ -149,16 +155,7 @@ def leakage_safe_split(docs: DataFrame, pairs: DataFrame,
             F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("split_key"),
         )
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("split_key").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 100
-    )
-    return keyed.select(
-        "doc_id",
-        "split_key",
-        bucket.alias("bucket"),
-        F.when(bucket < val_pct, "val").otherwise("train").alias("split"),
-    )
+    return keyed.select("doc_id", "split_key", *_split_cols(F.col("split_key"), val_pct))
 
 
 def mix_rates(docs: DataFrame, target_bp: dict[str, int]) -> DataFrame:
@@ -184,28 +181,7 @@ def mix_rates(docs: DataFrame, target_bp: dict[str, int]) -> DataFrame:
     thousand rows at worst.
 
     Output: (source, n_tokens, share_target_bp, rate_bp)."""
-    share = F.create_map(*[F.lit(x) for kv in target_bp.items() for x in kv])
-    stats = (
-        docs.select("source", token_estimate(F.col("text")).alias("tok"))
-        .groupBy("source")
-        .agg(F.sum("tok").alias("n_tokens"))
-        .withColumn(
-            "share_target_bp",
-            F.coalesce(share[F.col("source")], F.lit(0)).cast("long"),
-        )
-        .withColumn(
-            "_kcand",
-            F.expr("CASE WHEN share_target_bp > 0 "
-                   "THEN (10000 * n_tokens) div share_target_bp END"),
-        )
-        .withColumn("_k", F.min("_kcand").over(Window.partitionBy()))
-    )
-    return stats.select(
-        "source", "n_tokens", "share_target_bp",
-        F.expr("CAST(CASE WHEN share_target_bp > 0 "
-               "THEN least(10000, (share_target_bp * _k) div n_tokens) "
-               "ELSE 0 END AS BIGINT)").alias("rate_bp"),
-    )
+    return _mix_rates(docs, target_bp, upsample=False)
 
 
 def mix_rates_upsampled(docs: DataFrame, target_bp: dict[str, int]) -> DataFrame:
@@ -225,6 +201,13 @@ def mix_rates_upsampled(docs: DataFrame, target_bp: dict[str, int]) -> DataFrame
     as there.
 
     Output: (source, n_tokens, share_target_bp, rate_bp)."""
+    return _mix_rates(docs, target_bp, upsample=True)
+
+
+def _mix_rates(docs: DataFrame, target_bp: dict[str, int], upsample: bool) -> DataFrame:
+    """The one waterfilling solve of :func:`mix_rates` (K = the MIN over
+    targeted sources of (10000*T_s) div w_s, rates capped at 10000) and
+    :func:`mix_rates_upsampled` (K = the MAX, rates uncapped)."""
     share = F.create_map(*[F.lit(x) for kv in target_bp.items() for x in kv])
     stats = (
         docs.select("source", token_estimate(F.col("text")).alias("tok"))
@@ -239,12 +222,15 @@ def mix_rates_upsampled(docs: DataFrame, target_bp: dict[str, int]) -> DataFrame
             F.expr("CASE WHEN share_target_bp > 0 "
                    "THEN (10000 * n_tokens) div share_target_bp END"),
         )
-        .withColumn("_k", F.max("_kcand").over(Window.partitionBy()))
+        .withColumn("_k", (F.max if upsample else F.min)("_kcand").over(Window.partitionBy()))
     )
+    rate = "(share_target_bp * _k) div n_tokens"
+    if not upsample:
+        rate = f"least(10000, {rate})"
     return stats.select(
         "source", "n_tokens", "share_target_bp",
         F.expr("CAST(CASE WHEN share_target_bp > 0 "
-               "THEN (share_target_bp * _k) div n_tokens "
+               f"THEN {rate} "
                "ELSE 0 END AS BIGINT)").alias("rate_bp"),
     )
 
@@ -264,14 +250,8 @@ def mix_corpus(docs: DataFrame, target_bp: dict[str, int]) -> DataFrame:
     rates with :func:`mix_rates` and reuse them across epochs.
 
     Output: kept rows only — (doc_id, source, bucket, rate_bp)."""
-    rates = mix_rates(docs, target_bp).select("source", "rate_bp")
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("long") % 10_000
-    )
     return (
-        docs.select("doc_id", "source", bucket.alias("bucket"))
-        .join(rates, "source")
+        _mix_buckets(docs, mix_rates(docs, target_bp))
         .where(F.col("bucket") < F.col("rate_bp"))
         .select("doc_id", "source", "bucket", "rate_bp")
     )
@@ -292,18 +272,12 @@ def mix_corpus_epochs(docs: DataFrame, target_bp: dict[str, int]) -> DataFrame:
     fan-out is a per-row ``explode`` over a ≤⌈rate/10000⌉-element
     sequence — no shuffle, expansion bounded by the largest upsample
     factor.  Output: (doc_id, epoch, source, bucket, rate_bp)."""
-    rates = mix_rates_upsampled(docs, target_bp).select("source", "rate_bp")
-    bucket = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-        .cast("long") % 10_000
-    )
     n_copies = (
         F.expr("rate_bp div 10000")
         + F.when(F.col("bucket") < F.col("rate_bp") % 10_000, 1).otherwise(0)
     )
     return (
-        docs.select("doc_id", "source", bucket.alias("bucket"))
-        .join(rates, "source")
+        _mix_buckets(docs, mix_rates_upsampled(docs, target_bp))
         .withColumn(
             "epoch",
             F.explode(
@@ -313,6 +287,21 @@ def mix_corpus_epochs(docs: DataFrame, target_bp: dict[str, int]) -> DataFrame:
             ),
         )
         .select("doc_id", "epoch", "source", "bucket", "rate_bp")
+    )
+
+
+def _mix_buckets(docs: DataFrame, rates: DataFrame) -> DataFrame:
+    """(source, doc_id, bucket, rate_bp): each doc's content-stable
+    ``'mix|'``-salted bucket in [0, 10000) joined to its source's rate
+    — the keep/copy key of :func:`mix_corpus` and
+    :func:`mix_corpus_epochs`."""
+    bucket = (
+        F.conv(F.substring(F.md5(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
+        .cast("long") % 10_000
+    )
+    return (
+        docs.select("doc_id", "source", bucket.alias("bucket"))
+        .join(rates.select("source", "rate_bp"), "source")
     )
 
 

@@ -232,6 +232,18 @@ def lsh_signature(q: Column, planes: list[list[int]]) -> Column:
     ])
 
 
+def _lsh_bands(sig: Column, n_planes: int, bands: int) -> Column:
+    """array<struct<bi, bv>>: the signature cut into ``bands`` chunks of
+    n_planes // bands bits — band index and bit-string value.  The one
+    band split of :func:`cosine_lsh_pairs` and the streaming embedding
+    band registry (whose on-disk band key is ``'<bi>|<bv>'``)."""
+    r = n_planes // bands
+    return F.array(*[
+        F.struct(F.lit(i).alias("bi"), F.substring(sig, 1 + i * r, r).alias("bv"))
+        for i in range(bands)
+    ])
+
+
 def cosine_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
                      n_planes: int = 64, bands: int = 4,
                      dim: int = 64, max_bucket: int | None = 200) -> DataFrame:
@@ -274,18 +286,8 @@ def cosine_lsh_pairs(emb: DataFrame, threshold: float = 0.45,
     sig = _prepared(emb).withColumn(
         "s", lsh_signature(F.col("q"), lsh_planes(n_planes, dim))
     )
-    r = n_planes // bands
     banded = sig.select(
-        "vec_id", "q", "n2",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("bi"),
-                    F.substring("s", 1 + i * r, r).alias("bv"),
-                )
-                for i in range(bands)
-            ])
-        ).alias("b"),
+        "vec_id", "q", "n2", F.explode(_lsh_bands(F.col("s"), n_planes, bands)).alias("b"),
     ).select("vec_id", "q", "n2", "b.bi", "b.bv")
     # stage barrier: the signature subtree (64 plane dots per vector)
     # otherwise recomputes per consumer — the hot-bucket window and

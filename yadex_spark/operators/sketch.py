@@ -53,26 +53,7 @@ def distinct_kmv(
     The estimate arithmetic is IEEE-double then floored to bigint, so
     an ANSI-SQL oracle reproduces it exactly.
     """
-    h = kmv_hash(value_col)
-    hashes = (
-        df.select(F.col(group_col).alias("grp"), h.alias("h"))
-        .where(F.col("h").isNotNull())
-        .distinct()
-    )
-    # Local top-k per (grp, shard): the window sorts one shard, not the
-    # whole group.  h is uniform so h % n_shards is an unbiased shard.
-    sharded = hashes.withColumn("shard", F.pmod(F.col("h"), F.lit(n_shards)))
-    w_local = Window.partitionBy("grp", "shard").orderBy(F.asc("h"))
-    survivors = (
-        sharded.withColumn("rn", F.row_number().over(w_local))
-        .where(F.col("rn") <= k)
-        .drop("rn", "shard")
-    )
-    w_global = Window.partitionBy("grp").orderBy(F.asc("h"))
-    topk = (
-        survivors.withColumn("rn", F.row_number().over(w_global))
-        .where(F.col("rn") <= k)
-    )
+    topk = _kmv_topk(df, group_col, kmv_hash(value_col), k, n_shards)
     est_full = F.floor(
         F.lit(float(k - 1)) * F.lit(float(HASH_SPACE)) / F.col("kth_hash").cast("double")
     ).cast("long")
@@ -103,12 +84,18 @@ def kmv_state(
     instead of rescanning history (KMV's union is lossless:
     top-k(A ∪ B) = top-k(top-k(A) ∪ top-k(B))).  Deletions are NOT
     retractable from a KMV sketch (standard limitation); a delete-heavy
-    table re-bootstraps from :func:`distinct_kmv`'s full pass.
+    table re-bootstraps from :func:`distinct_kmv`'s full pass."""
+    return _kmv_sketch(df, group_col, kmv_hash(value_col), k, n_shards)
 
-    The collect_list here is bounded by k rows per group (the window
-    already pruned), so it is a constant-size agg, not whole-group
-    state."""
-    h = kmv_hash(value_col)
+
+def _kmv_topk(df: DataFrame, group_col: str, h, k: int, n_shards: int = 32) -> DataFrame:
+    """(grp, h, rn): each group's <= k smallest distinct non-null hashes
+    ``h`` (a Column over ``df``; a generator such as ``explode`` works
+    too) — the one top-k of :func:`distinct_kmv`, :func:`kmv_state` and
+    the streaming KMV fold.  Local top-k per (grp, shard) first: the
+    window sorts one shard, not the whole group (h is uniform, so
+    h % n_shards is an unbiased shard); a second window ranks the
+    <= n_shards*k survivors per group."""
     hashes = (
         df.select(F.col(group_col).alias("grp"), h.alias("h"))
         .where(F.col("h").isNotNull())
@@ -119,14 +106,22 @@ def kmv_state(
     survivors = (
         sharded.withColumn("rn", F.row_number().over(w_local))
         .where(F.col("rn") <= k)
+        .drop("rn", "shard")
     )
     w_global = Window.partitionBy("grp").orderBy(F.asc("h"))
-    topk = (
-        survivors.withColumn("rn2", F.row_number().over(w_global))
-        .where(F.col("rn2") <= k)
-    )
     return (
-        topk.groupBy("grp")
+        survivors.withColumn("rn", F.row_number().over(w_global))
+        .where(F.col("rn") <= k)
+    )
+
+
+def _kmv_sketch(df: DataFrame, group_col: str, h, k: int, n_shards: int = 32) -> DataFrame:
+    """(group_col, hs): :func:`_kmv_topk` collected into the sorted
+    sketch array — bounded by k rows per group (the window already
+    pruned), so a constant-size agg, not whole-group state."""
+    return (
+        _kmv_topk(df, group_col, h, k, n_shards)
+        .groupBy("grp")
         .agg(F.array_sort(F.collect_list("h")).alias("hs"))
         .withColumnRenamed("grp", group_col)
     )

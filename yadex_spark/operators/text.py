@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from yadex_spark.operators.common import spread
 from yadex_spark.operators.dedup import shingles, words_col
+from yadex_spark.operators.sketch import kmv_hash
 
 STOPWORDS = {
     "en": ("the", "a", "of", "and", "in", "to"),
@@ -142,9 +143,7 @@ def winnow_fingerprint(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     agg.  Hashes are 60-bit md5 prefixes as BIGINT (portable to the
     DuckDB oracle, codegen-friendly aggregation buffers)."""
     grams = shingles(words_col(F.col("text")), k)
-    hashes = F.transform(
-        grams, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-    )
+    hashes = F.transform(grams, lambda g: kmv_hash(g))
     d = docs.select("doc_id", hashes.alias("h")).where(F.size("h") >= w)
     wins = F.transform(
         F.sequence(F.lit(1), F.size("h") - (w - 1)),
@@ -158,10 +157,33 @@ def winnow_fingerprint(docs: DataFrame, k: int = 3, w: int = 4) -> DataFrame:
     )
 
 
-def _sh_bigint(sh):
-    """60-bit md5-prefix BIGINT of a shingle — the house portable hash
-    (identical in DuckDB, so both engines share even the collisions)."""
-    return F.conv(F.substring(F.md5(sh), 1, 15), 16, 10).cast("long")
+def _shingle_hashes(docs: DataFrame, n: int, key) -> DataFrame:
+    """(key, h): the 60-bit hash of each distinct word ``n``-gram of each
+    doc — the decontamination overlap key of :func:`decontaminate` and
+    the streaming clean-ingest member.  ``key`` (a column name or an
+    aliased Column) names the doc.
+
+    Per-row array_distinct before the explode: the old explode -> hash
+    -> distinct shuffled every (doc_id, hash) pair for a doc-scoped
+    dedup.  Residual within-doc hash collisions (two distinct n-grams,
+    one 60-bit hash) survive as duplicate (key, h) rows — invisible to
+    every consumer (countDistinct aggregates, semi-joins)."""
+    sh = docs.select(
+        key,
+        F.explode(F.array_distinct(shingles(words_col(F.col("text")), n))).alias("sh"),
+    )
+    return sh.select(sh.columns[0], kmv_hash("sh").alias("h"))
+
+
+def _bench_hashes(bench: DataFrame, n: int, max_df: int | None) -> DataFrame:
+    """(bench_id, h): the benchmark side's distinct shingle hashes,
+    minus hashes present in more than ``max_df`` benchmark docs (the
+    stop-gram cap; None keeps all)."""
+    b = _shingle_hashes(bench, n, F.col("doc_id").alias("bench_id")).distinct()
+    if max_df is not None:
+        df_counts = b.groupBy("h").agg(F.count("*").alias("_df"))
+        b = b.join(df_counts.where(F.col("_df") <= max_df), "h").drop("_df")
+    return b
 
 
 def decontaminate(corpus: DataFrame, bench: DataFrame, n: int = 8,
@@ -185,35 +207,8 @@ def decontaminate(corpus: DataFrame, bench: DataFrame, n: int = 8,
     present in more than that many benchmark docs (boilerplate/
     stop-grams) BEFORE the join — the same quadratic-bucket guard as
     ``ngram_jaccard_pairs``'s df-cap."""
-    # per-row array_distinct before the explode: the old
-    # explode -> hash -> distinct shuffled every (doc_id, hash) pair
-    # for a doc-scoped dedup.  Residual within-doc hash collisions
-    # (two distinct n-grams, one 60-bit hash) now survive as duplicate
-    # (doc_id, h) rows where the old distinct merged them — invisible
-    # to the countDistinct aggregates below, so results are identical.
-    c = (
-        spread(corpus.select("doc_id", "text"), "doc_id")
-        .select(
-            "doc_id",
-            F.explode(
-                F.array_distinct(shingles(words_col(F.col("text")), n))
-            ).alias("sh"),
-        )
-        .select("doc_id", _sh_bigint("sh").alias("h"))
-    )
-    b = (
-        bench.select(
-            F.col("doc_id").alias("bench_id"),
-            F.explode(
-                F.array_distinct(shingles(words_col(F.col("text")), n))
-            ).alias("sh"),
-        )
-        .select("bench_id", _sh_bigint("sh").alias("h"))
-        .distinct()
-    )
-    if max_bench_df is not None:
-        df_counts = b.groupBy("h").agg(F.count("*").alias("_df"))
-        b = b.join(df_counts.where(F.col("_df") <= max_bench_df), "h").drop("_df")
+    c = _shingle_hashes(spread(corpus.select("doc_id", "text"), "doc_id"), n, "doc_id")
+    b = _bench_hashes(bench, n, max_bench_df)
     return (
         c.join(b, "h")
         .groupBy("doc_id")
@@ -312,33 +307,51 @@ def dedup_cross_doc_lines(docs: DataFrame, min_df: int = 2,
     Returns (doc_id, n_lines, n_kept, n_dropped, clean_text) — one row
     per input document (all-boilerplate docs come back with an empty
     clean_text, not dropped)."""
-    lines = docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("text"), "\\Q" + sep + "\\E")).alias("i", "line"),
-    ).withColumn("h", F.md5("line"))
+    lines = _line_rows(docs, sep, "doc_id")
     df_per_line = (
         lines.select("h", "doc_id").distinct()
         .groupBy("h").count()
         .where(F.col("count") >= min_df)
         .select("h")
     )
-    kept = lines.join(df_per_line, "h", "left_anti")
+    return _scrub_lines(docs, lines, df_per_line, sep, "doc_id")
+
+
+def _line_rows(docs: DataFrame, sep: str, *keys: str) -> DataFrame:
+    """(*keys, i, line, h): one row per line occurrence, ``h`` its md5 —
+    the line hash of :func:`dedup_cross_doc_lines` and of the streaming
+    boilerplate scrub's persistent line-df registry."""
+    return docs.select(
+        *keys,
+        F.posexplode(F.split(F.col("text"), "\\Q" + sep + "\\E")).alias("i", "line"),
+    ).withColumn("h", F.md5("line"))
+
+
+def _scrub_lines(docs: DataFrame, lines: DataFrame, boiler: DataFrame, sep: str,
+                 key: str, *carry: str) -> DataFrame:
+    """``docs`` rebuilt without every line of ``lines`` (its
+    :func:`_line_rows`) whose hash is in ``boiler`` (an ``h`` column),
+    surviving lines in order: (key, *carry, n_lines, n_kept, n_dropped,
+    clean_text), one row per doc — an all-boilerplate doc comes back
+    with an empty clean_text.  Any broadcast hint on ``boiler`` is the
+    caller's."""
+    kept = lines.join(boiler, "h", "left_anti")
     rebuilt = (
-        kept.groupBy("doc_id")
+        kept.groupBy(key)
         .agg(F.array_sort(F.collect_list(F.struct("i", "line"))).alias("_k"))
         .select(
-            "doc_id",
+            key,
             F.size("_k").alias("n_kept"),
             F.array_join(F.transform("_k", lambda s: s["line"]), sep).alias("clean_text"),
         )
     )
     base = docs.select(
-        "doc_id",
+        key, *carry,
         F.size(F.split(F.col("text"), "\\Q" + sep + "\\E")).alias("n_lines"),
     )
-    out = base.join(rebuilt, "doc_id", "left")
+    out = base.join(rebuilt, key, "left")
     return out.select(
-        "doc_id",
+        key, *carry,
         "n_lines",
         F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
         (F.col("n_lines") - F.coalesce("n_kept", F.lit(0))).alias("n_dropped"),
@@ -377,7 +390,7 @@ def decontaminate_fuzzy(corpus: DataFrame, bench: DataFrame,
     appendix C).
 
     A corpus doc is flagged when any of its k 1-row MinHash bands
-    (:func:`~yadex_spark.operators.dedup.minhash_signatures`) equals
+    (:func:`~yadex_spark.operators.dedup.minhash_bands`) equals
     the same band of any bench doc.  Output per flagged doc:
     (doc_id, n_bench_docs = distinct eval docs collided with,
     max_shared_bands = bands shared with the closest eval doc — a
@@ -389,22 +402,11 @@ def decontaminate_fuzzy(corpus: DataFrame, bench: DataFrame,
     corpus never shuffles for the join — identical shape to the
     streaming band registry (`streaming/neardup_ingest.py`), applied
     batch-side between two tables."""
-    from yadex_spark.operators.dedup import minhash_signatures
+    from yadex_spark.operators.dedup import minhash_bands
 
-    def bands(df: DataFrame, idcol: str) -> DataFrame:
-        sigs = minhash_signatures(df, k=k, n=n)
-        return sigs.select(
-            F.col("doc_id").alias(idcol),
-            F.explode(
-                F.array(*[
-                    F.struct(F.lit(i).alias("band"), F.col(f"sig{i}").alias("sig"))
-                    for i in range(k)
-                ])
-            ).alias("b"),
-        ).select(idcol, "b.band", "b.sig")
-
-    hits = bands(spread(corpus, "doc_id"), "doc_id").join(
-        bands(bench, "bench_id"), ["band", "sig"]
+    hits = minhash_bands(spread(corpus, "doc_id"), k, n).join(
+        minhash_bands(bench, k, n).withColumnRenamed("doc_id", "bench_id"),
+        ["band", "sig"],
     )
     per_pair = hits.groupBy("doc_id", "bench_id").agg(
         F.countDistinct("band").alias("n_shared")
@@ -690,7 +692,7 @@ def lm_bigram_score(docs: DataFrame, k_bigrams: int = 50_000) -> DataFrame:
     # (0 coverage / 0 hits).  The frame is stage-barriered: the old
     # shape ran THREE separate corpus scans (each with its own full-text
     # spread shuffle) for unigram counts, bigram counts, and scoring.
-    hb = lambda c: _sh_bigint(c)  # noqa: E731
+    hb = kmv_hash
     uni_structs = F.transform(
         w, lambda x: F.struct(
             F.lit(0).alias("t"), hb(x).alias("h"),
@@ -818,7 +820,7 @@ def dsir_features(df: DataFrame, n_buckets: int) -> DataFrame:
     return (
         spread(df.select("doc_id", "text"), "doc_id")
         .select("doc_id", F.explode_outer(both).alias("g"))
-        .select("doc_id", (_sh_bigint("g") % n_buckets).alias("b"))
+        .select("doc_id", (kmv_hash("g") % n_buckets).alias("b"))
     )
 
 
@@ -953,7 +955,7 @@ def dsir_weights(corpus: DataFrame, target: DataFrame,
         "n_feats",
         weight.cast("long").alias("weight_bp"),
         (
-            _sh_bigint(F.concat(F.lit(salt + "|"), F.col("doc_id").cast("string")))
+            kmv_hash(F.concat(F.lit(salt + "|"), F.col("doc_id").cast("string")))
             % 10_000
             < F.least(weight, F.lit(10_000))
         ).cast("int").alias("keep"),

@@ -6,9 +6,10 @@ dedup / C4 boilerplate removal, run on a stream).
 
 Each epoch:
 
-1. explode the batch's documents into (line md5, doc) pairs and count
-   the batch's per-line df over DISTINCT docs (intra-doc repeats count
-   once — same rule as the batch operator);
+1. explode the batch's documents into (line md5, doc) pairs (the
+   batch operator's ``text._line_rows``) and count the batch's
+   per-line df over DISTINCT docs (intra-doc repeats count once — same
+   rule as the batch operator);
 2. probe the persistent ``line_df`` table for the batch's hashes ONLY
    (``LakeTable.lookup(probes=...)`` — the zone-map-pruned LWW point
    read, O(batch-matching files) after maintenance) and fold:
@@ -18,7 +19,8 @@ Each epoch:
    be scrubbed from them appears in the batch, so its hash is probed —
    no second registry needed, and counts only grow, so a hash that
    crossed the threshold in any earlier epoch still satisfies it now;
-4. scrub the batch's docs against that set (order-preserving rebuild),
+4. scrub the batch's docs against that set (the batch operator's
+   order-preserving ``text._scrub_lines``),
    commit the scrubbed docs FIRST, then the updated (h, df) rows —
    both idempotent by scoped batch id; the ``line_df`` commit is the
    epoch's fully-applied marker (checked on entry), and a crash between
@@ -52,6 +54,7 @@ from pyspark.sql import functions as F
 
 from yadex_spark.lake.table import LakeTable
 from yadex_spark.operators.common import persisted
+from yadex_spark.operators.text import _line_rows, _scrub_lines
 from yadex_spark.streaming.ingest_core import EpochIngest, insert_delta
 
 #: scrubbed-output schema (one row per arrival, keyed by ingest_seq)
@@ -59,14 +62,6 @@ SCRUBBED_SCHEMA = (
     "ingest_seq long, doc_id string, clean_text string, "
     "n_lines int, n_dropped int"
 )
-
-
-def _lines(docs: DataFrame, sep: str) -> DataFrame:
-    """(ingest_seq, doc_id, i, line, h) — one row per line occurrence."""
-    return docs.select(
-        "ingest_seq", "doc_id",
-        F.posexplode(F.split(F.col("text"), "\\Q" + sep + "\\E")).alias("i", "line"),
-    ).withColumn("h", F.md5("line"))
 
 
 @dataclass
@@ -100,37 +95,15 @@ class BoilerplateIngest(EpochIngest):
         return out.select(F.col("doc_id").alias("h"), "df")
 
     def _scrub(self, docs: DataFrame, boiler: DataFrame) -> DataFrame:
-        """Order-preserving rebuild of ``docs`` minus boilerplate lines
-        (same reassembly as the batch operator; ``boiler`` is batch-
-        bounded, so AQE broadcasts it into the anti-join)."""
-        ln = _lines(docs, self.sep)
-        kept = ln.join(F.broadcast(boiler), "h", "left_anti")
-        rebuilt = (
-            kept.groupBy("ingest_seq")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "line"))).alias("_k"))
-            .select(
-                "ingest_seq",
-                F.size("_k").alias("n_kept"),
-                F.array_join(
-                    F.transform("_k", lambda s: s["line"]), self.sep
-                ).alias("clean_text"),
-            )
-        )
-        base = docs.select(
-            "ingest_seq", "doc_id",
-            F.size(F.split(F.col("text"), "\\Q" + self.sep + "\\E")).alias("n_lines"),
-        )
-        out = base.join(rebuilt, "ingest_seq", "left")
-        return out.select(
-            "ingest_seq", "doc_id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            "n_lines",
-            (F.col("n_lines") - F.coalesce("n_kept", F.lit(0))).alias("n_dropped"),
-        )
+        """``docs`` minus ``boiler`` lines, rebuilt in order by the batch
+        operator's kernel (``text._scrub_lines``); ``boiler`` is
+        batch-bounded, so it is broadcast into the anti-join."""
+        lines = _line_rows(docs, self.sep, "ingest_seq")
+        return _scrub_lines(docs, lines, F.broadcast(boiler), self.sep, "ingest_seq", "doc_id")
 
     def _apply(self, batch: DataFrame, epoch_id: int, batch_id: str) -> None:
         with (persisted(batch) as docs,
-              persisted(_lines(docs, self.sep).select("h", "doc_id").distinct()
+              persisted(_line_rows(docs, self.sep, "doc_id").select("h", "doc_id").distinct()
                         .groupBy("h").agg(F.count(F.lit(1)).alias("bdf"))) as batch_df):
             probes = [r["h"] for r in batch_df.select("h").collect()]
             if not probes:

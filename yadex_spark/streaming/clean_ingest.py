@@ -15,8 +15,9 @@ Per arriving document, in order:
    an identical later arrival fails the same per-row rules);
 3. **benchmark decontamination** — drop arrivals sharing any word
    n-gram with a static evaluation set (the ``decontaminate``
-   overlap rule against a fixed bench table, resolved ONCE to a
-   60-bit-hash set and broadcast every epoch);
+   overlap rule, computed by its kernels ``text._shingle_hashes`` and
+   ``text._bench_hashes``, against a fixed bench table resolved ONCE
+   to a 60-bit-hash set and broadcast every epoch);
 4. **exact dedup vs the persistent registry** — first-arrival-wins on
    md5(scrubbed text), the inherited M6 machinery (pre-filtered
    broadcast-semi anti-join, zone-map-pruned registry scan,
@@ -48,8 +49,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yadex_spark.operators.dedup import shingles, words_col
-from yadex_spark.operators.text import _sh_bigint, filter_corpus, scrub_exprs
+from yadex_spark.operators.text import (_bench_hashes, _shingle_hashes, filter_corpus,
+                                        scrub_exprs)
 from yadex_spark.streaming.dedup_ingest import DedupIngest
 
 
@@ -79,31 +80,21 @@ class CleanIngest(DedupIngest):
     max_top_word_bp: int = 2_000
     max_dup_2gram_bp: int = 2_000
 
-    _bench_hashes: DataFrame | None = field(default=None, repr=False)
+    _bench_set: DataFrame | None = field(default=None, repr=False)
 
     def _bench(self) -> DataFrame | None:
-        """Distinct 60-bit shingle hashes of the bench set (df-capped —
-        the decontaminate stop-gram guard), resolved once and cached:
-        eval-set-sized, broadcast into every epoch's semi-join."""
+        """Distinct 60-bit shingle hashes of the bench set — the
+        ``decontaminate`` kernel with its df cap — resolved once and
+        cached: eval-set-sized, broadcast into every epoch's semi-join."""
         if self.bench_dir is None:
             return None
-        if self._bench_hashes is None:
-            b = (
-                self.spark.read.parquet(self.bench_dir)
-                .select(
-                    "doc_id",
-                    F.explode(
-                        shingles(words_col(F.col("text")), self.decontam_n)
-                    ).alias("sh"),
-                )
-                .select("doc_id", _sh_bigint("sh").alias("h"))
-                .distinct()
+        if self._bench_set is None:
+            bench = self.spark.read.parquet(self.bench_dir)
+            self._bench_set = (
+                _bench_hashes(bench, self.decontam_n, self.max_bench_df)
+                .select("h").distinct().persist()
             )
-            if self.max_bench_df is not None:
-                df_counts = b.groupBy("h").agg(F.count("*").alias("_df"))
-                b = b.join(df_counts.where(F.col("_df") <= self.max_bench_df), "h")
-            self._bench_hashes = b.select("h").distinct().persist()
-        return self._bench_hashes
+        return self._bench_set
 
     def _preprocess(self, batch: DataFrame) -> DataFrame:
         # 1) scrub FIRST: everything downstream sees redacted text only
@@ -140,12 +131,7 @@ class CleanIngest(DedupIngest):
         bench = self._bench()
         if bench is None:
             return kept
-        doc_h = kept.select(
-            "ingest_seq",
-            F.explode(
-                shingles(words_col(F.col("text")), self.decontam_n)
-            ).alias("sh"),
-        ).select("ingest_seq", _sh_bigint("sh").alias("h"))
+        doc_h = _shingle_hashes(kept, self.decontam_n, "ingest_seq")
         contaminated = (
             doc_h.join(F.broadcast(bench), "h", "left_semi")
             .select("ingest_seq")

@@ -3,8 +3,9 @@
 Third member of the dedup-on-ingest family (exact → MinHash-LSH text →
 embedding cosine): arrivals carry an embedding vector instead of (or
 besides) text, and an arrival is rejected iff it shares a cosine-LSH
-band — random-hyperplane signature chunk, the ``cosine_lsh_pairs``
-scheme over ALL dims — with any strictly-earlier arrival.  Semantics,
+band — random-hyperplane signature chunk over ALL dims, cut by
+``similarity._lsh_bands``, the band kernel ``cosine_lsh_pairs`` runs —
+with any strictly-earlier arrival.  Semantics,
 commit protocol, crash-replay behavior and the no-registry-shuffle
 scale shape are EXACTLY the band-registry rule of
 ``neardup_ingest.NearDupIngest``; only the band generator differs
@@ -27,7 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yadex_spark.operators.similarity import lsh_planes, lsh_signature, quantized
+from yadex_spark.operators.similarity import _lsh_bands, lsh_planes, lsh_signature, quantized
 from yadex_spark.streaming.neardup_ingest import NearDupIngest
 
 #: feed schema for the embedding variant
@@ -49,24 +50,17 @@ class EmbedDedupIngest(NearDupIngest):
     def _bands(self, batch: DataFrame) -> DataFrame:
         """(ingest_seq, band): band = '<i>|<bit chunk>' of the
         random-hyperplane signature — sign(q · w_i) per plane, exact
-        integer math over the 1/1000-quantized vector (the
-        cosine_lsh_pairs signature, keyed by arrival offset)."""
+        integer math over the 1/1000-quantized vector, split by the
+        ``cosine_lsh_pairs`` band kernel and keyed by arrival offset."""
         if self._planes is None:
             self._planes = lsh_planes(self.n_planes, self.dim)
         sig = batch.select(
             "ingest_seq",
             lsh_signature(quantized(F.col("embedding")), self._planes).alias("s"),
         )
-        r = self.n_planes // self.bands
         return sig.select(
-            "ingest_seq",
-            F.explode(
-                F.array(*[
-                    F.concat(F.lit(f"{i}|"), F.substring("s", 1 + i * r, r))
-                    for i in range(self.bands)
-                ])
-            ).alias("band"),
-        )
+            "ingest_seq", F.explode(_lsh_bands(F.col("s"), self.n_planes, self.bands)).alias("b")
+        ).select("ingest_seq", F.concat_ws("|", "b.bi", "b.bv").alias("band"))
 
     def _preprocess(self, batch: DataFrame) -> DataFrame:
         # the embedding feed has no text column; the parent's accepted

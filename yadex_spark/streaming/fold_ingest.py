@@ -27,7 +27,8 @@ key and payload columns, and (when not additive) its fold.
 - :class:`KmvIngest` — per-source distinct-word counts.  A distinct
   count is not additive, but its KMV sketch is: the k minimum hashes of
   a union are the re-top-k of the per-part minima, so the fold unions
-  the partial hash sets, re-top-ks and reads ``kmv_estimate``.  The
+  the partial hash sets, re-top-ks them with the batch sketch's own
+  top-k kernel (``sketch._kmv_sketch``) and reads ``kmv_estimate``.  The
   sketch is a SET of hashes, so even a forced double-commit cannot
   inflate it (m20 pins this); the batch-id skip makes replay free, not
   merely harmless.
@@ -48,7 +49,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yadex_spark.lake.table import LakeTable
@@ -175,20 +176,12 @@ class KmvIngest(EpochFold):
         return kmv_state(_words(batch, "source"), "source", F.col("w"), k=self.k)
 
     def _fold(self, partials: DataFrame) -> DataFrame:
-        """Union law: distinct the partial hashes, re-top-k per source,
-        read the estimate — equal to the batch ``distinct_kmv``."""
-        from yadex_spark.operators.sketch import kmv_estimate
+        """Union law: re-top-k the union of the partial hashes per source
+        with the batch sketch's kernel, read the estimate — equal to the
+        batch ``distinct_kmv``."""
+        from yadex_spark.operators.sketch import _kmv_sketch, kmv_estimate
 
-        h = partials.select("source", F.explode("hs").alias("h")).distinct()
-        # single per-source window is fine HERE: input is the
-        # model-sized partials union, not corpus rows
-        w = Window.partitionBy("source").orderBy(F.asc("h"))
-        state = (
-            h.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= self.k)
-            .groupBy("source")
-            .agg(F.array_sort(F.collect_list("h")).alias("hs"))
-        )
+        state = _kmv_sketch(partials, "source", F.explode("hs"), self.k)
         return kmv_estimate(state, "source", k=self.k)
 
     #: accumulated per-source distinct-word estimate (the batch

@@ -24,10 +24,11 @@ earns it the same way, through this one class:
 - the **AvailableNow drain loop** over ``FEED_SCHEMA`` parquet chunks
   (``CdcPipeline.run_available_now`` drains through the same
   function);
-- **maintenance** — compact + vacuum (or the cheap minor tier) of
-  every table the member keeps, under the shared nonce-confirmed
-  lease (run with the stream stopped; at scale, Iceberg
-  rewrite_data_files + expire_snapshots).
+- **maintenance** — compact + vacuum (or the cheap minor tier) +
+  manifest-log fold of every table the member keeps
+  (:func:`maintain_table`, the CDC pipeline's per-table step too),
+  under the shared nonce-confirmed lease (run with the stream stopped;
+  at scale, Iceberg rewrite_data_files + expire_snapshots).
 
 A member supplies its ``TAG``, its tables and the epoch body
 ``_apply(batch, epoch_id, batch_id)``.
@@ -102,6 +103,25 @@ def insert_delta(df: DataFrame, key: str | Column, seq: str | Column,
     )
 
 
+def maintain_table(tbl: LakeTable, version_key: str, rewrite, vacuum: bool = True,
+                   retain_last: int = 0, vacuum_unchanged: bool = True) -> dict:
+    """The one per-table maintenance step of :meth:`EpochIngest.maintain`
+    and ``CdcPipeline.maintain``/``maintain_minor``, run under the
+    caller's lease: ``rewrite(tbl)`` (the compaction; its version lands
+    under ``version_key``), the vacuum (skipped for a table the rewrite
+    left unchanged unless ``vacuum_unchanged``), then the manifest-log
+    fold (:meth:`LakeTable.compact_meta`), which keeps every later
+    operation's log parse bounded however many epochs the table took."""
+    v = rewrite(tbl)
+    removed = (tbl.vacuum(retain_last=retain_last)
+               if vacuum and (vacuum_unchanged or v is not None) else [])
+    return {
+        version_key: v,
+        "data_dirs_removed": len(removed),
+        "manifests_folded": tbl.compact_meta()["folded"],
+    }
+
+
 @dataclass
 class EpochIngest:
     """Base of every ingest-family member (see the module docstring): a
@@ -171,7 +191,8 @@ class EpochIngest:
         drain_available_now(stream, self.apply_batch, self.checkpoint_dir, timeout_s)
 
     def maintain(self, minor: bool = False) -> dict:
-        """Compact + vacuum every table of the member under the shared
+        """Compact + vacuum + fold the manifest log of every table of
+        the member (:func:`maintain_table`) under the shared
         nonce-confirmed maintenance lease: a cron'd run racing a manual
         one must not interleave compact and vacuum.  Compaction
         range-clusters each table on its key, giving every file a tight
@@ -187,10 +208,7 @@ class EpochIngest:
         from yadex_spark.lake.lease import maintenance_lease
 
         version_key = "minicompacted_version" if minor else "compacted_version"
-        report = {}
+        rewrite = (lambda t: t.compact_minor()) if minor else (lambda t: t.compact())
         with maintenance_lease(self.lake_dir):
-            for name, tbl in self._maintained().items():
-                v = tbl.compact_minor() if minor else tbl.compact()
-                removed = tbl.vacuum() if (not minor or v is not None) else []
-                report[name] = {version_key: v, "data_dirs_removed": len(removed)}
-        return report
+            return {name: maintain_table(tbl, version_key, rewrite, vacuum_unchanged=not minor)
+                    for name, tbl in self._maintained().items()}

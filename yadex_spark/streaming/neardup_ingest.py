@@ -4,8 +4,9 @@ Extends the exact dedup-on-ingest composition (dedup_ingest.py — CDC
 micro-batch machinery × the dedup suite) from identical-text to
 near-duplicate suppression: the persistent registry stores MINHASH BAND
 values instead of content hashes, so an arrival that is jaccard-similar
-to ANY earlier arrival (shares ≥1 of its k 1-row LSH bands — the same
-banding argument as the batch ``minhash_lsh_pairs``) is rejected.
+to ANY earlier arrival (shares ≥1 of its k 1-row LSH bands — computed
+by ``dedup.minhash_bands``, the kernel the batch ``minhash_lsh_pairs``
+runs) is rejected.
 
 Semantics — **band-registry first-arrival**: an arrival is accepted iff
 NONE of its k band values was emitted by any strictly-earlier arrival
@@ -41,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yadex_spark.operators.common import persisted
-from yadex_spark.operators.dedup import dedup_clusters, doc_shingles
+from yadex_spark.operators.dedup import dedup_clusters, minhash_bands
 from yadex_spark.streaming.dedup_ingest import DedupIngest
 from yadex_spark.streaming.ingest_core import insert_delta
 
@@ -58,32 +59,17 @@ class NearDupIngest(DedupIngest):
     REGISTRY_DIR = "_seen_bands"
 
     def _bands(self, batch: DataFrame) -> DataFrame:
-        """(ingest_seq, band) per arrival: band = '<i>|<min seeded md5
-        over shingles>' — the exact signature scheme of
-        operators.dedup.minhash_signatures, keyed by the arrival offset
-        (unique, INGEST_SCHEMA invariant) instead of doc_id so repeated
-        doc_ids with edited text hash independently."""
-        sh = doc_shingles(
-            batch.select(F.col("ingest_seq").alias("doc_id"), "text"), self.n
+        """(ingest_seq, band) per arrival: band = '<i>|<sig i>' over the
+        batch operators' one banding kernel (``dedup.minhash_bands``),
+        keyed by the arrival offset (unique, INGEST_SCHEMA invariant)
+        instead of doc_id so repeated doc_ids with edited text hash
+        independently."""
+        bands = minhash_bands(
+            batch.select(F.col("ingest_seq").alias("doc_id"), "text"), self.k, self.n
         )
-        aggs = [
-            F.min(
-                F.conv(
-                    F.substring(F.md5(F.concat(F.lit(f"{i}|"), F.col("sh"))), 1, 15),
-                    16, 10,
-                ).cast("long")
-            ).alias(f"sig{i}")
-            for i in range(self.k)
-        ]
-        sigs = sh.groupBy("doc_id").agg(*aggs)
-        return sigs.select(
+        return bands.select(
             F.col("doc_id").alias("ingest_seq"),
-            F.explode(
-                F.array(*[
-                    F.format_string(f"{i}|%d", F.col(f"sig{i}"))
-                    for i in range(self.k)
-                ])
-            ).alias("band"),
+            F.concat_ws("|", "band", "sig").alias("band"),
         )
 
     def _apply(self, batch: DataFrame, epoch_id: int, batch_id: str) -> None:

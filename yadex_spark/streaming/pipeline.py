@@ -67,7 +67,8 @@ from yadex_spark.operators.collapse import ORDER_COL, collapse
 from yadex_spark.operators.route import RT, Router, namespace_filter, route_filter
 from yadex_spark.schema import (ALL_OPS, OP_INSERT, OP_REPLACE, OP_UPDATE,
                                 LINEAGE_SCHEMA, oplog_read_schema, oplog_schema)
-from yadex_spark.streaming.ingest_core import checkpoint_scope, drain_available_now
+from yadex_spark.streaming.ingest_core import (checkpoint_scope, drain_available_now,
+                                              maintain_table)
 
 
 def quarantine_reason():
@@ -910,23 +911,16 @@ class CdcPipeline:
 
     def _maintain_tables(self, version_key: str, vacuum: bool, retain_last: int,
                          rewrite, vacuum_unchanged: bool = True) -> dict:
-        """The one per-table pass of :meth:`maintain` and
+        """The one lake pass of :meth:`maintain` and
         :meth:`maintain_minor`, run under the caller's maintenance lease:
-        ``rewrite(tbl)`` (the compaction; its version lands under
-        ``version_key``), the table's vacuum (skipped for a table the
-        rewrite left unchanged unless ``vacuum_unchanged``) and manifest
-        checkpoint, then the staging GC and the lineage fold."""
-        per_table = {}
-        for t in self.tables():
-            tbl = self.table(t)
-            v = rewrite(tbl)
-            removed = (tbl.vacuum(retain_last=retain_last)
-                       if vacuum and (vacuum_unchanged or v is not None) else [])
-            per_table[t] = {
-                version_key: v,
-                "data_dirs_removed": len(removed),
-                "manifests_folded": tbl.compact_meta()["folded"],
-            }
+        :func:`~yadex_spark.streaming.ingest_core.maintain_table` per
+        table (rewrite, vacuum, manifest fold — the ingest members' step
+        too), then the staging GC and the lineage fold."""
+        per_table = {
+            t: maintain_table(self.table(t), version_key, rewrite, vacuum, retain_last,
+                              vacuum_unchanged)
+            for t in self.tables()
+        }
         staging_removed = self.vacuum_staging(retain_last=retain_last) if vacuum else []
         return {
             "tables": per_table,

@@ -3,9 +3,10 @@
 The third shape of the ingest-dedup family (exact: dedup_ingest.py,
 near-dup: neardup_ingest.py): instead of accepting/rejecting whole
 arrivals, every arrival is accepted but TRANSFORMED — chunks whose
-content-defined hash (operators.dedup.chunk_structs, the passage_dedup
-chunker) was emitted by any strictly-earlier arrival are stripped, and
-the document is rebuilt from its surviving chunks.  This is incremental
+content-defined hash was emitted by any strictly-earlier arrival are
+stripped, and the document is rebuilt from its surviving chunks — with
+``passage_dedup``'s own kernels (``operators.dedup._chunk_rows`` for the
+chunks and their hashes, ``_rebuild_chunks`` for the rebuild).  This is incremental
 duplicate-span removal (Lee et al.) — the form a training-data lake
 needs when boilerplate repeats across documents that are otherwise
 distinct.
@@ -50,8 +51,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yadex_spark.operators.common import persisted, spread as _spread
-from yadex_spark.operators.dedup import chunk_structs
+from yadex_spark.operators.common import persisted
+from yadex_spark.operators.dedup import _chunk_rows, _rebuild_chunks
 from yadex_spark.streaming.dedup_ingest import DedupIngest
 from yadex_spark.streaming.ingest_core import insert_delta
 
@@ -72,17 +73,9 @@ class SpanDedupIngest(DedupIngest):
 
     def _chunks(self, batch: DataFrame) -> DataFrame:
         """(ingest_seq, doc_id, p0, nw, ph, passage) per chunk
-        occurrence — spread before the CPU-heavy chunk explode (the
-        AQE-coalescing / single-file-scan guard)."""
-        chunk = chunk_structs(F.col("text"), self.p)
-        return (
-            _spread(batch.select("ingest_seq", "doc_id", "text"), "ingest_seq")
-            .select("ingest_seq", "doc_id", F.explode(chunk).alias("c"))
-            .select(
-                "ingest_seq", "doc_id", "c.p0", "c.nw",
-                F.md5("c.passage").alias("ph"), "c.passage",
-            )
-        )
+        occurrence — the batch passage_dedup chunk kernel, keyed by the
+        arrival offset."""
+        return _chunk_rows(batch, self.p, "ingest_seq", "doc_id")
 
     def _apply(self, batch: DataFrame, epoch_id: int, batch_id: str) -> None:
         # the chunk subtree feeds the registry probe, the winner agg,
@@ -114,19 +107,7 @@ class SpanDedupIngest(DedupIngest):
                     ),
                 )
             )
-            cleaned = kept.groupBy("ingest_seq", "doc_id").agg(
-                F.count("*").alias("n_chunks"),
-                F.sum(F.when(F.col("keep"), 0).otherwise(1)).alias("n_dropped"),
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.when(F.col("keep"), F.struct("p0", "passage")))
-                        ),
-                        lambda s: s["passage"],
-                    ),
-                ).alias("clean_text"),
-            )
+            cleaned = _rebuild_chunks(kept, "ingest_seq", "doc_id")
             # 1) rebuilt documents, keyed by the unique arrival offset.
             #    Committed FIRST: a crash between the commits replays to
             #    an identical recompute (the registry still lacks this
