@@ -19,10 +19,12 @@ from __future__ import annotations
 import math
 import sys
 from datetime import datetime
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# this checkout's code, wherever it is cloned (a parent copy compares itself)
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as entrymod  # noqa: E402
 from yadex_spark.session import get_spark  # noqa: E402
 
@@ -95,7 +97,9 @@ def check_types(df, con, sql):
 def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("compare-oracle", cpus=8, shuffle_partitions=8)
+    # no console progress bar: it shares the terminal line with the verdicts
+    spark = get_spark("compare-oracle", cpus=8, shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")

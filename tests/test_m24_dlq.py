@@ -22,6 +22,7 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from yadex_spark.oracle import replay, state_to_pdf
@@ -314,3 +315,88 @@ def test_expectations_quarantine_contract_violations(spark, tmp_path):
 
     got = {(r["doc_id"], r["reason"]) for r in pipe.dlq().collect()}
     assert got == {("fat1", "expectation"), ("nullq", "expectation")}
+
+
+def test_rt_expectation_epoch_counts_late_rows_and_quarantines(spark, tmp_path):
+    """One epoch carrying both an RT expiry window and an expectation:
+    the late count still reaches lineage (it rides the late-count
+    Observation, which only such epochs attach) and the violators still
+    reach the DLQ."""
+    import pandas as pd
+
+    from yadex_spark.operators.route import RT, RoutePattern, Router
+
+    oplog = gen_oplog(spark, N_EVENTS, N_DOCS, seed=31, late_frac=0.05, late_lag_ms=10_000)
+    max_ts = oplog.agg(F.max("op_ts")).first()[0]
+    violators = spark.createDataFrame(
+        [(N_EVENTS + 1, max_ts, "insert", "seqs", "fat1", ([1], 9999, "s1"))],
+        _nullable_oplog_schema(),
+    )
+    path = str(tmp_path / "oplog")
+    oplog.unionByName(violators).coalesce(1).write.parquet(path)  # ONE epoch
+    pipe = CdcPipeline(
+        spark, path, str(tmp_path / "lake"), str(tmp_path / "ckpt"),
+        router=Router(patterns=(
+            RoutePattern(r"seqs", RT, expires_ms=5_000, expect="after.n_tok <= 1000"),
+        )),
+    )
+    pipe.run_available_now()
+
+    pdf = oplog.toPandas()
+    want_late = int((pdf.op_ts < max_ts - pd.Timedelta(milliseconds=5_000)).sum())
+    lin = pipe.lineage().collect()
+    assert [r["batch_id"] for r in lin] == [0]
+    assert want_late > 0 and lin[0]["n_dropped_late"] == want_late
+    assert {(r["doc_id"], r["reason"]) for r in pipe.dlq().collect()} == {("fat1", "expectation")}
+
+
+@pytest.mark.parametrize("tier", ["ST", "RT"])
+def test_epoch_with_no_live_rows_writes_zero_lineage(spark, tmp_path, monkeypatch, tier):
+    """An epoch whose rows are all malformed or below its drop barrier
+    collapses to nothing, and lineage records zero counts.  An ST epoch
+    attaches no late-count Observation and its stats Observation fires
+    over the empty result.  An RT epoch's late-count Observation sits in
+    the subtree AQE drops as empty, never fires, and the epoch takes the
+    recompute fallback."""
+    from pyspark.sql import Observation
+
+    from yadex_spark.operators.route import RoutePattern, Router
+    from yadex_spark.streaming import pipeline
+
+    unfired = []
+
+    class SpyObservation(Observation):
+        @property
+        def get(self):
+            try:
+                return Observation.get.fget(self)
+            except Exception:
+                unfired.append(self)
+                raise
+
+    monkeypatch.setattr(pipeline, "Observation", SpyObservation)
+    oplog = gen_oplog(spark, 1_000, 200, seed=37, num_partitions=1)
+    path = str(tmp_path / "oplog")
+    oplog.write.parquet(path)
+    spark.createDataFrame(
+        [
+            (N_EVENTS + 1, TS, "insert", "seqs", "k1", ([1], 1, "s1")),
+            (N_EVENTS + 2, TS, "update", "seqs", "k1", ([1], 2, "s1")),
+            (N_EVENTS + 3, TS, "drop", "seqs", None, None),
+            (N_EVENTS + 4, TS, "bogus", "seqs", "k2", ([1], 1, "s1")),
+        ],
+        _nullable_oplog_schema(),
+    ).coalesce(1).write.mode("append").parquet(path)
+    pipe = CdcPipeline(
+        spark, path, str(tmp_path / "lake"), str(tmp_path / "ckpt"),
+        router=Router(patterns=(RoutePattern(".*", tier, expires_ms=5_000),)),
+    )
+    pipe.run_available_now()
+
+    last = max(pipe.lineage().collect(), key=lambda r: r["batch_id"])
+    assert last["batch_id"] == 1 and bool(unfired) == (tier == "RT")
+    counts = ("n_insert", "n_update", "n_delete", "n_dropped_late")
+    assert [last[c] for c in counts] == [0, 0, 0, 0]
+    assert last["offset_lo"] is None and last["offset_hi"] is None
+    assert pipe.table("seqs").read().count() == 0  # the drop killed all history
+    assert [(r["doc_id"], r["reason"]) for r in pipe.dlq().collect()] == [("k2", "unknown_op")]

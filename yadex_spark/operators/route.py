@@ -70,18 +70,9 @@ class Router:
         self._cache[table] = result
         return result
 
-    def tier_tables(self, tables: list[str], tier: str) -> list[str]:
-        return [t for t in tables if (p := self.classify(t)) and p.tier == tier]
-
 
 def namespace_filter(events: DataFrame) -> DataFrame:
     """F1: drop DB-level/system events — rows with no table
     (/root/reference/msync/oploggetters.go:36-38, run.go:121-125)."""
     return events.where(F.col("table").isNotNull())
 
-
-def route_filter(events: DataFrame, tables: list[str]) -> DataFrame:
-    """Keep only events for the given resolved table set."""
-    if not tables:
-        return events.where(F.lit(False))
-    return events.where(F.col("table").isin(tables))

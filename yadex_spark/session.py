@@ -9,6 +9,18 @@ Local testing runs ``local[N]`` but every conf here is chosen for the
   ``executors * cores * 2-3`` or left to AQE's coalescing
 - UTC session timezone so results compare bit-exactly against DuckDB
   oracles (duckdb timestamps are UTC-naive).
+- PySpark call-site capture off: it costs about five JVM round trips
+  per Column or DataFrame call, most of a small CDC epoch's driver
+  time.  Errors lose their Python call site;
+  ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+  brings it back.  PySpark reads it once per process, from the first
+  session, so it is a builder conf.
+- streaming checkpoint metadata through Hadoop's FileSystem API
+  (``FileSystemBasedCheckpointFileManager``).  Without the native Hadoop
+  library, the default FileContext manager forks a process for each
+  metadata write; on a local path both do the same write-then-rename.
+  The sessions built here are ``local[N]``; an HDFS or object-store
+  deployment keeps Spark's default manager.
 """
 
 from __future__ import annotations
@@ -47,6 +59,12 @@ def get_spark(
         # token arrays are high-entropy: heavy codecs buy nothing and cost
         # CPU on the hot write path; snappy is the right trade at scale
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -58,13 +58,15 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
+from functools import cached_property
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from yadex_spark.lake.table import DELETED_COL, SEQ_COL, LakeTable, _ddl, prepare_delta
 from yadex_spark.operators.collapse import ORDER_COL, collapse
-from yadex_spark.operators.route import RT, Router, namespace_filter, route_filter
+from yadex_spark.operators.route import RT, Router, namespace_filter
 from yadex_spark.schema import (ALL_OPS, OP_INSERT, OP_REPLACE, OP_UPDATE,
                                 LINEAGE_SCHEMA, oplog_read_schema, oplog_schema)
 from yadex_spark.streaming.ingest_core import (checkpoint_scope, drain_available_now,
@@ -106,6 +108,66 @@ def expect_fail(routed: dict) -> "F.Column":
                 & ~F.coalesce(F.expr(p.expect), F.lit(False))
             )
     return e
+
+
+class EpochRules:
+    """The epoch's Column expressions, built once per pipeline rather
+    than per epoch, since every PySpark Column call is a JVM round
+    trip.  The inventory aggregates, the quarantine classifier and the
+    healthy predicate are built here; the route filter, expectations,
+    DLQ reason and lineage stats once per routed table set
+    (:meth:`routed`).  Only the RT-late and drop-barrier literals are
+    built per epoch.  ``run_with_reload`` builds a new pipeline when the
+    config changes, so nothing here can go stale."""
+
+    def __init__(self, expiry_ms: int | None):
+        self.expiry_ms = expiry_ms
+        self.reason = quarantine_reason()
+        self.healthy = (F.col("op") != "drop") & self.reason.isNull()
+        # PASS 1 (narrow, column-pruned): drop barrier position, op_ts
+        # high-watermark, key estimate, and the malformed count — the DLQ
+        # write job runs only when it is non-zero (rare path)
+        self.inventory = [
+            F.max(F.when(F.col("op") == "drop", F.col(ORDER_COL))).alias("bar"),
+            F.max("op_ts").alias("max_ts"),
+            F.approx_count_distinct("doc_id").alias("nkeys"),
+            F.sum(F.when(self.reason.isNotNull(), 1).otherwise(0)).alias("nbad"),
+        ]
+        self._memo: dict = {}
+
+    def routed(self, routed: dict) -> SimpleNamespace:
+        """The expressions for one routed {table: pattern} set, memoized
+        by its sorted names."""
+        key = tuple(sorted(routed))
+        if key not in self._memo:
+            names, exp_fail = list(key), expect_fail(routed)
+            route = F.col("table").isin(names)
+            # per-pattern RT expiry windows; ST tables never expire
+            windows = {t: p.expires_ms if p.expires_ms is not None else self.expiry_ms
+                       for t, p in routed.items() if p.tier == RT}
+            # per-table lineage stats over the collapsed rows
+            stats = []
+            for i, t in enumerate(names):
+                cond = F.col("table") == t
+                stats += [
+                    F.min(F.when(cond, F.col(ORDER_COL))).alias(f"lo_{i}"),
+                    F.max(F.when(cond, F.col(ORDER_COL))).alias(f"hi_{i}"),
+                    F.sum(F.when(cond, 1).otherwise(0)).alias(f"n_{i}"),
+                    F.sum(F.when(cond & (F.col("op") == "insert"), 1).otherwise(0)).alias(f"ni_{i}"),
+                    F.sum(F.when(cond & F.col("op").isin("update", "replace"), 1).otherwise(0)).alias(f"nu_{i}"),
+                    F.sum(F.when(cond & (F.col("op") == "delete"), 1).otherwise(0)).alias(f"nd_{i}"),
+                ]
+            self._memo[key] = SimpleNamespace(
+                names=names, route=route, stats=stats,
+                windows={t: w for t, w in windows.items() if w is not None},
+                expects=any(p.expect for p in routed.values()),
+                keep=route & self.healthy & ~exp_fail,
+                nexp=F.sum(F.when(exp_fail, 1).otherwise(0)).alias("nexp"),
+                # structural reasons win (an unknown-op row can't be judged
+                # against a payload contract); expectation failures follow
+                dlq_reason=F.coalesce(self.reason, F.when(exp_fail, F.lit("expectation"))),
+            )
+        return self._memo[key]
 
 
 def read_lineage(spark: SparkSession, lake_dir: str) -> DataFrame:
@@ -234,12 +296,9 @@ class CdcPipeline:
         of Delta's txnAppId): epoch numbers restart at 0 under a fresh
         checkpoint, so un-scoped ids would make a new run against an
         existing lake silently skip real batches as already committed."""
-        cached = getattr(self, "_scope_cache", None)
-        if cached:
-            return cached
-        scope = checkpoint_scope(self.checkpoint_dir)
-        self._scope_cache = scope
-        return scope
+        if not getattr(self, "_scope_cache", None):
+            self._scope_cache = checkpoint_scope(self.checkpoint_dir)
+        return self._scope_cache
 
     # ---------- the per-epoch apply (foreachBatch body) ----------
 
@@ -261,88 +320,60 @@ class CdcPipeline:
             if cached is not None:
                 cached.unpersist()
 
+    @cached_property
+    def rules(self) -> EpochRules:
+        return EpochRules(self.expiry_ms)
+
     def _apply(self, spark: SparkSession, src: DataFrame, epoch_id: int, t0: float) -> None:
-        # PASS 1 (narrow, column-pruned): per-table inventory — drop
-        # barrier position, op_ts high-watermark
-        inv = src.groupBy("table").agg(
-            F.max(F.when(F.col("op") == "drop", F.col(ORDER_COL))).alias("bar"),
-            F.max("op_ts").alias("max_ts"),
-            F.approx_count_distinct("doc_id").alias("nkeys"),
-            # malformed count rides the same narrow pass — the DLQ write
-            # job below runs only when this is non-zero (rare path)
-            F.sum(
-                F.when(quarantine_reason().isNotNull(), 1).otherwise(0)
-            ).alias("nbad"),
-        ).collect()
+        # PASS 1 (narrow, column-pruned): per-table inventory
+        inv = src.groupBy("table").agg(*self.rules.inventory).collect()
         routed = {
             r["table"]: p for r in inv if (p := self.router.classify(r["table"]))
         }
         if not routed:
             return
-        names = sorted(routed)
+        rules = self.rules.routed(routed)
         barriers = {
             r["table"]: r["bar"]
             for r in inv
             if r["bar"] is not None and r["table"] in routed
         }
-        batch = route_filter(src, names)
 
-        # per-pattern RT expiry against per-table persistent watermarks
-        windows = {
-            t: (p.expires_ms if p.expires_ms is not None else self.expiry_ms)
-            for t, p in routed.items()
-            if p.tier == RT
-        }
-        windows = {t: w for t, w in windows.items() if w is not None}
-        late = F.lit(False)
-        if windows:
-            wms = self._advance_watermarks(
-                {r["table"]: r["max_ts"] for r in inv if r["max_ts"] is not None}
-            )
-            for t, w in windows.items():
-                if t in wms:
-                    late = late | (
-                        (F.col("table") == t)
-                        & (F.col("op_ts") < F.lit(wms[t]) - F.expr(f"INTERVAL {w} MILLISECOND"))
-                    )
-
-        # PASS 2 — the ONLY full-width pass: filter → collapse → staged
-        # write, with late counts and per-table lineage stats riding the
-        # same job as Observation metrics (no extra aggregation jobs)
-        exp_fail = expect_fail(routed)
-        late_metrics = [
-            F.sum(F.when(late & (F.col("table") == t), 1).otherwise(0)).alias(f"late_{i}")
-            for i, t in enumerate(names)
-        ] + [F.sum(F.when(exp_fail, 1).otherwise(0)).alias("nexp")]
-        batch_plain = batch  # pre-observe handle for the rare recompute path
-        late_obs = Observation()
-        batch = batch.observe(late_obs, *late_metrics)
-        live = batch.where(~late).where(
-            (F.col("op") != "drop") & quarantine_reason().isNull() & ~exp_fail
-        )
+        # PASS 2 — the ONLY full-width pass: ONE filter (route, health,
+        # expectations, RT expiry, drop barriers) → collapse → staged
+        # write, with per-table lineage stats riding the same job as
+        # Observation metrics (no extra aggregation jobs)
+        keep, batch, late_obs = rules.keep, src, None
+        if rules.windows or rules.expects:
+            late = F.lit(False)
+            if rules.windows:
+                # per-pattern RT expiry against per-table persistent watermarks
+                wms = self._advance_watermarks(
+                    {r["table"]: r["max_ts"] for r in inv if r["max_ts"] is not None}
+                )
+                for t, w in rules.windows.items():
+                    if t in wms:
+                        late = late | (
+                            (F.col("table") == t)
+                            & (F.col("op_ts") < F.lit(wms[t]) - F.expr(f"INTERVAL {w} MILLISECOND"))
+                        )
+                keep = keep & ~late
+            # late and expectation counts ride the write job; an epoch
+            # with neither has none to count
+            late_metrics = [
+                F.sum(F.when(late & (F.col("table") == t), 1).otherwise(0)).alias(f"late_{i}")
+                for i, t in enumerate(rules.names)
+            ] + [rules.nexp]
+            late_obs = Observation()
+            batch = src.where(rules.route).observe(late_obs, *late_metrics)
         for t, bar in barriers.items():
-            live = live.where(
-                (F.col("table") != t) | (F.col(ORDER_COL) > F.lit(bar).cast("long"))
-            )
+            keep = keep & ((F.col("table") != t) | (F.col(ORDER_COL) > F.lit(bar).cast("long")))
+        live = batch.where(keep)
 
         est_keys = sum(r["nkeys"] or 0 for r in inv if r["table"] in routed)
         collapsed = collapse(live, broadcast_winners=est_keys <= self.broadcast_keys_max)
         stats_obs = Observation()
-        metrics = []
-        for i, t in enumerate(names):
-            cond = F.col("table") == t
-            metrics += [
-                F.min(F.when(cond, F.col(ORDER_COL))).alias(f"lo_{i}"),
-                F.max(F.when(cond, F.col(ORDER_COL))).alias(f"hi_{i}"),
-                F.sum(F.when(cond, 1).otherwise(0)).alias(f"n_{i}"),
-                F.sum(F.when(cond & (F.col("op") == "insert"), 1).otherwise(0)).alias(f"ni_{i}"),
-                F.sum(F.when(cond & F.col("op").isin("update", "replace"), 1).otherwise(0)).alias(f"nu_{i}"),
-                F.sum(F.when(cond & (F.col("op") == "delete"), 1).otherwise(0)).alias(f"nd_{i}"),
-            ]
-        collapsed_plain = collapsed  # pre-observe handle (rare recompute)
-        collapsed = collapsed.observe(stats_obs, *metrics)
-
-        stored = prepare_delta(collapsed, keep_table=True)
+        stored = prepare_delta(collapsed.observe(stats_obs, *rules.stats), keep_table=True)
         # scope-namespaced AND attempt-unique: a fresh checkpoint over an
         # existing lake restarts epochs at 0, and a crash-replay re-runs
         # an epoch whose earlier attempt some tables already committed —
@@ -359,7 +390,7 @@ class CdcPipeline:
         stored.write.mode("overwrite").partitionBy("table").parquet(staging)
 
         try:
-            lates = late_obs.get
+            lates = late_obs.get if late_obs else {}
             st = stats_obs.get
         except Exception:
             # When the epoch collapses to ZERO live rows (all events
@@ -367,10 +398,10 @@ class CdcPipeline:
             # propagation can eliminate the join subtree that carries the
             # observe nodes — the observations never fire and .get trips
             # an empty-row assertion.  Recompute the same metrics with
-            # explicit aggregations on the pre-observe handles (two tiny
+            # explicit aggregations on the pre-observe handles (tiny
             # narrow jobs; this path is rare by construction).
-            lates = batch_plain.agg(*late_metrics).first().asDict()
-            st = collapsed_plain.agg(*metrics).first().asDict()
+            lates = src.where(rules.route).agg(*late_metrics).first().asDict() if late_obs else {}
+            st = collapsed.agg(*rules.stats).first().asDict()
         scope = self._scope()
         # ONE timestamp per epoch: rolling_events_per_sec groups lineage
         # rows into epochs by (committed_at, batch_id) — per-row stamps
@@ -379,7 +410,7 @@ class CdcPipeline:
         committed_at = time.time()
         ddl = _ddl(stored.drop("table", SEQ_COL, DELETED_COL))
         lineage_rows = []
-        for i, t in enumerate(names):
+        for i, t in enumerate(rules.names):
             tbl = self.table(t)
             if t in barriers:
                 tbl.commit_truncate(
@@ -401,7 +432,7 @@ class CdcPipeline:
                     n_insert=int(st[f"ni_{i}"] or 0),
                     n_update=int(st[f"nu_{i}"] or 0),
                     n_delete=int(st[f"nd_{i}"] or 0),
-                    n_dropped_late=int(lates[f"late_{i}"] or 0),
+                    n_dropped_late=int(lates.get(f"late_{i}") or 0),
                     apply_ms=(time.monotonic() - t0) * 1000.0,
                     committed_at=committed_at,
                     scope=scope,
@@ -412,30 +443,22 @@ class CdcPipeline:
         # epoch produces — including quarantined rows — must exist first
         n_bad = sum(int(r["nbad"] or 0) for r in inv if r["table"] in routed)
         if n_bad or int(lates.get("nexp") or 0):
-            self._write_dlq(src, epoch_id, names, exp_fail)
+            self._write_dlq(src, epoch_id, rules)
 
         self._write_lineage(epoch_id, lineage_rows)
 
     # ---------- dead-letter queue (malformed events) ----------
 
-    def _write_dlq(self, src: DataFrame, epoch_id: int, tables: list[str],
-                   exp_fail=None) -> None:
+    def _write_dlq(self, src: DataFrame, epoch_id: int, rules: SimpleNamespace) -> None:
         """Quarantine the epoch's malformed rows (rare path: runs only
         when the inventory counted any).  The destination is
         deterministic per (scope, epoch) and written with overwrite, so
         a crash-replayed epoch rewrites identical content — idempotent
         like every other epoch artifact.  Healthy processing never pays
         for this job."""
-        reason = quarantine_reason()
-        if exp_fail is not None:
-            # structural reasons win (an unknown-op row can't be judged
-            # against a payload contract); expectation failures follow
-            reason = F.coalesce(
-                reason, F.when(exp_fail, F.lit("expectation"))
-            )
         dlq = (
-            src.where(F.col("table").isin(tables))
-            .withColumn("reason", reason)
+            src.where(rules.route)
+            .withColumn("reason", rules.dlq_reason)
             .where(F.col("reason").isNotNull())
             .withColumn("epoch_id", F.lit(epoch_id).cast("long"))
         )
