@@ -15,10 +15,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from yadex_spark.lake.table import LakeTable
-from yadex_spark.operators.collapse import batch_stats, collapse, split_drops
+from yadex_spark.operators.collapse import collapse
+from yadex_spark.operators.route import Router
 from yadex_spark.oracle import replay, state_to_pdf
 from yadex_spark.schema import oplog_schema
 from yadex_spark.sources.genlog import gen_oplog
+from yadex_spark.streaming.pipeline import EpochRules
 from yadex_spark.verify import assert_equal_state, diff_counts
 
 N_EVENTS = 10_000
@@ -68,8 +70,8 @@ def test_collapse_is_one_row_per_key(oplog):
     assert dup == 0
 
 
-def test_batch_replay_matches_oracle(spark, tmp_path, oplog):
-    live, truncs = split_drops(oplog)
+def test_batch_replay_matches_oracle(spark, tmp_path, oplog, one_epoch):
+    live = one_epoch(oplog).live
     collapsed = collapse(live).where(F.col("doc_id").isNotNull())
 
     tbl = LakeTable(spark, str(tmp_path / "seqs"))
@@ -84,8 +86,8 @@ def test_batch_replay_matches_oracle(spark, tmp_path, oplog):
     assert_equal_state(expected, actual)
 
 
-def test_idempotent_recommit(spark, tmp_path, oplog):
-    live, _ = split_drops(oplog)
+def test_idempotent_recommit(spark, tmp_path, oplog, one_epoch):
+    live = one_epoch(oplog).live
     batch = collapse(live).where("table = 'seqs'").drop("table")
     tbl = LakeTable(spark, str(tmp_path / "seqs2"))
     v1 = tbl.commit_delta(batch, batch_id="epoch-0")
@@ -94,13 +96,15 @@ def test_idempotent_recommit(spark, tmp_path, oplog):
     assert tbl.latest_version() == 1
 
 
-def test_drop_barrier(spark, tmp_path):
+def test_drop_barrier(spark, tmp_path, one_epoch):
     """A 'drop' kills all prior state for its table; later events apply
-    (reference: buffer discard + collection drop, msync/input.go:113-123)."""
+    (reference: buffer discard + collection drop, msync/input.go:113-123).
+    The barrier is the pipeline's own epoch filter."""
     drop_seq = 6_000
     oplog = gen_oplog(spark, N_EVENTS, N_DOCS, seed=43, drop_at=(drop_seq,))
-    live, truncs = split_drops(oplog)
-    assert truncs.count() == 1
+    ep = one_epoch(oplog)
+    live = ep.live
+    assert len(ep.barriers) == 1
 
     tbl = LakeTable(spark, str(tmp_path / "seqs3"))
     tbl.commit_truncate(batch_id="b0-trunc")
@@ -115,10 +119,10 @@ def test_drop_barrier(spark, tmp_path):
     assert_equal_state(expected, actual)
 
 
-def test_compaction_preserves_state(spark, tmp_path, oplog):
+def test_compaction_preserves_state(spark, tmp_path, oplog, one_epoch):
     """Split the oplog into 4 sequential batches, compact mid-way; final
     state identical to single-batch apply."""
-    live, _ = split_drops(oplog)
+    live = one_epoch(oplog).live
     live = live.where("table = 'seqs'")
     tbl = LakeTable(spark, str(tmp_path / "seqs4"))
     span = N_EVENTS // 4
@@ -234,10 +238,10 @@ def test_compaction_keeps_tombstones_against_late_arrivals(spark, tmp_path):
     assert {r["doc_id"] for r in rows} == {"k2"}
 
 
-def test_vacuum_expires_precompact_snapshots(spark, tmp_path, oplog):
+def test_vacuum_expires_precompact_snapshots(spark, tmp_path, oplog, one_epoch):
     """vacuum() removes data files unreachable from the active chain;
     current reads survive, pre-compaction time travel expires."""
-    live, _ = split_drops(oplog)
+    live = one_epoch(oplog).live
     live = live.where("table = 'seqs'")
     tbl = LakeTable(spark, str(tmp_path / "v"))
     tbl.commit_delta(collapse(live.where("op_seq < 5000")).drop("table"), "e0")
@@ -319,10 +323,17 @@ def test_concurrent_writers_cannot_claim_one_version(spark, tmp_path):
 
 
 def test_lineage_stats(oplog):
-    stats = batch_stats(oplog.where("op != 'drop'"))
-    agg = stats.agg(
-        F.sum("n_insert"), F.sum("n_update"), F.sum("n_delete"), F.min("offset_lo"), F.max("offset_hi")
-    ).collect()[0]
+    """The pipeline's per-table lineage stats (EpochRules.routed().stats)
+    over the raw events: op counts and the offset range."""
+    tables = sorted(r["table"] for r in oplog.select("table").distinct().collect())
+    rules = EpochRules(None).routed({t: Router().classify(t) for t in tables})
+    st = oplog.where("op != 'drop'").agg(*rules.stats).first()
+    idx = range(len(rules.names))
+    agg = [
+        sum(st[f"ni_{i}"] for i in idx), sum(st[f"nu_{i}"] for i in idx),
+        sum(st[f"nd_{i}"] for i in idx), min(st[f"lo_{i}"] for i in idx),
+        max(st[f"hi_{i}"] for i in idx),
+    ]
     assert agg[0] + agg[1] + agg[2] == N_EVENTS
     assert agg[3] == 0 and agg[4] == N_EVENTS - 1
 

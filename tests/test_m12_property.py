@@ -8,8 +8,9 @@ the *laws* the operators claim on arbitrary small inputs:
   and the result is invariant under input permutation (LWW-max is
   associative + commutative, the property the map-side partial
   aggregation depends on — collapse.py module docstring).
-- split_drops: the drop barrier keeps exactly the events past the last
-  drop per table (/root/reference/msync/input.go:113-123 semantics).
+- the drop barrier of the pipeline's epoch filter (EpochRules.epoch)
+  keeps exactly the events past the last drop per table
+  (msync/input.go:113-123 semantics).
 - pack_sequences: equals a sequential per-shard Python packer, bins
   partition the shard, offsets never exceed the budget.
 - train_val_split: per-row hash rule, so membership is stable under
@@ -28,7 +29,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import types as T
 
-from yadex_spark.operators.collapse import collapse, split_drops
+from yadex_spark.operators.collapse import collapse
 from yadex_spark.operators.packing import pack_sequences, train_val_split
 
 EVENT_SCHEMA = T.StructType(
@@ -129,11 +130,11 @@ def test_collapse_is_permutation_invariant(spark, rows, seed):
 
 @settings(max_examples=8, **SETTINGS)
 @given(rows=event_lists(with_drops=True))
-def test_split_drops_equals_reference(spark, rows):
-    live, truncs = split_drops(spark.createDataFrame(rows, EVENT_SCHEMA))
+def test_split_drops_equals_reference(spark, one_epoch, rows):
+    ep = one_epoch(spark.createDataFrame(rows, EVENT_SCHEMA))
     exp_live, exp_truncs = _py_split_drops(rows)
-    assert sorted(tuple(r) for r in live.collect()) == exp_live
-    assert sorted(tuple(r) for r in truncs.collect()) == exp_truncs
+    assert sorted(tuple(r) for r in ep.live.collect()) == exp_live
+    assert sorted(ep.barriers.items()) == exp_truncs
 
 
 def _py_shard(doc_id: str, n_shards: int) -> int:

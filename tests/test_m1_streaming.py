@@ -431,3 +431,48 @@ def test_multi_table_drop_barriers(spark, tmp_path):
     pipe.run_available_now()
     for t in ("seqs", "aux"):
         assert_equal_state(_expected(spark, oplog, t), pipe.table(t).read())
+
+
+def test_chunked_feed_files_are_timed_in_seq_order(spark, tmp_path):
+    """write_oplog_chunks writes one file per generator partition per
+    chunk; the file source reads a feed in mtime order, so the files
+    must carry distinct whole-second mtimes in op_seq order, ending
+    before now — and a later raw append must still sort after them."""
+    import time
+
+    import pyarrow.parquet as pq
+
+    oplog = gen_oplog(spark, 4_000, 500, seed=5, num_partitions=4)
+    path = str(tmp_path / "oplog")
+    write_oplog_chunks(oplog, path, n_chunks=3, bounds=(0, 3_999))
+
+    def by_mtime():
+        # empty partition files carry no events, so no epoch depends on them
+        files = [os.path.join(path, f) for f in os.listdir(path)
+                 if f.endswith(".parquet") and pq.ParquetFile(os.path.join(path, f)).metadata.num_rows]
+        return sorted(files, key=lambda f: os.stat(f).st_mtime_ns)
+
+    files = by_mtime()
+    assert len(files) > 3  # several files per chunk
+    spans = []
+    for f in files:
+        seqs = pq.read_table(f, columns=["op_seq"])["op_seq"].to_pylist()
+        spans.append((min(seqs), max(seqs)))
+    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
+    secs = [os.stat(f).st_mtime_ns // 10**9 for f in files]
+    assert all(a < b for a, b in zip(secs, secs[1:]))
+    assert secs[-1] < time.time()
+    oplog.where("op_seq >= 3900").coalesce(1).write.mode("append").parquet(path)
+    assert by_mtime()[: len(files)] == files
+
+
+def test_apply_batch_on_static_frame_without_source_log(spark, tmp_path):
+    """An epoch the checkpoint's source log does not list (here a static
+    frame handed straight to apply_batch) is applied from the frame
+    itself: the state equals the replay oracle and lineage is written."""
+    oplog = gen_oplog(spark, 3_000, 500, seed=23, drop_at=(1_200,))
+    pipe = _pipe(spark, tmp_path, str(tmp_path / "no-feed"))
+    pipe.apply_batch(oplog, 0)
+    assert_equal_state(_expected(spark, oplog), pipe.table("seqs").read())
+    (row,) = pipe.lineage().collect()
+    assert (row["batch_id"], row["table"], row["offset_hi"]) == (0, "seqs", 2_999)

@@ -77,3 +77,41 @@ def test_concurrent_commits_serialize_and_reads_never_break(spark, tmp_path):
     df = collapse(spark.createDataFrame(rows, OPLOG_DDL)).drop("table")
     assert tbl.commit_delta(df, batch_id="w0-0") is None
     assert "dup" not in {r["doc_id"] for r in tbl.read().collect()}
+
+
+def test_checkpoint_scope_race_has_one_winner(tmp_path):
+    """Threads of one process racing to create a checkpoint's scope id
+    (two streams in one driver) all get the same scope and none fails:
+    the O_EXCL publish uses a per-thread tmp file, so no thread can
+    unlink or half-write another's."""
+    import sys
+    import threading
+
+    from yadex_spark.streaming.ingest_core import checkpoint_scope
+
+    n = 8
+    old_switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for r in range(6):
+            ckpt = str(tmp_path / f"ckpt{r}")
+            start = threading.Barrier(n)
+            scopes: list[str] = []
+            errors: list[str] = []
+
+            def claim():
+                start.wait(timeout=30)
+                try:
+                    scopes.append(checkpoint_scope(ckpt))
+                except Exception as ex:  # noqa: BLE001 - the law is "none raises"
+                    errors.append(repr(ex))
+
+            threads = [threading.Thread(target=claim) for _ in range(n)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=30)
+                assert not t.is_alive()
+            assert errors == [] and len(scopes) == n and len(set(scopes)) == 1
+    finally:
+        sys.setswitchinterval(old_switch)

@@ -123,6 +123,55 @@ def test_lag_tracks_feed_and_drain(spark, tmp_path):
     assert "tokens" in sh["seqs"][0]["added"]
 
 
+def test_feed_bounds_read_footers_and_stat_less_files(spark, tmp_path):
+    """lag()'s feed head and the feed minimum (maintain's "auto"
+    tombstone watermark, validate_retention) come from driver-side
+    footers: a file written without statistics falls back to its
+    op_seq column, and together they equal Spark's own min/max over the
+    feed, with no Spark job started."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from yadex_spark.lake.table import _file_key_bounds
+    from yadex_spark.streaming.bookmarks import feed_min_offset
+
+    oplog = gen_oplog(spark, 2_000, 400, seed=37)
+    path = str(tmp_path / "oplog")
+    write_oplog_chunks(oplog.where("op_seq >= 100 AND op_seq < 1900"), path,
+                       n_chunks=2, bounds=(100, 1_899))
+    # the feed's min AND max live only in a stat-less pyarrow file
+    side = str(tmp_path / "side")
+    oplog.where("op_seq < 100 OR op_seq >= 1900").coalesce(1).write.parquet(side)
+    (part,) = [f for f in os.listdir(side) if f.endswith(".parquet")]
+    nostats = os.path.join(path, "nostats.parquet")
+    pq.write_table(pq.read_table(os.path.join(side, part)), nostats, write_statistics=False,
+                   use_deprecated_int96_timestamps=True)
+    assert _file_key_bounds(nostats, "op_seq") is None
+
+    pipe = CdcPipeline(spark, oplog_dir=path, lake_dir=str(tmp_path / "lake"),
+                       checkpoint_dir=str(tmp_path / "ckpt"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("feed-bounds", "feed bounds")
+        head, low = pipe.lag()["feed_head"], feed_min_offset(path)
+        # the listener bus is FIFO: once a later job is visible, any job
+        # the calls started is visible too
+        sc.setJobGroup("feed-bounds-sentinel", "sentinel")
+        spark.range(1).count()
+        deadline = time.time() + 60
+        while not tracker.getJobIdsForGroup("feed-bounds-sentinel") and time.time() < deadline:
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup("feed-bounds-sentinel")
+        assert tracker.getJobIdsForGroup("feed-bounds") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    want = spark.read.parquet(path).agg(F.min("op_seq"), F.max("op_seq")).first()
+    assert (low, head) == (want[0], want[1]) == (0, 1_999)
+
+
 def test_key_history_audit_trail(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "hist"))
     t.commit_append(

@@ -48,21 +48,6 @@ def lake(spark, tmp_path, _two_delta_lake):
     return LakeTable(spark, path)
 
 
-def _no_footer(monkeypatch):
-    """Make any data-file footer probe AND any data-directory listing
-    explode — proves probe planning came from the manifest alone (on
-    object storage both are per-snapshot round-trips)."""
-
-    def boom(path, key, probes):  # pragma: no cover - must not run
-        raise AssertionError(f"footer opened for {path}")
-
-    def boom_ls(d):  # pragma: no cover - must not run
-        raise AssertionError(f"directory listed: {d}")
-
-    monkeypatch.setattr(T, "_file_may_contain", boom)
-    monkeypatch.setattr(T, "_parquet_files", boom_ls)
-
-
 def test_stats_recorded_and_exact(lake):
     for s in lake.snapshots():
         if s.files_dir is None:
@@ -75,14 +60,14 @@ def test_stats_recorded_and_exact(lake):
             assert bounds == _file_key_bounds(os.path.join(d, rel))
 
 
-def test_probe_reads_plan_with_zero_footer_opens(lake, monkeypatch):
+def test_probe_reads_plan_with_zero_footer_opens(lake, forbid_file_planning):
     probes = [r["doc_id"] for r in lake.read().limit(5).collect()]
     # footer-planned baseline first (stats forced off via a stripped view)
     want_lookup = sorted(r["doc_id"] for r in lake.lookup(probes).collect())
     want_keys = sorted(
         r["doc_id"] for r in lake.read_keys(probes=probes).collect()
     )
-    _no_footer(monkeypatch)
+    forbid_file_planning()
     st = {}
     got = sorted(r["doc_id"] for r in lake.lookup(probes, prune_stats=st).collect())
     assert got == want_lookup and st["pruned"] > 0
@@ -113,14 +98,14 @@ def test_prestats_manifest_falls_back_to_footers(lake, spark):
     assert st["pruned"] > 0  # footer zone maps still prune
 
 
-def test_checkpoint_fold_preserves_stats(lake, monkeypatch):
+def test_checkpoint_fold_preserves_stats(lake, forbid_file_planning):
     lake.compact()
     lake.compact_meta(keep_recent=0)
     meta = os.path.join(lake.path, "_meta")
     assert any(n.startswith("checkpoint-v") for n in os.listdir(meta))
     fresh = LakeTable(lake.spark, lake.path)
     probes = [r["doc_id"] for r in fresh.read().limit(3).collect()]
-    _no_footer(monkeypatch)
+    forbid_file_planning()
     st = {}
     got = {r["doc_id"] for r in fresh.lookup(probes, prune_stats=st).collect()}
     assert got == set(probes) and st["pruned"] > 0
@@ -139,11 +124,11 @@ def test_bounds_rule_edges():
     assert _bounds_may_contain(["b", "d"], []) is False
 
 
-def test_stats_survive_minor_compaction_and_zorder(lake, monkeypatch):
+def test_stats_survive_minor_compaction_and_zorder(lake, forbid_file_planning):
     lake.compact_minor()
     lake.compact(cluster_by=["source", "n_tok"])
     probes = [r["doc_id"] for r in lake.read().limit(3).collect()]
-    _no_footer(monkeypatch)
+    forbid_file_planning()
     got = {r["doc_id"] for r in lake.lookup(probes).collect()}
     # z-order broadens doc_id bounds (pruning may admit every file) but
     # planning must still come from the manifest and stay correct

@@ -22,7 +22,6 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-import yadex_spark.lake.table as T
 from yadex_spark.lake.table import LakeTable, _file_key_bounds, _range_may_overlap
 from yadex_spark.operators.collapse import collapse
 from yadex_spark.sources.genlog import gen_oplog
@@ -53,24 +52,13 @@ def lake(spark, tmp_path, _two_delta_lake):
     return LakeTable(spark, path)
 
 
-def _boom_planning(monkeypatch):
-    monkeypatch.setattr(
-        T, "_file_may_contain",
-        lambda *a: (_ for _ in ()).throw(AssertionError("footer opened")),
-    )
-    monkeypatch.setattr(
-        T, "_parquet_files",
-        lambda d: (_ for _ in ()).throw(AssertionError(f"listed {d}")),
-    )
-
-
 def test_read_where_equals_filtered_read_unclustered(lake):
     want = _state(lake.read().where(F.col("source") == "books"))
     got = _state(lake.read_where({"source": "books"}))
     assert got == want and want  # fixture must exercise the filter
 
 
-def test_clustered_compact_records_col_stats_and_prunes(lake, monkeypatch):
+def test_clustered_compact_records_col_stats_and_prunes(lake, forbid_file_planning):
     want = _state(
         lake.read().where((F.col("source") == "books") & F.col("n_tok").between(1, 40))
     )
@@ -82,7 +70,7 @@ def test_clustered_compact_records_col_stats_and_prunes(lake, monkeypatch):
     for c, stats in s.col_stats.items():
         for rel, b in stats.items():
             assert b == _file_key_bounds(os.path.join(d, rel), c)
-    _boom_planning(monkeypatch)  # planning must use the manifest alone
+    forbid_file_planning()  # planning must use the manifest alone
     st = {}
     got = _state(lake.read_where(PRED, prune_stats=st))
     assert got == want
@@ -97,11 +85,11 @@ def test_range_and_open_ended_predicates(lake):
     assert _state(lake.read_where({"n_tok": (1, 40)})) == want2
 
 
-def test_doc_id_predicate_prunes_via_file_stats(lake, monkeypatch):
+def test_doc_id_predicate_prunes_via_file_stats(lake, forbid_file_planning):
     lake.compact()  # doc_id range-clustered: tight file_stats bounds
     lake.vacuum()
     probe = lake.read().limit(1).collect()[0]["doc_id"]
-    _boom_planning(monkeypatch)
+    forbid_file_planning()
     st = {}
     got = _state(lake.read_where({"doc_id": probe}, prune_stats=st))
     assert [r[0] for r in got] == [probe]
@@ -214,7 +202,7 @@ def test_range_may_overlap_edges():
     assert _range_may_overlap([1, 5], "a", "z") is True
 
 
-def test_minor_compact_cluster_by_keeps_col_stats(lake, monkeypatch):
+def test_minor_compact_cluster_by_keeps_col_stats(lake, forbid_file_planning):
     """Z-ordered L1: compact_minor(cluster_by=...) folds the trailing
     deltas into a merge that commits col_stats, so read_where keeps
     file-skipping between full compactions."""
@@ -229,7 +217,7 @@ def test_minor_compact_cluster_by_keeps_col_stats(lake, monkeypatch):
     assert _state(lake.read()) == want_all  # purely physical
     lake.vacuum()
     assert lake.fsck()["errors"] == []
-    _boom_planning(monkeypatch)
+    forbid_file_planning()
     st = {}
     got = _state(lake.read_where(PRED, prune_stats=st))
     assert got == want and st["pruned"] > 0

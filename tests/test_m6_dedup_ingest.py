@@ -187,35 +187,46 @@ def test_zone_map_pruning_skips_registry_files(spark, tmp_path, feed):
 
 
 def test_file_bounds_pruning_is_conservative(tmp_path):
-    """_file_may_contain keeps any file it cannot PROVE probe-free:
+    """The footer path of the probe prune rule (LakeTable._probe_prune
+    over _file_key_bounds) keeps any file it cannot PROVE probe-free:
     missing stats, type mismatch, truncation-length strings — and
     prunes only on exact disjoint bounds.  Pure driver-side check."""
+    from types import SimpleNamespace
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from yadex_spark.lake.table import _file_may_contain
+    from yadex_spark.lake.table import LakeTable
 
-    f_stats = str(tmp_path / "stats.parquet")
-    pq.write_table(pa.table({"doc_id": ["bbb", "ccc", "ddd"]}), f_stats)
-    f_nostats = str(tmp_path / "nostats.parquet")
-    pq.write_table(pa.table({"doc_id": ["bbb", "ccc"]}), f_nostats,
-                   write_statistics=False)
-    f_empty = str(tmp_path / "empty.parquet")
-    pq.write_table(pa.table({"doc_id": pa.array([], type=pa.string())}), f_empty)
+    def table_file(name, table, **kw):
+        d = tmp_path / name  # one file per dir: the prune plans a dir
+        d.mkdir()
+        pq.write_table(table, str(d / "part-0.parquet"), **kw)
+        return str(d / "part-0.parquet")
 
-    assert _file_may_contain(f_stats, "doc_id", ["ccc"])          # inside
-    assert _file_may_contain(f_stats, "doc_id", ["aaa", "bbb"])   # boundary
-    assert not _file_may_contain(f_stats, "doc_id", ["aaa"])      # below min
-    assert not _file_may_contain(f_stats, "doc_id", ["eee"])      # above max
-    assert not _file_may_contain(f_stats, "doc_id", [])           # no probes
-    assert _file_may_contain(f_nostats, "doc_id", ["zzz"])        # no stats: keep
-    assert not _file_may_contain(f_empty, "doc_id", ["ccc"])      # 0 rows: skip
-    assert _file_may_contain(f_stats, "other_col", ["x"])         # key absent: keep
-    assert _file_may_contain(f_stats, "doc_id", [123])            # type mismatch: keep
+    def may_contain(f, key, probes):
+        prune = LakeTable._probe_prune(key, probes)
+        kept, n = prune(SimpleNamespace(file_stats=None), os.path.dirname(f))
+        assert n == 1
+        return kept == [f]
+
+    f_stats = table_file("stats", pa.table({"doc_id": ["bbb", "ccc", "ddd"]}))
+    f_nostats = table_file("nostats", pa.table({"doc_id": ["bbb", "ccc"]}),
+                           write_statistics=False)
+    f_empty = table_file("empty", pa.table({"doc_id": pa.array([], type=pa.string())}))
+
+    assert may_contain(f_stats, "doc_id", ["ccc"])          # inside
+    assert may_contain(f_stats, "doc_id", ["aaa", "bbb"])   # boundary
+    assert not may_contain(f_stats, "doc_id", ["aaa"])      # below min
+    assert not may_contain(f_stats, "doc_id", ["eee"])      # above max
+    assert not may_contain(f_stats, "doc_id", [])           # no probes
+    assert may_contain(f_nostats, "doc_id", ["zzz"])        # no stats: keep
+    assert not may_contain(f_empty, "doc_id", ["ccc"])      # 0 rows: skip
+    assert may_contain(f_stats, "other_col", ["x"])         # key absent: keep
+    assert may_contain(f_stats, "doc_id", [123])            # type mismatch: keep
     # truncation-length guard: a 64-char bound may be inexact -> keep
-    f_long = str(tmp_path / "long.parquet")
-    pq.write_table(pa.table({"doc_id": ["a" * 64, "b" * 64]}), f_long)
-    assert _file_may_contain(f_long, "doc_id", ["zzz"])
+    f_long = table_file("long", pa.table({"doc_id": ["a" * 64, "b" * 64]}))
+    assert may_contain(f_long, "doc_id", ["zzz"])
 
 
 def test_probe_budget_fallback_keeps_semantics(spark, tmp_path, feed):

@@ -543,9 +543,12 @@ class LakeTable:
         return v
 
     def vacuum(self, retain_last: int = 0, dry_run: bool = False) -> list[str]:
-        """Delete data directories no longer reachable from the CURRENT
-        active chain (Iceberg's expire-snapshots + remove-orphans
-        maintenance).  Returns the removed dirs.  ``dry_run=True``
+        """Delete data directories that some manifest references but the
+        CURRENT active chain no longer reaches (Iceberg's
+        expire-snapshots).  Orphan dirs that no manifest references (a
+        writer died between its data write and its claim) are not
+        removed here: :meth:`fsck` reports them and ``fsck(repair=True)``
+        deletes them.  Returns the removed dirs.  ``dry_run=True``
         returns exactly what a real run would remove without deleting
         anything (the Delta ``VACUUM ... DRY RUN`` preview — the sane
         first step before any destructive retention change).
@@ -1149,23 +1152,24 @@ class LakeTable:
         needs NO directory listing and NO footer opens — one manifest
         read plans the whole probe (the Iceberg manifest-skip shape).
         Non-doc_id keys and pre-stats manifests fall back to the
-        listing + per-file footer probe; a null-bounds inventory entry
-        (unprovable footer at commit time) is always kept.  All paths
-        share the conservative keep-on-doubt rule."""
+        listing + per-file footer bounds (:func:`_file_key_bounds`);
+        either way one rule decides, :func:`_bounds_may_contain`, and
+        null bounds (unprovable footer) always keep the file.  A footer
+        yields one [min, max] over all its row groups, so a probe in a
+        gap between row groups keeps the file."""
         sorted_probes = sorted(probes)
 
         def prune(s: Snapshot, full: str) -> tuple[list[str] | None, int]:
             stats = s.file_stats if key == "doc_id" else None
-            if stats:
-                kept = [os.path.join(full, rel)
-                        for rel, b in sorted(stats.items())
-                        if b is None or _bounds_may_contain(b, sorted_probes)]
-                return kept, len(stats)
-            files = _parquet_files(full)
-            if files is None:
-                return None, 0
-            kept = [f for f in files if _file_may_contain(f, key, sorted_probes)]
-            return kept, len(files)
+            if not stats:
+                files = _parquet_files(full)
+                if files is None:
+                    return None, 0
+                stats = {os.path.relpath(f, full): _file_key_bounds(f, key) for f in files}
+            kept = [os.path.join(full, rel)
+                    for rel, b in sorted(stats.items())
+                    if b is None or _bounds_may_contain(b, sorted_probes)]
+            return kept, len(stats)
 
         return prune
 
@@ -1705,9 +1709,12 @@ _MAX_STATS_FILES = 4096
 def _file_key_bounds(path: str, key: str = "doc_id") -> list | None:
     """Exact [min, max] of ``key`` in ``path`` from its footer, ``[]``
     for a zero-row file (always prunable), or None when the footer
-    cannot PROVE bounds — the same conservatism as
-    :func:`_file_may_contain` (missing/partial stats, non-str/int
-    values, truncation-length strings)."""
+    cannot PROVE bounds: missing/partial stats, non-str/int values,
+    truncation-length strings, an unreadable footer.  The one footer
+    min/max reader: probe and range pruning, the manifests' file stats
+    and the feed's op_seq bounds all use it.  UTF-8 byte order equals
+    code-point order, so str bounds compare soundly with Python str
+    probes."""
     import pyarrow.parquet as pq
 
     try:
@@ -1757,10 +1764,10 @@ def _collect_file_stats(full_dir: str, key: str = "doc_id") -> dict | None:
 
 
 def _bounds_may_contain(bounds: list, sorted_probes: list) -> bool:
-    """The :func:`_file_may_contain` decision over manifest-carried
-    bounds instead of a footer read.  Type drift between stored bounds
-    and probes (a manifest written under a different key type) keeps
-    the file — pruning stays an optimization."""
+    """Can a file with ``bounds`` (:func:`_file_key_bounds`) hold any
+    of ``sorted_probes``?  No probes or an empty file: no.  Type drift
+    between bounds and probes (a manifest written under a different key
+    type) keeps the file — pruning stays an optimization."""
     import bisect
 
     if not sorted_probes or bounds == []:
@@ -1791,49 +1798,3 @@ def _range_may_overlap(bounds: list | None, lo, hi) -> bool:
         return True
     return True
 
-
-def _file_may_contain(path: str, key: str, sorted_probes: list) -> bool:
-    """Can ``path`` contain any of ``sorted_probes`` in column ``key``?
-
-    True unless the footer PROVES otherwise: every row group carries
-    exact min/max for ``key`` of the same type as the probes, and no
-    probe falls inside any [min, max].  UTF-8 byte order equals
-    code-point order, so Python str comparison against parquet's
-    byte-ordered string stats is sound; ints compare directly.  Any
-    doubt (missing column/stats, bytes vs str, truncation-length
-    strings) keeps the file — pruning is only ever an optimization."""
-    import bisect
-
-    import pyarrow.parquet as pq
-
-    if not sorted_probes:
-        return False  # nothing probed: no file can match
-    try:
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return True
-    if md.num_rows == 0:
-        return False
-    col_idx = None
-    for i in range(md.num_columns):
-        if md.row_group(0).column(i).path_in_schema == key:
-            col_idx = i
-            break
-    if col_idx is None:
-        return True
-    probe_t = type(sorted_probes[0])
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(col_idx).statistics
-        if st is None or not st.has_min_max:
-            return True
-        mn, mx = st.min, st.max
-        if not (isinstance(mn, probe_t) and isinstance(mx, probe_t)):
-            return True
-        if isinstance(mn, str) and (
-            len(mn) >= _MAX_EXACT_STAT_LEN or len(mx) >= _MAX_EXACT_STAT_LEN
-        ):
-            return True
-        i = bisect.bisect_left(sorted_probes, mn)
-        if i < len(sorted_probes) and sorted_probes[i] <= mx:
-            return True
-    return False

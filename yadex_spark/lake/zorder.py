@@ -21,11 +21,12 @@ ZORDER BY`` / Iceberg sort-order idea, built here from plain Spark:
 
 Pruning then needs no reader support at all: parquet footer/row-group
 min/max stats on the ORIGINAL columns do the skipping through Spark's
-ordinary pushed filters (and fully in `_file_may_contain`-style footer
-probes).  Trade-off (documented contract): the doc_id footer spans go
-broad, so point-lookup file pruning degrades to row-group granularity
-— z-order is the analytics layout, the doc_id sort stays the serving
-default; pick per table at :meth:`LakeTable.compact(cluster_by=...)`.
+ordinary pushed filters (and in the per-file footer bounds of
+`table._file_key_bounds`).  Trade-off (documented contract): the doc_id
+footer spans go broad, so point-lookup file pruning degrades to
+row-group granularity — z-order is the analytics layout, the doc_id
+sort stays the serving default; pick per table at
+:meth:`LakeTable.compact(cluster_by=...)`.
 """
 
 from __future__ import annotations

@@ -29,10 +29,12 @@ identical across impls and micro-batch boundaries.
   whose "merge" is not expressible as a struct-max (e.g. custom
   conflict resolution), per BASELINE.json north_star.
 
-Drop barrier (T1 'drop' + B1 rule (c), /root/reference/msync/input.go:
-113-123): a collection drop discards everything before it for that
-table.  ``split_drops`` returns the surviving events plus a per-table
-truncate watermark the sink applies *before* merging the batch.
+Drop barrier (T1 'drop' + B1 rule (c), msync/input.go:113-123): a
+collection drop discards everything before it for that table.  The
+pipeline applies it as a conjunct of the epoch's one live filter,
+``streaming.pipeline.EpochRules.epoch``, and commits the barrier as a
+truncate before the epoch's delta; reads apply it again through
+``LakeTable._scan(kill_seq)``.
 """
 
 from __future__ import annotations
@@ -48,27 +50,6 @@ from pyspark.sql import functions as F
 #: drop barriers, lake _seq) so the winner never depends on impl choice
 #: or micro-batch boundaries.  op_ts is metadata (expiry windows only).
 ORDER_COL = "op_seq"
-
-
-def split_drops(events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split a batch into (non-drop events past the last drop barrier,
-    per-table truncate watermarks).
-
-    Returns ``(events', truncates)`` where ``truncates`` has columns
-    (table, trunc_seq) — the max drop position per table.  Events for a
-    table at or before its barrier are dead (the reference discards the
-    buffered batch when a drop arrives)."""
-    drops = events.where(F.col("op") == "drop")
-    truncates = drops.groupBy("table").agg(F.max(ORDER_COL).alias("trunc_seq"))
-
-    live = events.where(F.col("op") != "drop")
-    # anti-filter: drop events that precede the barrier for their table
-    live = (
-        live.join(F.broadcast(truncates), "table", "left")
-        .where(F.col("trunc_seq").isNull() | (F.col(ORDER_COL) > F.col("trunc_seq")))
-        .drop("trunc_seq")
-    )
-    return live, truncates
 
 
 def collapse(events: DataFrame, impl: str = "narrow", n_salt: int = 16,
@@ -125,18 +106,3 @@ def _collapse_arrow(events: DataFrame, n_salt: int) -> DataFrame:
     order = ["table", "doc_id"] + [c for c in events.columns if c not in ("table", "doc_id")]
     return phase2.select(*order)
 
-
-def batch_stats(events: DataFrame) -> DataFrame:
-    """Per-(table, partition) lineage inputs: offset range + op counts
-    (SURVEY.md C1/M1 — the north_rule's per-partition lineage)."""
-    return (
-        events.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("table", "partition_id")
-        .agg(
-            F.min("op_seq").alias("offset_lo"),
-            F.max("op_seq").alias("offset_hi"),
-            F.sum(F.when(F.col("op") == "insert", 1).otherwise(0)).alias("n_insert"),
-            F.sum(F.when(F.col("op").isin("update", "replace"), 1).otherwise(0)).alias("n_update"),
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("n_delete"),
-        )
-    )

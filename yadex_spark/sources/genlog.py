@@ -177,10 +177,14 @@ def write_oplog_chunks(
     df: DataFrame, path: str, n_chunks: int, bounds: tuple[int, int] | None = None
 ) -> None:
     """Write the oplog as ``n_chunks`` sequential parquet drops so the
-    Structured Streaming file source replays it as an ordered feed
-    (each chunk gets a later mtime; ``maxFilesPerTrigger`` then gives
-    deterministic micro-batch boundaries).  Chunks are op_seq ranges —
-    the analogue of change-stream arrival order.
+    Structured Streaming file source replays it as an ordered feed.
+    Chunks are op_seq ranges — the analogue of change-stream arrival
+    order.  A chunk write makes one file per generator partition, all
+    with near-equal mtimes, so afterwards every file is re-timed in
+    op_seq order, whole seconds apart and ending before now (the file
+    source orders a feed by mtime, and coarse filesystems keep seconds
+    only): ``maxFilesPerTrigger`` then gives deterministic micro-batch
+    boundaries, and a later append still sorts after them.
 
     Each chunk write keeps FULL upstream parallelism (no coalesce —
     coalesce would collapse the generating stage itself) and the op_seq
@@ -197,6 +201,18 @@ def write_oplog_chunks(
             (F.col("op_seq") >= mn + i * span) & (F.col("op_seq") < mn + (i + 1) * span)
         )
         chunk.write.mode("append" if i else "overwrite").parquet(path)
+    _retime_in_seq_order(path)
+
+
+def _retime_in_seq_order(path: str) -> None:
+    """Set the feed files' mtimes one second apart in min-op_seq order,
+    the last one a second before now."""
+    from yadex_spark.streaming.bookmarks import feed_seq_bounds
+
+    files = sorted(feed_seq_bounds(path).items(), key=lambda kv: kv[1][0])
+    t0 = int(time.time()) - len(files)
+    for i, (f, _) in enumerate(files):
+        os.utime(f, (t0 + i, t0 + i))
 
 
 def _dir_parquet_bytes(path: str) -> int:
@@ -228,8 +244,8 @@ def write_oplog_bytes(
 
     All drops are written by ONE Spark job: each row is tagged with its
     drop index and shuffled by it, so ``partitionBy`` writes exactly one
-    file per drop; the files then move flat into ``path`` with mtimes
-    rising in drop order, the order the file source reads them in.
+    file per drop; the files then move flat into ``path`` and are
+    re-timed in op_seq order, as :func:`write_oplog_chunks` does.
     ``df`` is cached for the call (two pilot passes plus the write)."""
     import shutil
 
@@ -276,14 +292,10 @@ def write_oplog_bytes(
             )
             shutil.rmtree(path, ignore_errors=True)  # a feed is replaced, never appended to
             os.makedirs(path)
-            # whole seconds apart, ending now: the file source orders a
-            # feed by mtime, and coarse filesystems keep seconds only
-            t0 = int(time.time()) - len(drops)
-            for i, (k, d) in enumerate(drops):
+            for k, d in drops:
                 (name,) = [f for f in os.listdir(d) if f.endswith(".parquet")]
-                dst = os.path.join(path, f"drop-{k:06d}-{name}")
-                os.rename(os.path.join(d, name), dst)
-                os.utime(dst, (t0 + i, t0 + i))
+                os.rename(os.path.join(d, name), os.path.join(path, f"drop-{k:06d}-{name}"))
         finally:
             shutil.rmtree(staged, ignore_errors=True)
+        _retime_in_seq_order(path)
         return len(drops)

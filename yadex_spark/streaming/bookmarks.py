@@ -56,17 +56,48 @@ def is_clean(checkpoint_dir: str) -> bool:
     return off is None or off == com
 
 
-def feed_min_offset(spark: SparkSession, oplog_dir: str) -> int | None:
-    """Oldest op_seq the feed can still serve (its 'oplog retention')."""
-    row = spark.read.parquet(oplog_dir).agg(F.min("op_seq")).first()
-    return None if row[0] is None else int(row[0])
+def feed_seq_bounds(oplog_dir: str) -> dict[str, list]:
+    """{data file: [min op_seq, max op_seq]} for every feed file that
+    holds an op_seq, read on the driver (no Spark job) from footers by
+    the lake's one bounds reader, ``_file_key_bounds``.  A file whose
+    footer proves no bounds (written without statistics) falls back to
+    reading its op_seq column.  Lists the files Spark's file index
+    reads: ``_``/``.``-prefixed names (``_SUCCESS``, ``.crc``, temp
+    dirs) are skipped."""
+    import pyarrow.parquet as pq
+
+    from yadex_spark.lake.table import _file_key_bounds
+
+    out = {}
+    for root, dirs, names in os.walk(oplog_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for n in names:
+            if n.startswith(("_", ".")):
+                continue
+            p = os.path.join(root, n)
+            b = _file_key_bounds(p, "op_seq")
+            if b is None:
+                try:
+                    seqs = pq.read_table(p, columns=["op_seq"])["op_seq"].drop_null().to_pylist()
+                except (OSError, ValueError, KeyError):  # not a readable feed file
+                    continue
+                b = [min(seqs), max(seqs)] if seqs else []
+            if b:
+                out[p] = b
+    return out
+
+
+def feed_min_offset(oplog_dir: str) -> int | None:
+    """Oldest op_seq the feed can still serve (its 'oplog retention');
+    None for an empty or missing feed."""
+    return min((lo for lo, _ in feed_seq_bounds(oplog_dir).values()), default=None)
 
 
 def validate_retention(spark: SparkSession, lake_dir: str, oplog_dir: str) -> DataFrame:
     """Per table: can the stream resume, or is a re-clone needed?
     (bookmark purge semantics: a resume point older than the feed's
     oldest offset is unusable → full snapshot reload, bookmark.go:99-146)."""
-    fmin = feed_min_offset(spark, oplog_dir)
+    fmin = feed_min_offset(oplog_dir)
     rp = resume_points(spark, lake_dir)
     return rp.select(
         "table",

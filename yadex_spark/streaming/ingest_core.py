@@ -44,7 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from yadex_spark.lake.table import LakeTable
+from yadex_spark.lake.table import LakeTable, _publish_json
 
 #: feed schema: arrival order + document.  ingest_seq is the feed's
 #: UNIQUE arrival offset (the op_seq analogue of the CDC feed): the
@@ -59,14 +59,7 @@ def checkpoint_scope(checkpoint_dir: str) -> str:
     os.makedirs(checkpoint_dir, exist_ok=True)
     path = os.path.join(checkpoint_dir, "_yadex_scope.json")
     if not os.path.exists(path):
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"scope": uuid.uuid4().hex[:12]}, f)
-        try:
-            os.link(tmp, path)  # O_EXCL: one winner under races
-        except FileExistsError:
-            pass
-        os.unlink(tmp)
+        _publish_json(path, {"scope": uuid.uuid4().hex[:12]})
     with open(path) as f:
         return json.load(f)["scope"]
 

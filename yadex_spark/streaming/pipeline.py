@@ -117,7 +117,8 @@ class EpochRules:
     healthy predicate are built here; the route filter, expectations,
     DLQ reason and lineage stats once per routed table set
     (:meth:`routed`).  Only the RT-late and drop-barrier literals are
-    built per epoch.  ``run_with_reload`` builds a new pipeline when the
+    built per epoch, by :meth:`epoch`, the one place the epoch's live
+    filter is assembled.  ``run_with_reload`` builds a new pipeline when the
     config changes, so nothing here can go stale."""
 
     def __init__(self, expiry_ms: int | None):
@@ -168,6 +169,49 @@ class EpochRules:
                 dlq_reason=F.coalesce(self.reason, F.when(exp_fail, F.lit("expectation"))),
             )
         return self._memo[key]
+
+    def epoch(self, src: DataFrame, inv: list, routed: dict, watermarks: dict) -> SimpleNamespace:
+        """The epoch's ONE live filter over ``src``: route, health and
+        expectations (:meth:`routed`), RT expiry against ``watermarks``
+        (per-table op_ts high-watermarks), and each table's drop barrier,
+        the max ``drop`` position among the inventory rows ``inv`` (a
+        collection drop discards every earlier event of its table,
+        msync/input.go:113-123).  Late and expectation counts ride the
+        filter as an Observation when an RT window or an expectation
+        applies.  Builds the plan only: no job runs and nothing is
+        written.
+
+        Returns ``live`` (the surviving events), ``barriers`` ({table:
+        trunc_seq}, committed as truncates before the epoch's delta),
+        ``rules`` (:meth:`routed`), and ``late_obs``/``late_metrics``
+        (None and [] when nothing is counted)."""
+        rules = self.routed(routed)
+        barriers = {
+            r["table"]: r["bar"]
+            for r in inv
+            if r["bar"] is not None and r["table"] in routed
+        }
+        keep, batch, late_obs, late_metrics = rules.keep, src, None, []
+        if rules.windows or rules.expects:
+            late = F.lit(False)
+            if rules.windows:
+                for t, w in rules.windows.items():
+                    if t in watermarks:
+                        late = late | (
+                            (F.col("table") == t)
+                            & (F.col("op_ts") < F.lit(watermarks[t]) - F.expr(f"INTERVAL {w} MILLISECOND"))
+                        )
+                keep = keep & ~late
+            late_metrics = [
+                F.sum(F.when(late & (F.col("table") == t), 1).otherwise(0)).alias(f"late_{i}")
+                for i, t in enumerate(rules.names)
+            ] + [rules.nexp]
+            late_obs = Observation()
+            batch = src.where(rules.route).observe(late_obs, *late_metrics)
+        for t, bar in barriers.items():
+            keep = keep & ((F.col("table") != t) | (F.col(ORDER_COL) > F.lit(bar).cast("long")))
+        return SimpleNamespace(live=batch.where(keep), barriers=barriers, rules=rules,
+                               late_obs=late_obs, late_metrics=late_metrics)
 
 
 def read_lineage(spark: SparkSession, lake_dir: str) -> DataFrame:
@@ -280,14 +324,15 @@ class CdcPipeline:
             return files or None
         return None
 
-    def _epoch_frame(
-        self, spark: SparkSession, batch: DataFrame, epoch_id: int
-    ) -> tuple[DataFrame, DataFrame | None]:
+    def _epoch_frame(self, spark: SparkSession, batch: DataFrame, epoch_id: int) -> DataFrame:
+        """The epoch's events: a parquet scan of the files the source log
+        lists for it, or the foreachBatch frame itself when the log has
+        no entry for the epoch (an unknown source layout, or a static
+        frame handed to :meth:`apply_batch`)."""
         files = self._epoch_files(epoch_id)
         if files:
-            return spark.read.schema(oplog_read_schema(self.evolved)).parquet(*files), None
-        cached = batch.persist()  # fallback: unknown source layout
-        return cached, cached
+            return spark.read.schema(oplog_read_schema(self.evolved)).parquet(*files)
+        return batch
 
     # ---------- exactly-once identity ----------
 
@@ -313,12 +358,8 @@ class CdcPipeline:
             # committed manifests already reference.
             return
         spark = batch.sparkSession
-        src, cached = self._epoch_frame(spark, batch, epoch_id)
-        try:
-            self._apply(spark, namespace_filter(src), epoch_id, t0)
-        finally:
-            if cached is not None:
-                cached.unpersist()
+        self._apply(spark, namespace_filter(self._epoch_frame(spark, batch, epoch_id)),
+                    epoch_id, t0)
 
     @cached_property
     def rules(self) -> EpochRules:
@@ -332,46 +373,21 @@ class CdcPipeline:
         }
         if not routed:
             return
-        rules = self.rules.routed(routed)
-        barriers = {
-            r["table"]: r["bar"]
-            for r in inv
-            if r["bar"] is not None and r["table"] in routed
-        }
+        wms = {}
+        if self.rules.routed(routed).windows:
+            # per-pattern RT expiry against per-table persistent watermarks
+            wms = self._advance_watermarks(
+                {r["table"]: r["max_ts"] for r in inv if r["max_ts"] is not None}
+            )
 
         # PASS 2 — the ONLY full-width pass: ONE filter (route, health,
         # expectations, RT expiry, drop barriers) → collapse → staged
         # write, with per-table lineage stats riding the same job as
         # Observation metrics (no extra aggregation jobs)
-        keep, batch, late_obs = rules.keep, src, None
-        if rules.windows or rules.expects:
-            late = F.lit(False)
-            if rules.windows:
-                # per-pattern RT expiry against per-table persistent watermarks
-                wms = self._advance_watermarks(
-                    {r["table"]: r["max_ts"] for r in inv if r["max_ts"] is not None}
-                )
-                for t, w in rules.windows.items():
-                    if t in wms:
-                        late = late | (
-                            (F.col("table") == t)
-                            & (F.col("op_ts") < F.lit(wms[t]) - F.expr(f"INTERVAL {w} MILLISECOND"))
-                        )
-                keep = keep & ~late
-            # late and expectation counts ride the write job; an epoch
-            # with neither has none to count
-            late_metrics = [
-                F.sum(F.when(late & (F.col("table") == t), 1).otherwise(0)).alias(f"late_{i}")
-                for i, t in enumerate(rules.names)
-            ] + [rules.nexp]
-            late_obs = Observation()
-            batch = src.where(rules.route).observe(late_obs, *late_metrics)
-        for t, bar in barriers.items():
-            keep = keep & ((F.col("table") != t) | (F.col(ORDER_COL) > F.lit(bar).cast("long")))
-        live = batch.where(keep)
-
+        ep = self.rules.epoch(src, inv, routed, wms)
+        rules, barriers = ep.rules, ep.barriers
         est_keys = sum(r["nkeys"] or 0 for r in inv if r["table"] in routed)
-        collapsed = collapse(live, broadcast_winners=est_keys <= self.broadcast_keys_max)
+        collapsed = collapse(ep.live, broadcast_winners=est_keys <= self.broadcast_keys_max)
         stats_obs = Observation()
         stored = prepare_delta(collapsed.observe(stats_obs, *rules.stats), keep_table=True)
         # scope-namespaced AND attempt-unique: a fresh checkpoint over an
@@ -390,7 +406,7 @@ class CdcPipeline:
         stored.write.mode("overwrite").partitionBy("table").parquet(staging)
 
         try:
-            lates = late_obs.get if late_obs else {}
+            lates = ep.late_obs.get if ep.late_obs else {}
             st = stats_obs.get
         except Exception:
             # When the epoch collapses to ZERO live rows (all events
@@ -400,7 +416,8 @@ class CdcPipeline:
             # an empty-row assertion.  Recompute the same metrics with
             # explicit aggregations on the pre-observe handles (tiny
             # narrow jobs; this path is rare by construction).
-            lates = src.where(rules.route).agg(*late_metrics).first().asDict() if late_obs else {}
+            lates = (src.where(rules.route).agg(*ep.late_metrics).first().asDict()
+                     if ep.late_obs else {})
             st = collapsed.agg(*rules.stats).first().asDict()
         scope = self._scope()
         # ONE timestamp per epoch: rolling_events_per_sec groups lineage
@@ -670,43 +687,16 @@ class CdcPipeline:
 
     def lag(self) -> dict:
         """Replication lag in EVENTS — feed head ``op_seq`` minus this
-        checkpoint's applied head — from driver-side parquet footers and
+        checkpoint's applied head — from driver-side parquet footers
+        (:func:`~yadex_spark.streaming.bookmarks.feed_seq_bounds`) and
         lineage JSON only (no Spark job: the monitor must stay cheap
         enough for a tight poll loop; the reference's debug view polls
         the same way, msync/debug.go:37).  Keys: ``feed_head``,
         ``applied_head``, ``lag_events`` (None where unknowable — empty
         feed / nothing applied yet)."""
-        import pyarrow.parquet as pq
+        from yadex_spark.streaming.bookmarks import feed_seq_bounds
 
-        feed_head = None
-        for root, _, names in os.walk(self.oplog_dir):
-            for n in names:
-                if not n.endswith(".parquet"):
-                    continue
-                p = os.path.join(root, n)
-                try:
-                    md = pq.ParquetFile(p).metadata
-                    mx = None
-                    for rg in range(md.num_row_groups):
-                        for i in range(md.num_columns):
-                            col = md.row_group(rg).column(i)
-                            if col.path_in_schema != "op_seq":
-                                continue
-                            st = col.statistics
-                            if st is None or not st.has_min_max:
-                                raise ValueError("no stats")
-                            mx = st.max if mx is None else max(mx, st.max)
-                    if mx is None and md.num_rows:
-                        raise ValueError("no op_seq stats")
-                except Exception:
-                    # rare fallback: single-file column read, still driver-side
-                    try:
-                        arr = pq.read_table(p, columns=["op_seq"])["op_seq"]
-                        mx = max(x for x in arr.to_pylist() if x is not None) if len(arr) else None
-                    except Exception:
-                        continue
-                if mx is not None:
-                    feed_head = mx if feed_head is None else max(feed_head, mx)
+        feed_head = max((hi for _, hi in feed_seq_bounds(self.oplog_dir).values()), default=None)
         applied = None
         lin_dir = os.path.join(self.lake_dir, "_lineage")
         scope = self._scope()
@@ -730,9 +720,9 @@ class CdcPipeline:
         return {"feed_head": feed_head, "applied_head": applied, "lag_events": lag}
 
     def fsck(self, verify_rows: bool = True, repair: bool = False) -> dict:
-        """Run :meth:`LakeTable.fsck` for every routed table plus a
-        staging-orphan report (``vacuum_staging`` owns removal there).
-        Returns {table: report}."""
+        """Run :meth:`LakeTable.fsck` for every routed table.  Returns
+        {table: report}.  Superseded staging attempt dirs are not
+        reported here; :meth:`vacuum_staging` removes them."""
         return {name: self.table(name).fsck(verify_rows, repair) for name in self.tables()}
 
     def schema_history(self) -> dict:
@@ -891,8 +881,8 @@ class CdcPipeline:
         below it can never be contradicted by a late arrival and are
         garbage-collected (without it, state size grows unboundedly with
         cumulative deletes at the 10^10-event design point).  "auto"
-        reads it from the feed (bookmarks.feed_min_offset); None keeps
-        every tombstone.
+        reads it from the feed's footers (bookmarks.feed_min_offset, no
+        Spark job); None keeps every tombstone.
 
         ``cluster_by``: Z-order every table's rewritten base on these
         columns (``LakeTable.compact(cluster_by=...)``, lake/zorder.py)
@@ -904,7 +894,7 @@ class CdcPipeline:
         t0 = time.monotonic()
         with self._maintenance_lease():
             if min_live_seq == "auto":
-                min_live_seq = feed_min_offset(self.spark, self.oplog_dir)
+                min_live_seq = feed_min_offset(self.oplog_dir)
             report = self._maintain_tables(
                 "compacted_version", vacuum, retain_last,
                 lambda tbl: tbl.compact(min_live_seq=min_live_seq, cluster_by=cluster_by),
