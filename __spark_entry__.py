@@ -55,7 +55,7 @@ def q_cdc_lww_collapse(spark, sf):
     # no broadcast hint: at 100× the winner set is every distinct key —
     # an unconditional hint is OOM-by-construction.  AQE picks broadcast
     # from the RUNTIME size of the aggregate (small here), which is the
-    # same key-count gating the engine does via broadcast_keys_max.
+    # same key-count gating the engine does via BROADCAST_KEYS_MAX.
     return (
         e.join(w, "user_id")
         .where(F.col("event_id") == F.col("last_event_id"))

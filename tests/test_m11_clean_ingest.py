@@ -9,7 +9,6 @@ the scrub-before-dedup ordering pin."""
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -119,7 +118,7 @@ def test_scrub_runs_before_dedup_and_registry_stores_redacted_text(spark, tmp_pa
         assert "@example.com" not in text and "10.0.0.1" not in text
 
 
-def test_crash_replay_does_not_double_accept(spark, tmp_path, feed):
+def test_crash_replay_does_not_double_accept(spark, tmp_path, feed, forget_commits, applied_epochs):
     docs, path, bench_dir = feed
     ckpt = str(tmp_path / "ckpt")
     ing = CleanIngest(
@@ -130,21 +129,14 @@ def test_crash_replay_does_not_double_accept(spark, tmp_path, feed):
     n_versions = ing.seen.latest_version()
     want = {(r["doc_id"], r["ingest_seq"]) for r in ing.accepted().collect()}
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # crash between lake commit and checkpoint commit
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(ckpt)  # crash between lake commit and checkpoint commit
     ing2 = CleanIngest(
         spark, path, str(tmp_path / "lake"), ckpt,
         max_files_per_trigger=1, bench_dir=bench_dir, **PARAMS,
     )
+    replayed = applied_epochs(ing2)
     ing2.run_available_now()
+    assert last in replayed  # the forgotten epoch re-entered apply_batch
     assert ing2.seen.latest_version() == n_versions  # replay no-ops by batch id
     got = {(r["doc_id"], r["ingest_seq"]) for r in ing2.accepted().collect()}
     assert got == want

@@ -10,7 +10,6 @@ ids).
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -112,7 +111,7 @@ def test_streamed_model_and_weights_match_batch(spark, tmp_path, feed):
     assert {r["b"]: r["c_r"] for r in ing.raw_model().collect()} == want_model
 
 
-def test_crash_replay_does_not_double_add(spark, tmp_path, feed):
+def test_crash_replay_does_not_double_add(spark, tmp_path, feed, forget_commits, applied_epochs):
     docs, path = feed
     ckpt = str(tmp_path / "ckpt")
     ing = DsirIngest(spark, path, str(tmp_path / "lake"), ckpt,
@@ -121,19 +120,12 @@ def test_crash_replay_does_not_double_add(spark, tmp_path, feed):
     n_versions = ing.seen.latest_version()
     want = _batch_weights(spark, docs)
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # crash between partial commit and checkpoint commit
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(ckpt)  # crash between partial commit and checkpoint commit
     ing2 = DsirIngest(spark, path, str(tmp_path / "lake"), ckpt,
                       max_files_per_trigger=1, n_buckets=B)
+    replayed = applied_epochs(ing2)
     ing2.run_available_now()
+    assert last in replayed  # the forgotten epoch re-entered apply_batch
     assert ing2.seen.latest_version() == n_versions  # replay no-oped by batch id
     got = {
         r["doc_id"]: (r["n_feats"], r["weight_bp"], r["keep"])

@@ -99,7 +99,8 @@ def test_resume_from_checkpoint(spark, tmp_path):
     assert len(ids) == len(set(ids))
 
 
-def test_crash_replay_is_exactly_once(spark, tmp_path, feed):
+def test_crash_replay_is_exactly_once(spark, tmp_path, feed, forget_commits,
+                                     applied_epochs):
     """Simulate dying after the lake commit but before the streaming
     commit log records the epoch: remove the last checkpoint commit
     file and rerun.  The epoch replays; the lake must not double-apply."""
@@ -108,17 +109,12 @@ def test_crash_replay_is_exactly_once(spark, tmp_path, feed):
     pipe.run_available_now()
     versions_before = pipe.table("seqs").latest_version()
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(str(tmp_path / "ckpt"), "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # forget the last epoch's commit → replay it
-    crc = os.path.join(os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(str(tmp_path / "ckpt"))  # forget the last epoch's commit → replay it
 
     pipe2 = _pipe(spark, tmp_path, path)
+    replayed = applied_epochs(pipe2)
     pipe2.run_available_now()
+    assert replayed == [last]
     assert pipe2.table("seqs").latest_version() == versions_before  # no new snapshot
     actual = pipe2.table("seqs").read()
     assert_equal_state(_expected(spark, oplog), actual)
@@ -159,7 +155,8 @@ def _committed_files(pipe, tables=("seqs",)) -> dict[str, list[str]]:
     return out
 
 
-def test_replay_never_touches_committed_staging(spark, tmp_path, feed):
+def test_replay_never_touches_committed_staging(spark, tmp_path, feed, forget_commits,
+                                               applied_epochs):
     """The round-2 crash-consistency hole: a replayed epoch must NEVER
     rewrite a staging directory a committed manifest references (a crash
     mid-rewrite would leave committed manifests at missing/partial
@@ -173,19 +170,11 @@ def test_replay_never_touches_committed_staging(spark, tmp_path, feed):
     before = _committed_files(pipe)
     assert before  # staged dirs are committed and on disk
 
-    ckpt = str(tmp_path / "ckpt")
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
+    # last epoch that actually applied data (an epoch with no routed
+    # rows writes no lineage marker)
+    last_epoch = forget_commits(
+        str(tmp_path / "ckpt"), lambda e: os.path.exists(pipe._lineage_path(e))
     )
-    # last epoch that actually applied data (AvailableNow may commit a
-    # trailing empty epoch, which writes no lineage marker)
-    applied = [
-        c for c in commits if os.path.exists(pipe._lineage_path(int(os.path.basename(c))))
-    ]
-    last_epoch = int(os.path.basename(applied[-1]))
-    for c in commits[commits.index(applied[-1]):]:
-        os.remove(c)
     # lineage marker gone too -> the replay cannot take the skip path
     os.remove(pipe._lineage_path(last_epoch))
     # a crashed attempt left partial garbage in staging
@@ -197,7 +186,10 @@ def test_replay_never_touches_committed_staging(spark, tmp_path, feed):
         f.write("partial")
 
     pipe2 = _pipe(spark, tmp_path, path)
+    replayed = applied_epochs(pipe2)
     pipe2.run_available_now()
+    assert last_epoch in replayed
+    assert os.path.exists(pipe2._lineage_path(last_epoch))  # re-applied for real
     after = _committed_files(pipe2)
     for d, files in before.items():
         assert os.path.isdir(d), f"committed dir deleted by replay: {d}"
@@ -216,7 +208,8 @@ def test_replay_never_touches_committed_staging(spark, tmp_path, feed):
     assert_equal_state(_expected(spark, oplog), pipe2.table("seqs").read())
 
 
-def test_fully_applied_replay_skips_work(spark, tmp_path, feed):
+def test_fully_applied_replay_skips_work(spark, tmp_path, feed, forget_commits,
+                                        applied_epochs):
     """Crash between the lineage write (the epoch's last step) and the
     checkpoint commit: the replayed epoch must take the marker short-cut
     — zero Spark work, no new attempt dir, state unchanged."""
@@ -225,26 +218,20 @@ def test_fully_applied_replay_skips_work(spark, tmp_path, feed):
     pipe.run_available_now()
     versions_before = pipe.table("seqs").latest_version()
 
-    ckpt = str(tmp_path / "ckpt")
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
+    # forget the commit of the last epoch that applied data (an epoch
+    # with no routed rows carries no marker — not the replay under test)
+    last_epoch = forget_commits(
+        str(tmp_path / "ckpt"), lambda e: os.path.exists(pipe._lineage_path(e))
     )
-    # forget the commit of the last epoch that applied data (trailing
-    # empty AvailableNow epochs carry no marker — not the replay under test)
-    with_marker = [
-        c for c in commits if os.path.exists(pipe._lineage_path(int(os.path.basename(c))))
-    ]
-    last_epoch = int(os.path.basename(with_marker[-1]))
-    for c in commits[commits.index(with_marker[-1]):]:
-        os.remove(c)
 
     pipe2 = _pipe(spark, tmp_path, path)
+    replayed = applied_epochs(pipe2)
     replayed_epochs = []
     orig = pipe2._apply
     pipe2._apply = lambda spark_, src, eid, t0: (replayed_epochs.append(eid), orig(spark_, src, eid, t0))
     pipe2.run_available_now()
-    assert last_epoch not in replayed_epochs  # marker short-circuited it
+    assert last_epoch in replayed  # the epoch re-entered apply_batch...
+    assert last_epoch not in replayed_epochs  # ...and the marker short-circuited it
     assert pipe2.table("seqs").latest_version() == versions_before
     assert_equal_state(_expected(spark, oplog), pipe2.table("seqs").read())
 
@@ -447,9 +434,7 @@ def test_chunked_feed_files_are_timed_in_seq_order(spark, tmp_path):
     write_oplog_chunks(oplog, path, n_chunks=3, bounds=(0, 3_999))
 
     def by_mtime():
-        # empty partition files carry no events, so no epoch depends on them
-        files = [os.path.join(path, f) for f in os.listdir(path)
-                 if f.endswith(".parquet") and pq.ParquetFile(os.path.join(path, f)).metadata.num_rows]
+        files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
         return sorted(files, key=lambda f: os.stat(f).st_mtime_ns)
 
     files = by_mtime()
@@ -464,6 +449,28 @@ def test_chunked_feed_files_are_timed_in_seq_order(spark, tmp_path):
     assert secs[-1] < time.time()
     oplog.where("op_seq >= 3900").coalesce(1).write.mode("append").parquet(path)
     assert by_mtime()[: len(files)] == files
+
+
+def test_chunked_feed_has_no_zero_row_files(spark, tmp_path, applied_epochs):
+    """write_oplog_chunks leaves no zero-row file, which would drain as
+    one more (empty) epoch: every file of a 4-partition, 3-chunk feed
+    holds rows, and a one-file-per-trigger drain runs exactly one epoch
+    per file, each of which applies data."""
+    import pyarrow.parquet as pq
+
+    oplog = gen_oplog(spark, 4_000, 500, seed=5, num_partitions=4)
+    path = str(tmp_path / "oplog")
+    write_oplog_chunks(oplog, path, n_chunks=3, bounds=(0, 3_999))
+    files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(files) > 3  # several files per chunk
+    assert all(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+    pipe = _pipe(spark, tmp_path, path)
+    epochs = applied_epochs(pipe)
+    pipe.run_available_now()
+    assert epochs == list(range(len(files)))
+    assert all(os.path.exists(pipe._lineage_path(e)) for e in epochs)
+    assert_equal_state(_expected(spark, oplog), pipe.table("seqs").read())
 
 
 def test_apply_batch_on_static_frame_without_source_log(spark, tmp_path):

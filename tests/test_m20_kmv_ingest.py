@@ -9,7 +9,6 @@ since min-k of a multiset ignores multiplicity.
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -91,7 +90,7 @@ def test_streamed_kmv_matches_batch_distinct(spark, tmp_path, feed):
     assert {r["source"]: r.asDict() for r in ing.distinct().collect()} == want
 
 
-def test_crash_replay_and_forced_double_commit_are_invisible(spark, tmp_path, feed):
+def test_crash_replay_and_forced_double_commit_are_invisible(spark, tmp_path, feed, forget_commits, applied_epochs):
     docs, path = feed
     ckpt = str(tmp_path / "ckpt")
     ing = KmvIngest(spark, path, str(tmp_path / "lake"), ckpt,
@@ -100,19 +99,12 @@ def test_crash_replay_and_forced_double_commit_are_invisible(spark, tmp_path, fe
     want = _want(docs)
     n_versions = ing.seen.latest_version()
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # crash between state commit and checkpoint commit
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(ckpt)  # crash between state commit and checkpoint commit
     ing2 = KmvIngest(spark, path, str(tmp_path / "lake"), ckpt,
                      max_files_per_trigger=1)
+    replayed = applied_epochs(ing2)
     ing2.run_available_now()
+    assert last in replayed  # the forgotten epoch re-entered apply_batch
     assert ing2.seen.latest_version() == n_versions  # replay no-oped by batch id
     assert {r["source"]: r.asDict() for r in ing2.distinct().collect()} == want
 

@@ -115,3 +115,49 @@ def test_checkpoint_scope_race_has_one_winner(tmp_path):
             assert errors == [] and len(scopes) == n and len(set(scopes)) == 1
     finally:
         sys.setswitchinterval(old_switch)
+
+
+def test_watermark_race_never_raises(tmp_path):
+    """Threads of one process advancing one lake's ``_watermarks.json``
+    at once (two pipelines in one driver) never fail: each replace goes
+    through a per-thread tmp file, so no thread can publish or lose
+    another's.  Every thread gets back its own table's watermark, the
+    file stays valid JSON and no tmp file is left behind."""
+    import json
+    import os
+    import sys
+    import threading
+
+    from yadex_spark.streaming.pipeline import CdcPipeline
+
+    n = 8
+    old_switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for r in range(6):
+            lake = str(tmp_path / f"lake{r}")
+            pipe = CdcPipeline(None, str(tmp_path / "feed"), lake, str(tmp_path / "ckpt"))
+            start = threading.Barrier(n)
+            got: dict[int, dict] = {}
+            errors: list[str] = []
+
+            def advance(i):
+                start.wait(timeout=30)
+                try:
+                    got[i] = pipe._advance_watermarks({f"t{i}": TS + datetime.timedelta(seconds=i)})
+                except Exception as ex:  # noqa: BLE001 - the law is "none raises"
+                    errors.append(repr(ex))
+
+            threads = [threading.Thread(target=advance, args=(i,)) for i in range(n)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=30)
+                assert not t.is_alive()
+            assert errors == []
+            assert all(got[i][f"t{i}"] == TS + datetime.timedelta(seconds=i) for i in range(n))
+            assert os.listdir(lake) == ["_watermarks.json"]
+            with open(os.path.join(lake, "_watermarks.json")) as f:
+                assert json.load(f)
+    finally:
+        sys.setswitchinterval(old_switch)

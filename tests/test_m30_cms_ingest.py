@@ -11,7 +11,6 @@ is exactly why the scoped batch id is load-bearing here.
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -91,7 +90,7 @@ def test_streamed_sketch_matches_batch_and_estimates_bound(spark, tmp_path, feed
     assert sorted(map(tuple, ing.sketch().collect())) == want
 
 
-def test_crash_replay_noops_but_forced_double_commit_inflates(spark, tmp_path, feed):
+def test_crash_replay_noops_but_forced_double_commit_inflates(spark, tmp_path, feed, forget_commits, applied_epochs):
     docs, path = feed
     ckpt = str(tmp_path / "ckpt")
     ing = CmsIngest(spark, path, str(tmp_path / "lake"), ckpt,
@@ -100,19 +99,12 @@ def test_crash_replay_noops_but_forced_double_commit_inflates(spark, tmp_path, f
     want = sorted(map(tuple, ing.sketch().collect()))
     n_versions = ing.seen.latest_version()
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # crash between state commit and checkpoint commit
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(ckpt)  # crash between state commit and checkpoint commit
     ing2 = CmsIngest(spark, path, str(tmp_path / "lake"), ckpt,
                      max_files_per_trigger=1)
+    replayed = applied_epochs(ing2)
     ing2.run_available_now()
+    assert last in replayed  # the forgotten epoch re-entered apply_batch
     assert ing2.seen.latest_version() == n_versions  # replay no-oped by batch id
     assert sorted(map(tuple, ing2.sketch().collect())) == want
 

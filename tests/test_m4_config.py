@@ -146,3 +146,125 @@ def test_reload_loop_minicompact_cadence(spark, tmp_path, monkeypatch):
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
     assert_equal_state(expected, tbl.read())
+
+
+def test_idle_rounds_run_no_maintenance(spark, tmp_path, monkeypatch):
+    """compact_every counts committed epochs, not rounds: over a feed
+    written once, three rounds with compact_every=1 compact once — the
+    later rounds commit no epoch, so there is nothing to maintain."""
+    oplog = gen_oplog(spark, 2_000, 400, seed=29)
+    feed = str(tmp_path / "oplog")
+    write_oplog_chunks(oplog, feed, n_chunks=2)
+    cfg_path = str(tmp_path / "cfg.json")
+    _write_cfg(cfg_path, patterns=[{"regex": "seqs"}], delay_ms=10, compact_every=1)
+    monkeypatch.setattr(cfgmod, "_sleep_between_rounds", lambda _cfg: None)
+    assert run_with_reload(
+        spark, cfg_path, feed, str(tmp_path / "lake"), str(tmp_path / "ckpt"),
+        max_rounds=3,
+    ) == 3
+
+    from yadex_spark.streaming.pipeline import CdcPipeline
+
+    tbl = CdcPipeline(spark, feed, str(tmp_path / "lake"), str(tmp_path / "ckpt")).table("seqs")
+    assert [s.action for s in tbl.snapshots()].count("compact") == 1
+    expected = spark.createDataFrame(
+        state_to_pdf(replay(oplog.toPandas()), "seqs"),
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    assert_equal_state(expected, tbl.read())
+
+
+def test_cadence_survives_commit_log_purge(spark, tmp_path, monkeypatch):
+    """Spark purges old commit files (minBatchesToRetain), so the
+    cadence reads the max committed batch id, not a file count: two
+    rounds of 3 epochs each with compact_every=3 run one full
+    maintenance per round, although the commit log keeps fewer files
+    than there are epochs."""
+    import os
+
+    from yadex_spark.streaming.bookmarks import checkpoint_epochs
+    from yadex_spark.streaming.pipeline import CdcPipeline
+
+    n1, n2 = 3_000, 6_000
+    oplog = gen_oplog(spark, n2, 800, seed=31, num_partitions=3)
+    feed, ckpt = str(tmp_path / "oplog"), str(tmp_path / "ckpt")
+    write_oplog_chunks(oplog.where(F.col("op_seq") < n1), feed, n_chunks=3, bounds=(0, n1 - 1))
+    cfg_path = str(tmp_path / "cfg.json")
+    _write_cfg(cfg_path, patterns=[{"regex": "seqs"}], delay_ms=10, compact_every=3,
+               max_files_per_trigger=1)
+
+    calls: list[str] = []
+    after_round1: list[list[str]] = []
+
+    def spy(name):
+        run = getattr(CdcPipeline, name)
+
+        def counted(self, *a, **k):
+            calls.append(name)
+            return run(self, *a, **k)
+
+        monkeypatch.setattr(CdcPipeline, name, counted)
+
+    spy("maintain")
+    spy("maintain_minor")
+
+    def between_rounds(_cfg):
+        after_round1.append(list(calls))
+        for lo in range(n1, n2, 1_000):  # three more files, one epoch each
+            oplog.where((F.col("op_seq") >= lo) & (F.col("op_seq") < lo + 1_000)) \
+                .coalesce(1).write.mode("append").parquet(feed)
+
+    monkeypatch.setattr(cfgmod, "_sleep_between_rounds", between_rounds)
+    key = "spark.sql.streaming.minBatchesToRetain"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        run_with_reload(spark, cfg_path, feed, str(tmp_path / "lake"), ckpt, max_rounds=2)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+    assert after_round1 == [["maintain"]] and calls == ["maintain", "maintain"]
+    assert checkpoint_epochs(ckpt)[1] == 5  # six epochs, 0..5
+    assert len([f for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit()]) < 6
+    expected = spark.createDataFrame(
+        state_to_pdf(replay(oplog.toPandas()), "seqs"),
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    )
+    pipe = CdcPipeline(spark, feed, str(tmp_path / "lake"), ckpt)
+    assert_equal_state(expected, pipe.table("seqs").read())
+
+
+def _windows(router):
+    """{table: (tier, expiry window)} for a few names, None = not synced."""
+    names = ("rt_a", "rt_tmp", "seqs", "tmp", "tmpseqs", "other")
+    return {n: (p.tier, p.expires_ms) if (p := router.classify(n)) else None for n in names}
+
+
+def test_flags_and_config_file_route_alike(tmp_path):
+    """The command line's pattern flags go through the config parser:
+    each flag set routes every table to the tier and RT window that the
+    equivalent config file gives."""
+    from yadex_spark.main import build_parser, flag_config
+
+    base = ["--oplog", "f", "--lake", "l", "--checkpoint", "c"]
+    p = str(tmp_path / "cfg.json")
+    cases = [
+        (["--rt-pattern", "rt_.*", "--pattern", "seqs", "--exclude", "tmp",
+          "--expires-ms", "7000"],
+         dict(rt_patterns=[{"regex": "rt_.*", "exclude": ["tmp"], "expires_ms": 7000}],
+              patterns=[{"regex": "seqs", "exclude": ["tmp"]}])),
+        # --expires-ms alone: every --pattern (default: all) is RT
+        (["--expires-ms", "7000"],
+         dict(rt_patterns=[{"regex": ".*", "expires_ms": 7000}])),
+        # --rt-pattern alone: the config's default window; the rest ST
+        (["--rt-pattern", "rt_.*"],
+         dict(rt_patterns=[{"regex": "rt_.*"}], patterns=[{"regex": ".*"}])),
+    ]
+    for flags, raw in cases:
+        _write_cfg(p, **raw)
+        from_flags = cfgmod.parse_config(flag_config(build_parser().parse_args(base + flags)))
+        assert _windows(from_flags.router()) == _windows(load_config(p).router()), flags
+    assert _windows(from_flags.router())["rt_a"] == ("RT", cfgmod.DEFAULT_EXPIRES_MS)

@@ -9,7 +9,6 @@ double-accept (the same exactly-once bar as the CDC engine,
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -91,7 +90,7 @@ def test_streamed_dedup_matches_global_oracle(spark, tmp_path, feed):
     } == want
 
 
-def test_crash_replay_does_not_double_accept(spark, tmp_path, feed):
+def test_crash_replay_does_not_double_accept(spark, tmp_path, feed, forget_commits, applied_epochs):
     docs, path = feed
     ckpt = str(tmp_path / "ckpt")
     ing = DedupIngest(spark, path, str(tmp_path / "lake"), ckpt,
@@ -99,19 +98,12 @@ def test_crash_replay_does_not_double_accept(spark, tmp_path, feed):
     ing.run_available_now()
     n_versions = ing.seen.latest_version()
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # crash between lake commit and checkpoint commit
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(ckpt)  # crash between lake commit and checkpoint commit
     ing2 = DedupIngest(spark, path, str(tmp_path / "lake"), ckpt,
                        max_files_per_trigger=1)
+    replayed = applied_epochs(ing2)
     ing2.run_available_now()
+    assert last in replayed  # the forgotten epoch re-entered apply_batch
     assert ing2.seen.latest_version() == n_versions  # no double-commit
     got = {(r["doc_id"], r["ingest_seq"]) for r in ing2.accepted().collect()}
     assert got == _want(docs)

@@ -10,7 +10,6 @@ offline dedup provably agree).
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -123,7 +122,7 @@ def test_streamed_neardup_matches_greedy_oracle(spark, tmp_path, feed):
     assert ing.seen.read_keys().count() == n_bands
 
 
-def test_neardup_crash_replay_is_stable(spark, tmp_path, feed):
+def test_neardup_crash_replay_is_stable(spark, tmp_path, feed, forget_commits, applied_epochs):
     docs, path = feed
     ckpt = str(tmp_path / "ckpt")
     ing = NearDupIngest(spark, path, str(tmp_path / "lake"), ckpt,
@@ -132,19 +131,12 @@ def test_neardup_crash_replay_is_stable(spark, tmp_path, feed):
     n_seen, n_acc = ing.seen.latest_version(), ing.accepted_table.latest_version()
     got = {r["ingest_seq"] for r in ing.accepted().collect()}
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # crash between lake commit and checkpoint commit
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(ckpt)  # crash between lake commit and checkpoint commit
     ing2 = NearDupIngest(spark, path, str(tmp_path / "lake"), ckpt,
                          max_files_per_trigger=1)
+    replayed = applied_epochs(ing2)
     ing2.run_available_now()
+    assert last in replayed  # the forgotten epoch re-entered apply_batch
     assert ing2.seen.latest_version() == n_seen        # no double-register
     assert ing2.accepted_table.latest_version() == n_acc  # no double-accept
     assert {r["ingest_seq"] for r in ing2.accepted().collect()} == got

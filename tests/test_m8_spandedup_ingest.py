@@ -9,7 +9,6 @@ crash-replay stable, and never shuffle the chunk registry.
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -113,7 +112,7 @@ def test_streamed_span_dedup_equals_batch(spark, tmp_path, feed):
     assert ing.seen.read_keys().count() == n_reg
 
 
-def test_span_crash_replay_is_stable(spark, tmp_path, feed):
+def test_span_crash_replay_is_stable(spark, tmp_path, feed, forget_commits, applied_epochs):
     docs, path = feed
     ckpt = str(tmp_path / "ckpt")
     ing = SpanDedupIngest(spark, path, str(tmp_path / "lake"), ckpt,
@@ -122,19 +121,12 @@ def test_span_crash_replay_is_stable(spark, tmp_path, feed):
     n_seen, n_out = ing.seen.latest_version(), ing.accepted_table.latest_version()
     got = {r["ingest_seq"]: r["clean_text"] for r in ing.cleaned().collect()}
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # crash between lake commit and checkpoint commit
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(ckpt)  # crash between lake commit and checkpoint commit
     ing2 = SpanDedupIngest(spark, path, str(tmp_path / "lake"), ckpt,
                            max_files_per_trigger=1, p=P, min_words=MINW)
+    replayed = applied_epochs(ing2)
     ing2.run_available_now()
+    assert last in replayed  # the forgotten epoch re-entered apply_batch
     assert ing2.seen.latest_version() == n_seen           # no double-register
     assert ing2.accepted_table.latest_version() == n_out  # no double-commit
     assert {r["ingest_seq"]: r["clean_text"] for r in ing2.cleaned().collect()} == got

@@ -8,7 +8,6 @@ per-epoch partials keyed by (epoch, source) + scoped batch ids).
 
 from __future__ import annotations
 
-import glob
 import os
 import time
 
@@ -84,7 +83,7 @@ def test_streamed_stats_match_batch_corpus_stats(spark, tmp_path, feed):
     assert {r["source"]: r.asDict() for r in ing.stats().collect()} == want
 
 
-def test_crash_replay_does_not_double_count(spark, tmp_path, feed):
+def test_crash_replay_does_not_double_count(spark, tmp_path, feed, forget_commits, applied_epochs):
     docs, path = feed
     ckpt = str(tmp_path / "ckpt")
     ing = StatsIngest(spark, path, str(tmp_path / "lake"), ckpt,
@@ -92,18 +91,11 @@ def test_crash_replay_does_not_double_count(spark, tmp_path, feed):
     ing.run_available_now()
     n_versions = ing.seen.latest_version()
 
-    commits = sorted(
-        f for f in glob.glob(os.path.join(ckpt, "commits", "*"))
-        if not f.endswith(".tmp") and not os.path.basename(f).startswith(".")
-    )
-    os.remove(commits[-1])  # crash between partial commit and checkpoint commit
-    crc = os.path.join(
-        os.path.dirname(commits[-1]), f".{os.path.basename(commits[-1])}.crc"
-    )
-    if os.path.exists(crc):
-        os.remove(crc)
+    last = forget_commits(ckpt)  # crash between partial commit and checkpoint commit
     ing2 = StatsIngest(spark, path, str(tmp_path / "lake"), ckpt,
                        max_files_per_trigger=1)
+    replayed = applied_epochs(ing2)
     ing2.run_available_now()
+    assert last in replayed  # the forgotten epoch re-entered apply_batch
     assert ing2.seen.latest_version() == n_versions  # replay no-oped by batch id
     assert {r["source"]: r.asDict() for r in ing2.stats().collect()} == _want(docs)

@@ -1,4 +1,4 @@
-"""Config file + hot-reload loop (SURVEY.md M4).
+"""Config model + the one drain loop (SURVEY.md M4).
 
 The reference watches its YAML config with fsnotify (+ SIGHUP) and, on
 change, stops every config-dependent object, recreates them, and reruns
@@ -7,7 +7,9 @@ The Spark analogue: the driver polls the config file between drain
 rounds (and accepts SIGHUP to force a re-read), and on change rebuilds
 the Router/CdcPipeline against the SAME checkpoint — Structured
 Streaming's offset log plus the lake's idempotent batch ids make the
-recreate-and-rerun safe (no replayed epoch can double-apply).
+recreate-and-rerun safe (no replayed epoch can double-apply).  The
+command line's pattern flags are turned into the same config dict and
+run through the same loop with a fixed config (no watcher).
 
 Config format (JSON; the reference's config.DataSync knobs that the
 engine consumes — /root/reference/config/config.go:19,26-54):
@@ -18,6 +20,12 @@ engine consumes — /root/reference/config/config.go:19,26-54):
      "compact_every": 16,
      "minicompact_every": 4,
      "delay_ms": 1000}
+
+``compact_every``/``minicompact_every`` count committed epochs, read
+from the checkpoint (0 = never): after a drain round the full tier runs
+if the count crossed a multiple of ``compact_every`` during the round,
+otherwise the minor tier if it crossed one of ``minicompact_every``.
+An idle round commits nothing and so runs no maintenance.
 
 Default-filling and constraint repair mirror config.go:100-112 /
 config_test.go:15-146: missing expires_ms on an RT pattern gets the
@@ -34,6 +42,7 @@ import time
 from dataclasses import dataclass, field
 
 from yadex_spark.operators.route import RT, ST, RoutePattern, Router
+from yadex_spark.streaming.bookmarks import checkpoint_epochs
 
 DEFAULT_EXPIRES_MS = 5_000  # config.go:19
 
@@ -42,10 +51,11 @@ DEFAULT_EXPIRES_MS = 5_000  # config.go:19
 class PipelineConfig:
     patterns: tuple[RoutePattern, ...]
     max_files_per_trigger: int = 8
-    compact_every: int = 0  # full maintenance cadence in drain ROUNDS (0 = never)
-    #: cheap-tier cadence: maintain_minor() every N rounds — O(trailing
-    #: small deltas), so it can run far more often than compact_every
-    #: (the LSM minor/major compaction split)
+    #: full maintenance (maintain()) every N committed epochs (0 = never)
+    compact_every: int = 0
+    #: cheap-tier cadence: maintain_minor() every N committed epochs —
+    #: O(trailing small deltas), so it can run far more often than
+    #: compact_every (the LSM minor/major compaction split)
     minicompact_every: int = 0
     delay_ms: int = 1_000  # poll cadence between drain rounds (Delay)
 
@@ -54,9 +64,13 @@ class PipelineConfig:
 
 
 def load_config(path: str) -> PipelineConfig:
-    """Parse + default-fill + constraint-repair (config.go:100-112)."""
+    """:func:`parse_config` over a JSON config file."""
     with open(path) as f:
-        raw = json.load(f)
+        return parse_config(json.load(f))
+
+
+def parse_config(raw: dict) -> PipelineConfig:
+    """Parse + default-fill + constraint-repair (config.go:100-112)."""
     delay_ms = int(raw.get("delay_ms", 1_000))
     pats: list[RoutePattern] = []
     for p in raw.get("rt_patterns", []):
@@ -111,7 +125,7 @@ class ConfigWatcher:
 
 def run_with_reload(
     spark,
-    config_path: str,
+    config: str | PipelineConfig,
     oplog_dir: str,
     lake_dir: str,
     checkpoint_dir: str,
@@ -119,46 +133,60 @@ def run_with_reload(
     timeout_s: int = 3600,
     sighup: bool = False,
 ) -> int:
-    """Drive the pipeline in drain rounds, re-reading the config between
-    rounds when it changed (stop → recreate → rerun, cmd/yadex.go:59-77).
-    Returns the number of rounds run.  ``max_rounds=None`` runs forever
+    """Drive the pipeline in drain rounds.  ``config`` is a watched
+    config file, re-read between rounds when it changed (stop → recreate
+    → rerun, cmd/yadex.go:59-77), or a fixed :class:`PipelineConfig`
+    (no watcher, no SIGHUP).  After each round, the stream stopped,
+    maintenance runs at most once on the committed-epoch cadence (see
+    the module docstring), so compact/vacuum never stall an epoch (the
+    reference never blocks its apply path on maintenance).  Returns the
+    number of rounds run.  ``max_rounds=None`` runs forever
     (production); tests pass a bound.
     """
     from yadex_spark.streaming.pipeline import CdcPipeline
 
-    watcher = ConfigWatcher(config_path)
-    if sighup:
-        watcher.install_sighup()  # SIGHUP forces a re-read (watch.go:60-64)
-    cfg = load_config(config_path)
-    watcher.changed()  # prime the mtime
+    watcher = None
+    if isinstance(config, str):
+        watcher = ConfigWatcher(config)
+        if sighup:
+            watcher.install_sighup()  # SIGHUP forces a re-read (watch.go:60-64)
+        watcher.changed()  # prime the mtime
     pipe = None
-    rounds = 0
+    rounds, done = 0, _epochs_done(checkpoint_dir)
     while max_rounds is None or rounds < max_rounds:
-        if pipe is None or watcher.changed():
-            cfg = load_config(config_path)
+        if pipe is None or (watcher and watcher.changed()):
+            cfg = load_config(config) if watcher else config
             # recreate the config-dependent objects; same checkpoint +
             # scoped batch ids keep exactly-once across the swap
             pipe = CdcPipeline(
                 spark, oplog_dir, lake_dir, checkpoint_dir,
                 router=cfg.router(),
                 max_files_per_trigger=cfg.max_files_per_trigger,
-                compact_every=cfg.compact_every,
             )
         pipe.run_available_now(timeout_s=timeout_s)
         rounds += 1
-        if cfg.compact_every and rounds % cfg.compact_every == 0:
-            # out-of-band maintenance between drain rounds: the stream
-            # is stopped here, so compact/vacuum never stall an epoch
-            # (the reference never blocks its apply path on maintenance)
+        before, done = done, _epochs_done(checkpoint_dir)
+        if _crossed(before, done, cfg.compact_every):
             pipe.maintain()
-        elif cfg.minicompact_every and rounds % cfg.minicompact_every == 0:
-            # cheap tier on the rounds full maintenance doesn't run:
-            # fold the trailing small deltas so read amplification stays
-            # flat between (much rarer) full compactions
+        elif _crossed(before, done, cfg.minicompact_every):
             pipe.maintain_minor()
         if max_rounds is None or rounds < max_rounds:
             _sleep_between_rounds(cfg)
     return rounds
+
+
+def _epochs_done(checkpoint_dir: str) -> int:
+    """Epochs the checkpoint has committed: its max committed batch id
+    + 1.  Spark purges old commit files
+    (``spark.sql.streaming.minBatchesToRetain``), so counting them
+    stops near that setting; the max id survives the purge."""
+    committed = checkpoint_epochs(checkpoint_dir)[1]
+    return 0 if committed is None else committed + 1
+
+
+def _crossed(before: int, after: int, every: int) -> bool:
+    """The epoch count passed a multiple of ``every`` (0 = never)."""
+    return bool(every) and after // every > before // every
 
 
 def _sleep_between_rounds(cfg: PipelineConfig) -> None:

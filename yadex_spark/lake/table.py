@@ -1641,6 +1641,21 @@ def _publish_json(final: str, obj) -> bool:
         os.unlink(tmp)
 
 
+def _replace_file(final: str, write) -> None:
+    """Atomically replace ``final`` with what ``write(f)`` writes to a
+    fresh text file: a writer-unique tmp file beside it, then
+    ``os.replace`` (last writer wins).  The tmp name is unique per pid
+    AND thread, as in :func:`_publish_json`, and is dot-prefixed without
+    ``final``'s extension, so no reader sees it: Spark's file index
+    skips ``.`` names, and the lineage readers match ``*.json`` /
+    ``*.jsonl`` / ``epoch-*.json``."""
+    d, base = os.path.split(final)
+    tmp = os.path.join(d, f".{base}.tmp-{os.getpid()}-{threading.get_ident()}")
+    with open(tmp, "w") as f:
+        write(f)
+    os.replace(tmp, final)
+
+
 def live_snapshots(snaps: list[Snapshot]) -> list[Snapshot]:
     """The live part of a version-ordered snapshot list — the one chain
     rule of every read (:meth:`LakeTable._active_chain`) and of physical

@@ -1,4 +1,4 @@
-"""spark-submit entry point: run the CDC pipeline from a YAML-ish config.
+"""spark-submit entry point: run the CDC pipeline from flags or a config file.
 
     spark-submit --py-files yadex_spark.zip -m yadex_spark.main \
         --oplog /data/feed --lake /data/lake --checkpoint /data/ckpt \
@@ -6,17 +6,22 @@
 
 Config surface mirrors the reference's config/config.go:26-54 knobs
 that the engine actually consumes (Batch→max_files_per_trigger,
-Delay→trigger cadence, Expires→expiry_ms, include/exclude regexes);
+Delay→trigger cadence, Expires→expires_ms, include/exclude regexes);
 the vestigial MinDelay/Queue knobs are not ported (SURVEY.md §1.3).
+The pattern flags become the same config dict a ``--config`` file
+holds (:func:`flag_config`), with the same default-fill and repair
+rules, and both run the one drain loop, ``config.run_with_reload``:
+``--drain`` runs one round, otherwise rounds repeat every ``delay_ms``
+(a ``--config`` file is re-read when it changes), with maintenance
+every ``--compact-every`` committed epochs.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import os
 
-from yadex_spark.operators.route import RoutePattern, Router
+from yadex_spark.config import parse_config, run_with_reload
 from yadex_spark.session import get_spark
 from yadex_spark.streaming.pipeline import CdcPipeline
 
@@ -38,15 +43,18 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--expires-ms", type=int, default=None,
                    help="RT expiry window: drop events older than this vs the "
                         "per-table watermark (applies to RT patterns only — "
-                        "ST is lossless, msync/bulkwrite.go runBulkWriteRT)")
+                        "ST is lossless, msync/bulkwrite.go runBulkWriteRT; "
+                        "default 5000, raised above the 1000 ms round delay); "
+                        "with no --rt-pattern, every --pattern is RT")
     p.add_argument("--max-files-per-trigger", type=int, default=8)
     p.add_argument("--compact-every", type=int, default=16,
-                   help="maintenance cadence: drain ROUNDS under --config, "
-                        "committed EPOCHS on the direct path (compaction "
-                        "runs out-of-band, never on the epoch path; 0 = never)")
+                   help="full maintenance every N committed epochs, run "
+                        "between drain rounds, never on the epoch path "
+                        "(0 = never; a --config file sets its own)")
     p.add_argument("--cpus", type=int, default=None)
     p.add_argument("--drain", action="store_true",
-                   help="Trigger.AvailableNow: drain the feed and exit")
+                   help="run one drain round (Trigger.AvailableNow) and "
+                        "exit; without it, rounds repeat until stopped")
     p.add_argument("--maintain", action="store_true",
                    help="run out-of-band maintenance (compact + vacuum + "
                         "staging GC, tombstone watermark from the feed) "
@@ -74,68 +82,32 @@ def main(argv: list[str] | None = None) -> None:
             pipe.maintain_minor() if args.maintain_minor else pipe.maintain()
         ))
         return
-    if args.config:
-        from yadex_spark.config import run_with_reload
-
-        spark = get_spark("yadex-spark-cdc", cpus=args.cpus)
-        rounds = run_with_reload(
-            spark, args.config, args.oplog, args.lake, args.checkpoint,
-            max_rounds=1 if args.drain else None, sighup=True,
-        )
-        print(json.dumps({"rounds": rounds}))
-        return
     if args.expires_ms is not None and args.expires_ms <= 0:
         raise SystemExit("--expires-ms must be positive (config.go:100-112 validation)")
-    rt = tuple(
-        RoutePattern(rx, "RT", exclude=tuple(args.exclude), expires_ms=args.expires_ms)
-        for rx in args.rt_pattern
-    )
-    # --expires-ms with no --rt-pattern means "the whole pipeline is the
-    # lossy tier" (the reference's single-tier RT config)
-    default_tier = "RT" if (args.expires_ms is not None and not rt) else "ST"
-    st = tuple(
-        RoutePattern(rx, default_tier, exclude=tuple(args.exclude))
-        for rx in (args.pattern or [".*"])
-    )
-    patterns = rt + st
     spark = get_spark("yadex-spark-cdc", cpus=args.cpus)
-    pipe = CdcPipeline(
-        spark,
-        oplog_dir=args.oplog,
-        lake_dir=args.lake,
-        checkpoint_dir=args.checkpoint,
-        router=Router(patterns=patterns),
-        max_files_per_trigger=args.max_files_per_trigger,
-        expiry_ms=args.expires_ms,
-        compact_every=args.compact_every,
+    rounds = run_with_reload(
+        spark, args.config or parse_config(flag_config(args)),
+        args.oplog, args.lake, args.checkpoint,
+        max_rounds=1 if args.drain else None, timeout_s=24 * 3600, sighup=True,
     )
-    def _epochs_committed() -> int:
-        d = os.path.join(args.checkpoint, "commits")
-        if not os.path.isdir(d):
-            return 0
-        return sum(
-            1 for f in os.listdir(d)
-            if not f.startswith(".") and not f.endswith(".tmp")
-        )
+    print(json.dumps({"rounds": rounds}))
 
-    before = _epochs_committed()
-    pipe.run_available_now(timeout_s=24 * 3600)
-    if args.compact_every and (
-        _epochs_committed() // args.compact_every > before // args.compact_every
-    ):
-        # direct (single-drain) path: same cadence SEMANTICS as the
-        # --config loop — maintenance every compact_every epochs, not
-        # unconditionally per drain — measured against the checkpoint's
-        # cumulative epoch-commit count so repeated small drains don't
-        # each pay a full compact+vacuum.  Always post-drain with the
-        # stream stopped: compaction is never inline with ingest
-        pipe.maintain()
-    try:
-        lineage = pipe.lineage()
-        summary = lineage.groupBy("table").count().collect()
-        print(json.dumps({"tables": {r["table"]: r["count"] for r in summary}}))
-    except Exception:
-        print(json.dumps({"tables": {}}))
+
+def flag_config(args: argparse.Namespace) -> dict:
+    """The pattern flags as a config-file dict (``config.parse_config``
+    input).  ``--exclude`` applies to every pattern; ``--expires-ms``
+    sets every RT window, and with no ``--rt-pattern`` makes every
+    ``--pattern`` RT (the reference's single-tier RT config)."""
+    rt = [{"regex": rx, "exclude": args.exclude} for rx in args.rt_pattern]
+    st = [{"regex": rx, "exclude": args.exclude} for rx in args.pattern or [".*"]]
+    if args.expires_ms is not None:
+        if not rt:
+            rt, st = st, []
+        for p in rt:
+            p["expires_ms"] = args.expires_ms
+    return {"rt_patterns": rt, "patterns": st,
+            "max_files_per_trigger": args.max_files_per_trigger,
+            "compact_every": args.compact_every}
 
 
 if __name__ == "__main__":

@@ -65,7 +65,7 @@ def collapse(events: DataFrame, impl: str = "narrow", n_salt: int = 16,
     without the hint the join-back becomes a SortMergeJoin that shuffles
     AND sorts the full-width batch — measured 2.2× slower for the whole
     epoch write at 2M events.  The pipeline sets this from a key-count
-    estimate (see CdcPipeline.broadcast_keys_max); callers who can't
+    estimate (see pipeline.BROADCAST_KEYS_MAX); callers who can't
     bound the key count leave it False and get the shuffle join.
     """
     payload_cols = [c for c in events.columns if c not in ("table", "doc_id")]

@@ -179,29 +179,53 @@ def write_oplog_chunks(
     """Write the oplog as ``n_chunks`` sequential parquet drops so the
     Structured Streaming file source replays it as an ordered feed.
     Chunks are op_seq ranges — the analogue of change-stream arrival
-    order.  A chunk write makes one file per generator partition, all
-    with near-equal mtimes, so afterwards every file is re-timed in
-    op_seq order, whole seconds apart and ending before now (the file
-    source orders a feed by mtime, and coarse filesystems keep seconds
-    only): ``maxFilesPerTrigger`` then gives deterministic micro-batch
-    boundaries, and a later append still sorts after them.
+    order.  A chunk is one file per generator partition holding rows of
+    its range, all written by one Spark job (:func:`_write_drops`, which
+    re-times them in op_seq order): ``maxFilesPerTrigger`` then gives
+    deterministic micro-batch boundaries, no zero-row file becomes an
+    empty epoch, and a later append still sorts after them.
 
-    Each chunk write keeps FULL upstream parallelism (no coalesce —
-    coalesce would collapse the generating stage itself) and the op_seq
-    range predicate prunes below the generator's projection, so chunk i
-    only pays for its own rows.  Pass ``bounds=(min,max)`` when known to
-    skip the extra aggregation pass."""
+    The write keeps FULL upstream parallelism (no coalesce or
+    repartition — either would collapse or shuffle the generating
+    stage).  Pass ``bounds=(min,max)`` when known to skip the extra
+    aggregation pass."""
     if bounds is None:
         r = df.agg(F.min("op_seq"), F.max("op_seq")).first()
         bounds = (r[0], r[1])
     mn, mx = bounds
     span = (mx - mn + 1 + n_chunks - 1) // n_chunks
-    for i in range(n_chunks):
-        chunk = df.where(
-            (F.col("op_seq") >= mn + i * span) & (F.col("op_seq") < mn + (i + 1) * span)
+    _write_drops(
+        df.where((F.col("op_seq") >= mn) & (F.col("op_seq") < mn + n_chunks * span))
+        .withColumn("drop", F.floor((F.col("op_seq") - mn) / span)),
+        path,
+    )
+
+
+def _write_drops(df: DataFrame, path: str) -> int:
+    """Write ``df`` in ONE job partitioned by its ``drop`` column, move
+    the files flat into ``path`` (which they replace) in drop order, and
+    re-time them in op_seq order.  A task with no rows for a drop writes
+    no file there, so no zero-row file lands.  Returns the number of
+    drops written."""
+    import shutil
+
+    staged = f"{path}.drops-{os.getpid()}"
+    try:
+        df.write.mode("overwrite").partitionBy("drop").parquet(staged)
+        drops = sorted(
+            (int(d.split("=", 1)[1]), os.path.join(staged, d))
+            for d in os.listdir(staged) if d.startswith("drop=")
         )
-        chunk.write.mode("append" if i else "overwrite").parquet(path)
+        shutil.rmtree(path, ignore_errors=True)  # a feed is replaced, never appended to
+        os.makedirs(path)
+        for k, d in drops:
+            for name in os.listdir(d):
+                if name.endswith(".parquet"):
+                    os.rename(os.path.join(d, name), os.path.join(path, f"drop-{k:06d}-{name}"))
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
     _retime_in_seq_order(path)
+    return len(drops)
 
 
 def _retime_in_seq_order(path: str) -> None:
@@ -242,11 +266,10 @@ def write_oplog_bytes(
     Spark's own documented sizing rule for file-source byte budgets.
     Returns the number of files written.
 
-    All drops are written by ONE Spark job: each row is tagged with its
-    drop index and shuffled by it, so ``partitionBy`` writes exactly one
-    file per drop; the files then move flat into ``path`` and are
-    re-timed in op_seq order, as :func:`write_oplog_chunks` does.
-    ``df`` is cached for the call (two pilot passes plus the write)."""
+    All drops are written by ONE Spark job (:func:`_write_drops`): each
+    row is tagged with its drop index and shuffled by it, so
+    ``partitionBy`` writes exactly one file per drop.  ``df`` is cached
+    for the call (two pilot passes plus the write)."""
     import shutil
 
     with persisted(df):
@@ -279,23 +302,9 @@ def write_oplog_bytes(
             # behind for a feed reader to mistake for a drop
             shutil.rmtree(pilot_dir, ignore_errors=True)
         n_drops = (mx - mn) // rows + 1
-        staged = f"{path}.drops-{os.getpid()}"
-        try:
-            df.where(
-                (F.col("op_seq") >= mn) & (F.col("op_seq") < mn + n_drops * rows)
-            ).withColumn("drop", F.floor((F.col("op_seq") - mn) / rows)).repartition(
-                "drop"
-            ).write.mode("overwrite").partitionBy("drop").parquet(staged)
-            drops = sorted(
-                (int(d.split("=", 1)[1]), os.path.join(staged, d))
-                for d in os.listdir(staged) if d.startswith("drop=")
-            )
-            shutil.rmtree(path, ignore_errors=True)  # a feed is replaced, never appended to
-            os.makedirs(path)
-            for k, d in drops:
-                (name,) = [f for f in os.listdir(d) if f.endswith(".parquet")]
-                os.rename(os.path.join(d, name), os.path.join(path, f"drop-{k:06d}-{name}"))
-        finally:
-            shutil.rmtree(staged, ignore_errors=True)
-        _retime_in_seq_order(path)
-        return len(drops)
+        return _write_drops(
+            df.where((F.col("op_seq") >= mn) & (F.col("op_seq") < mn + n_drops * rows))
+            .withColumn("drop", F.floor((F.col("op_seq") - mn) / rows))
+            .repartition("drop"),
+            path,
+        )

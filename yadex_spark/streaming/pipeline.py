@@ -64,13 +64,22 @@ from types import SimpleNamespace
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from yadex_spark.lake.table import DELETED_COL, SEQ_COL, LakeTable, _ddl, prepare_delta
+from yadex_spark.lake.table import (DELETED_COL, SEQ_COL, LakeTable, _ddl, _replace_file,
+                                    prepare_delta)
 from yadex_spark.operators.collapse import ORDER_COL, collapse
 from yadex_spark.operators.route import RT, Router, namespace_filter
 from yadex_spark.schema import (ALL_OPS, OP_INSERT, OP_REPLACE, OP_UPDATE,
                                 LINEAGE_SCHEMA, oplog_read_schema, oplog_schema)
 from yadex_spark.streaming.ingest_core import (checkpoint_scope, drain_available_now,
                                               maintain_table)
+
+
+#: broadcast the collapse winner set when the epoch's estimated
+#: distinct-key count is at or below this (≈50-100 B/key in the
+#: broadcast hash relation → 2M keys ≈ 100-200 MB per executor); above
+#: it, the join-back falls back to a shuffle join — the one wide
+#: exchange the epoch budget allows
+BROADCAST_KEYS_MAX = 2_000_000
 
 
 def quarantine_reason():
@@ -274,19 +283,6 @@ class CdcPipeline:
     #: Expires only in runBulkWriteRT, msync/bulkwrite.go:60-63; a global
     #: filter would silently lose ST data)
     expiry_ms: int | None = None
-    #: maintenance cadence in DRAIN ROUNDS for run_with_reload (0 =
-    #: never).  Compaction no longer runs inline on the epoch path: an
-    #: inline O(table) rewrite stalls ingest 4-12× per maintenance epoch
-    #: (round-2 sustained-ingest evidence) and at 100 TB stalls it for
-    #: hours — the reference never blocks its apply path on maintenance.
-    #: Call maintain() out-of-band instead (or let run_with_reload).
-    compact_every: int = 0
-    #: broadcast the collapse winner set when the epoch's estimated
-    #: distinct-key count is at or below this (≈50-100 B/key in the
-    #: broadcast hash relation → 2M keys ≈ 100-200 MB per executor);
-    #: above it, the join-back falls back to a shuffle join — the one
-    #: wide exchange the epoch budget allows
-    broadcast_keys_max: int = 2_000_000
     evolved: bool = False
 
     def table(self, name: str) -> LakeTable:
@@ -387,7 +383,7 @@ class CdcPipeline:
         ep = self.rules.epoch(src, inv, routed, wms)
         rules, barriers = ep.rules, ep.barriers
         est_keys = sum(r["nkeys"] or 0 for r in inv if r["table"] in routed)
-        collapsed = collapse(ep.live, broadcast_winners=est_keys <= self.broadcast_keys_max)
+        collapsed = collapse(ep.live, broadcast_winners=est_keys <= BROADCAST_KEYS_MAX)
         stats_obs = Observation()
         stored = prepare_delta(collapsed.observe(stats_obs, *rules.stats), keep_table=True)
         # scope-namespaced AND attempt-unique: a fresh checkpoint over an
@@ -585,10 +581,7 @@ class CdcPipeline:
             if ts is not None and (t not in merged or ts > merged[t]):
                 merged[t] = ts
         if merged != stored:
-            tmp = f"{path}.tmp-{os.getpid()}"
-            with open(tmp, "w") as f:
-                json.dump({t: v.isoformat() for t, v in merged.items()}, f)
-            os.replace(tmp, path)
+            _replace_file(path, lambda f: json.dump({t: v.isoformat() for t, v in merged.items()}, f))
         return merged
 
     def _lineage_path(self, epoch_id: int) -> str:
@@ -611,11 +604,7 @@ class CdcPipeline:
             return
         path = self._lineage_path(epoch_id)
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = f"{path}.tmp-{os.getpid()}"
-        with open(tmp, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        os.replace(tmp, path)
+        _replace_file(path, lambda f: f.writelines(json.dumps(r) + "\n" for r in rows))
 
     def lineage(self) -> DataFrame:
         return read_lineage(self.spark, self.lake_dir)
@@ -668,16 +657,14 @@ class CdcPipeline:
         if not to_fold and len(folded_inputs) <= 1:
             return {"folded": 0, "kept": kept}
         inputs = folded_inputs + to_fold
-        out = os.path.join(d, f"compacted-{uuid.uuid4().hex[:12]}.jsonl")
-        tmp = f"{out}.tmp-{os.getpid()}"
-        with open(tmp, "w") as w:
+
+        def fold(w):
             for name in inputs:
                 with open(os.path.join(d, name)) as r:
-                    for line in r:
-                        line = line.strip()
-                        if line:
-                            w.write(line + "\n")
-        os.replace(tmp, out)  # atomic: rows exist before inputs vanish
+                    w.writelines(line.strip() + "\n" for line in r if line.strip())
+
+        # atomic: rows exist before inputs vanish
+        _replace_file(os.path.join(d, f"compacted-{uuid.uuid4().hex[:12]}.jsonl"), fold)
         for name in inputs:
             try:
                 os.unlink(os.path.join(d, name))
@@ -909,7 +896,7 @@ class CdcPipeline:
         compact_minor` per table + vacuum of the subsumed delta dirs) —
         the CHEAP maintenance tier: O(trailing small deltas) per table
         instead of :meth:`maintain`'s O(table) rewrite, so it can run at
-        a much higher cadence (e.g. every N drain rounds) to keep read
+        a much higher cadence (e.g. every N committed epochs) to keep read
         amplification flat between full compactions.  Tombstone GC and
         range-re-clustering of the base remain :meth:`maintain`'s job.
         Same lease + not-while-applying rules as :meth:`maintain`."""
